@@ -8,14 +8,14 @@ path here.  Near-dup is the driver-mandated extension.
 Scale design (the whole point of these implementations):
 - Exact dedup = hash → row_number per hash → keep first.  One shuffle on the
   hash; deterministic winner (unlike dropDuplicates).
-- MinHash+LSH avoids the O(n²) pair space: signatures are per-row built-in
-  expressions (no UDF), banding explodes each doc into `bands` rows, and
-  candidates come from an equi-join on (band, band_hash) — shuffle-join
-  friendly, no cartesian anywhere.  Verification re-joins shingle sets only
-  for candidate pairs.
-- SimHash: 64-bit signature via additive bit voting folded with built-in
-  higher-order functions; candidate pairs via 16-bit chunk banding
-  (Hamming-distance ≤ 3 ⇒ at least one of 4 chunks equal, pigeonhole).
+- MinHash+LSH avoids the O(n²) pair space: signatures and band hashes
+  come from one numpy pass per Arrow batch, banding explodes each doc into
+  `bands` rows, and candidates come from an equi-join on (band, band_hash)
+  — shuffle-join friendly, no cartesian anywhere.  Verification re-joins
+  shingle sets only for candidate pairs.
+- SimHash: md5-derived signature via additive bit voting in one numpy pass
+  per Arrow batch; candidate pairs via chunk banding (Hamming-distance
+  ≤ 3 ⇒ at least one of 4 chunks equal, pigeonhole).
 """
 
 from __future__ import annotations
@@ -24,7 +24,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.exprs import let1
-from ..functions.textstats import ngram_shingles, tokens
+from ..functions.textstats import ngram_shingles
 
 
 # ---------------------------------------------------------------- exact
@@ -95,26 +95,6 @@ def ngram_jaccard_pairs(
 
 # ---------------------------------------------------------------- minhash
 
-def minhash_signature(shingles: Column, k: int = 16) -> Column:
-    """k-wide MinHash signature (array<long>): for hash-family member i,
-    min over shingles of xxhash64(i, shingle).  Pure expression — one row
-    in, one row out, no shuffle.  The shingle array is let-bound so
-    CollapseProject cannot inline (= recompute) it per hash function;
-    seeds come from the sequence values themselves (hash of an int column
-    equals hash of the same int literal).
-
-    NB: every transform lambda takes exactly ONE parameter — F.transform
-    binds a second parameter to the array index, which silently overrides
-    closure/default-arg seeds."""
-    return let1(
-        shingles,
-        lambda sh: F.transform(
-            F.sequence(F.lit(0), F.lit(k - 1)),
-            lambda i: F.array_min(F.transform(sh, lambda s: F.xxhash64(i, s))),
-        ),
-    )
-
-
 def _banded_minhash_pandas(sh_df: DataFrame, k: int, bands: int) -> DataFrame:
     """(id, sh: array<string>) → (id, band, bh) with the whole
     shingle→signature→band-hash chain vectorized in numpy per Arrow batch.
@@ -124,10 +104,10 @@ def _banded_minhash_pandas(sh_df: DataFrame, k: int, bands: int) -> DataFrame:
     seed.  Signature minima via np.minimum.reduceat over the flattened
     shingle array (one pass per hash function keeps peak memory at one
     uint64 vector, not a k×total matrix).  Band hash = seeded
-    multiply-mix of the band's r minima.  Same banding statistics as the
-    expression path (any uniform family gives the (1/b)^(1/r) curve);
-    measured ~3× faster at sf0.1 because interpreted per-element HOF
-    evaluation becomes dense vector code."""
+    multiply-mix of the band's r minima (any uniform family gives the
+    (1/b)^(1/r) banding curve).  Measured ~3× faster at sf0.1 than the
+    xxhash64 higher-order-function expression it replaced, because
+    interpreted per-element HOF evaluation becomes dense vector code."""
     import numpy as np
     import pandas as pd
 
@@ -183,7 +163,6 @@ def minhash_lsh_pairs(
     k: int = 30,
     bands: int = 10,
     threshold: float = 0.5,
-    arrow: bool = True,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash banding + exact Jaccard verification.
 
@@ -198,16 +177,12 @@ def minhash_lsh_pairs(
     P≈3e-4, keeping the candidate set ~collisions-sized, not O(n²).
     The exact-Jaccard verification removes surviving false candidates.
 
-    ``arrow=True`` (default) computes shingle-hash/signature/band-hash in
-    one numpy pass per Arrow batch (_banded_minhash_pandas);
-    ``arrow=False`` keeps the pure-expression xxhash64 path.  Candidate
-    sets differ (different uniform hash families) but both sit on the
-    same banding curve; the exact-Jaccard verification step makes the
-    final pairs family-independent above the threshold.
+    Shingle-hash/signature/band-hash run in one numpy pass per Arrow
+    batch (_banded_minhash_pandas); the exact-Jaccard verification step
+    makes the final pairs hash-family-independent above the threshold.
     """
     from pyspark.storagelevel import StorageLevel
 
-    rows_per_band = k // bands
     sh = df.select(
         F.col(id_col).alias("id"), ngram_shingles(text_col, n).alias("sh")
     ).filter(F.size("sh") > 0)
@@ -226,35 +201,7 @@ def minhash_lsh_pairs(
     # x02b 1.55 → 1.34 s, pair set identical.
     sh = sh.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
 
-    if arrow:
-        banded = _banded_minhash_pandas(sh, k, bands)
-    else:
-        # signature → per-band hashes inside one let-bound expression: the
-        # signature is computed once per row even though each band
-        # references rows_per_band of its elements (CollapseProject would
-        # otherwise recompute it bands× per row).
-        def band_hashes(sig: Column) -> Column:
-            return F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            *[
-                                F.element_at(sig, b * rows_per_band + r + 1)
-                                for r in range(rows_per_band)
-                            ]
-                        ).alias("bh"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-
-        banded = sh.select(
-            "id",
-            F.explode(
-                let1(minhash_signature(F.col("sh"), k), band_hashes)
-            ).alias("e"),
-        ).select("id", "e.band", "e.bh")
+    banded = _banded_minhash_pandas(sh, k, bands)
 
     cand = (
         banded.alias("x")
@@ -284,46 +231,12 @@ def minhash_lsh_pairs(
 
 # ---------------------------------------------------------------- simhash
 
-def _simhash_chunks_expr(
-    text_col: str, n_chunks: int, chunk_bits: int
-) -> Column:
-    """SimHash signature as an array<long> of chunk values — pure
-    expression, JVM-side.  Chunk c's token hash is chunk_bits bits parsed
-    from md5 hex chars [c·w, c·w + w) (w = chunk_bits/4): md5 is the
-    cross-engine hash (identical in DuckDB), which is what makes the
-    signature oracle-reproducible.
-
-    Tokens are deduplicated (set semantics) and hashed ONCE into a
-    let-bound array per chunk; the per-bit vote then reads bits of the
-    precomputed hashes (CollapseProject would otherwise inline the
-    split+md5+conv chain per bit)."""
-    w = chunk_bits // 4
-    toks = (
-        f"array_distinct(filter(split(trim({text_col}), '\\\\s+'), t -> t != ''))"
-    )
-    chunks = ", ".join(
-        f"""
-        element_at(transform(array(
-            transform({toks},
-                      t -> cast(conv(substr(md5(t), {c * w + 1}, {w}), 16, 10)
-                                AS bigint))),
-          hs -> aggregate(sequence(0, {chunk_bits - 1}), 0L, (acc, b) -> acc + IF(
-                  aggregate(hs, 0L,
-                            (v, h) -> v + CASE WHEN shiftright(h, b) & 1 = 1
-                                          THEN 1L ELSE -1L END) > 0,
-                  shiftleft(1L, b), 0L))), 1)
-        """
-        for c in range(n_chunks)
-    )
-    return F.expr(f"array({chunks})")
-
-
 def _simhash_chunks_pandas(
     df: DataFrame, id_name: str, text_name: str, n_chunks: int, chunk_bits: int
 ) -> DataFrame:
     """(id, text) → (id, sig: array<long>) with tokenize/hash/bit-vote
-    vectorized in numpy per Arrow batch.  Same md5-derived hash family as
-    the expression path and the DuckDB oracle: chunk c's token hash is
+    vectorized in numpy per Arrow batch.  md5-derived hash family, the
+    same as the DuckDB oracle's: chunk c's token hash is
     md5 hex chars [c·w, c·w + w), bit b = (h >> b) & 1, signature bit set
     iff the ±1 token vote is > 0.  Docs with no tokens are dropped (they
     have no signature — matches the oracle's unnest semantics)."""
@@ -384,7 +297,6 @@ def simhash_chunks(
     text_col: str,
     n_chunks: int = 4,
     chunk_bits: int = 24,
-    arrow: bool = True,
 ) -> DataFrame:
     """(id, sig, chunk, cv) banding rows for SimHash LSH: one row per
     (doc, chunk index), cv = that chunk's signature value.
@@ -401,31 +313,15 @@ def simhash_chunks(
     if chunk_bits % 4 or chunk_bits > 48:
         raise ValueError("chunk_bits must be a multiple of 4, <= 48")
 
-    if arrow:
-        src = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
-        # the Python stage parallelizes per input partition — a single
-        # parquet file arrives as 1 partition and would run the batch
-        # kernel single-threaded; a round-robin repartition of the raw
-        # (id, text) rows is cheap relative to signature work
-        target = df.sparkSession.sparkContext.defaultParallelism
-        if src.rdd.getNumPartitions() < target:
-            src = src.repartition(target)
-        sig_df = _simhash_chunks_pandas(src, "id", "text", n_chunks, chunk_bits)
-    else:
-        nonempty = (
-            F.size(
-                F.filter(
-                    F.split(F.trim(F.col(text_col)), r"\s+"), lambda t: t != ""
-                )
-            )
-            > 0
-        )
-        sig_df = (
-            df.select(F.col(id_col).alias("id"), text_col)
-            .filter(nonempty)
-            .withColumn("sig", _simhash_chunks_expr(text_col, n_chunks, chunk_bits))
-            .select("id", "sig")
-        )
+    src = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
+    # the Python stage parallelizes per input partition — a single
+    # parquet file arrives as 1 partition and would run the batch
+    # kernel single-threaded; a round-robin repartition of the raw
+    # (id, text) rows is cheap relative to signature work
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if src.rdd.getNumPartitions() < target:
+        src = src.repartition(target)
+    sig_df = _simhash_chunks_pandas(src, "id", "text", n_chunks, chunk_bits)
     return sig_df.select(
         "id",
         "sig",
@@ -440,7 +336,6 @@ def simhash_pairs(
     max_hamming: int = 3,
     n_chunks: int | None = None,
     chunk_bits: int = 24,
-    arrow: bool = True,
 ) -> DataFrame:
     """Near-dup pairs with Hamming(simhash) <= max_hamming over an
     (n_chunks·chunk_bits)-bit md5-derived SimHash.
@@ -454,17 +349,15 @@ def simhash_pairs(
 
     The signature is md5-based and deterministic across engines, so the
     full pair set is reproducible in ANSI SQL (see the x02c oracle).
-
-    ``arrow=True`` (default) computes the signature in a vectorized Arrow
-    batch; ``arrow=False`` keeps the pure-expression path.  Banding and
-    verification are identical either way."""
+    The signature is computed in a vectorized Arrow batch
+    (_simhash_chunks_pandas)."""
     if n_chunks is None:
         n_chunks = max_hamming + 1
     if n_chunks < max_hamming + 1:
         raise ValueError("need n_chunks >= max_hamming+1 for pigeonhole recall")
-    chunks = simhash_chunks(df, id_col, text_col, n_chunks, chunk_bits, arrow)
+    chunks = simhash_chunks(df, id_col, text_col, n_chunks, chunk_bits)
     # both sides of the banding self-join read chunks — without this the
-    # signature stage (the mapInPandas kernel on the arrow path) executes
+    # signature stage (the mapInPandas kernel) executes
     # twice; the frame is narrow fixed-width rows (id, sig, chunk, cv),
     # so the default storage level is fine.  r12 measured at sf0.1:
     # 1.15 → 0.79 s, pair set identical.

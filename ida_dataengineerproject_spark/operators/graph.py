@@ -88,7 +88,8 @@ def count_triangles(
 ) -> DataFrame:
     """Exact triangle count of an undirected simple graph — one row,
     column ``n_triangles`` (plus ``n_nodes``/``n_edges`` when
-    ``with_graph_stats``).  No self-loops; with ``edges_unique`` each
+    ``with_graph_stats``).  Self-loop rows are ignored (a u→u row closes
+    no triangle and adds no edge or node); with ``edges_unique`` each
     undirected edge appears once (either direction), with
     ``edges_unique=False`` duplicate pairs are allowed and dedup is
     folded into the adjacency build (a ``collect_set`` in the shuffle
@@ -165,7 +166,12 @@ def count_triangles(
 
     spark = edges.sparkSession
     parallelism = spark.sparkContext.defaultParallelism
-    und = edges.select(F.col(src).alias("p1"), F.col(dst).alias("p2"))
+    # self-loops dropped once, here, so both build regimes agree: the
+    # huge regime would keep a u→u row as an oriented edge and count
+    # phantom triangles, the small regime's rank_up would drop it
+    und = edges.select(
+        F.col(src).alias("p1"), F.col(dst).alias("p2")
+    ).where(F.col("p1") != F.col("p2"))
     # two consumers in either regime — materialize once.  DISK_ONLY,
     # not the MEMORY_AND_DISK(deserialized) default: at x100 the edge
     # snapshot is 10⁸ rows, and deserialized block storage pins

@@ -46,52 +46,19 @@ table-format jar.
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .merge_cow import BUCKET_COL, _claim_commit, _release_commit, bucket_of
+from .merge_cow import (
+    BUCKET_COL,
+    _claim_commit,
+    _read_log,
+    _release_commit,
+    _write_log,
+    bucket_of,
+)
 
 COMMIT_COL = "__commit"
-
-
-def _log_dir(path: str) -> str:
-    return path.rstrip("/") + "/_log"
-
-
-def _read_log(spark: SparkSession, path: str) -> dict:
-    from ..sources.ingest_ledger import _hadoop_fs
-
-    fs, _ = _hadoop_fs(spark, path)
-    Path = spark._jvm.org.apache.hadoop.fs.Path
-    if not fs.exists(Path(_log_dir(path))):
-        raise FileNotFoundError(f"no MOR table under {path} (no _log dir)")
-    latest = -1
-    for st in fs.listStatus(Path(_log_dir(path))):
-        name = st.getPath().getName()
-        if name.startswith("v") and name.endswith(".json"):
-            latest = max(latest, int(name[1:-5]))
-    if latest < 0:
-        raise FileNotFoundError(f"no commits under {path}")
-    stream = fs.open(Path(f"{_log_dir(path)}/v{latest}.json"))
-    try:
-        raw = bytes(stream.readAllBytes()).decode()
-    finally:
-        stream.close()
-    return json.loads(raw)
-
-
-def _write_log(spark: SparkSession, path: str, log: dict) -> None:
-    from ..sources.ingest_ledger import _hadoop_fs
-
-    fs, _ = _hadoop_fs(spark, path)
-    Path = spark._jvm.org.apache.hadoop.fs.Path
-    out = fs.create(Path(f"{_log_dir(path)}/v{log['version']}.json"), False)
-    try:
-        out.write(bytearray(json.dumps(log).encode()))
-    finally:
-        out.close()
 
 
 def _written_buckets(spark: SparkSession, commit_dir: str) -> set[int]:

@@ -34,13 +34,10 @@ def _with_buckets(
     df: DataFrame,
     value_col: str,
     n_buckets: int,
-    bounds: list[float] | None = None,
 ) -> DataFrame:
     """Attach ``__bucket``: a monotone, codegen'd bucket id from
     approximate quantile boundaries (equal values always share a
-    bucket, so bucket order refines to total order).  ``bounds`` lets a
-    caller ranking several columns of one frame batch all boundary
-    probes into a single multi-column approxQuantile job.
+    bucket, so bucket order refines to total order).
 
     NULL ``value_col`` rows land in a dedicated bucket -1 that sorts
     before every boundary bucket — NULLS FIRST, matching Spark's default
@@ -48,8 +45,7 @@ def _with_buckets(
     the guard, ``v > lit(b)`` is NULL for NULL v, the bucket id is NULL,
     and the offsets join silently DROPPED those rows — ADVICE r5.)"""
     probs = [i / n_buckets for i in range(1, n_buckets)]
-    if bounds is None:
-        bounds = df.approxQuantile(value_col, probs, 0.001)
+    bounds = df.approxQuantile(value_col, probs, 0.001)
     # dedupe preserving order (constant columns yield repeated bounds)
     uniq: list[float] = []
     for b in bounds:
@@ -99,8 +95,8 @@ def _with_buckets_fused(
     Tradeoff vs quantile boundaries: equal-width bins balance work
     only for roughly-uniform value distributions — heavy value skew
     concentrates rows in few buckets and fattens the in-bucket window
-    task.  Callers with unknown/skewed distributions should keep the
-    eager quantile probe (``fused=False``); correctness is unaffected
+    task.  For unknown/skewed distributions ``global_rank``'s default
+    eager quantile probe balances better; correctness is unaffected
     either way (buckets only balance work).  Same contract as
     ``_with_buckets``: monotone buckets (equal values share one),
     NULLs in dedicated bucket -1.  A constant column (max == min)
@@ -131,7 +127,6 @@ def global_rank(
     tiebreak_cols: list[str],
     n_buckets: int = 32,
     rank_col: str = "rank",
-    bounds: list[float] | None = None,
     group_cols: list[str] | None = None,
     fused: bool = False,
 ) -> DataFrame:
@@ -150,12 +145,12 @@ def global_rank(
     grouped-aggregate cardinalities this serves.  ``fused=True`` embeds
     the boundary probe in the plan (_with_buckets_fused) instead of an
     eager driver-side approxQuantile job — right when the caller has no
-    shared multi-column probe to batch into."""
+    skewed value distribution to balance."""
     g = list(group_cols or [])
     with_bucket = (
         _with_buckets_fused(df, value_col, n_buckets)
-        if fused and bounds is None
-        else _with_buckets(df, value_col, n_buckets, bounds)
+        if fused
+        else _with_buckets(df, value_col, n_buckets)
     )
     counts = with_bucket.groupBy(*g, "__bucket").agg(
         F.count("*").alias("__n")
@@ -180,314 +175,6 @@ def global_rank(
     )
 
 
-def grouped_quantiles(
-    df: DataFrame,
-    value_col: str,
-    group_cols: list[str],
-    quantiles: dict[str, float],
-    n_buckets: int = 32,
-    bounds: list[float] | None = None,
-    fused: bool = False,
-) -> DataFrame:
-    """Exact continuous quantiles (``quantile_cont`` semantics — linear
-    interpolation at position q·(n−1)) per group, WITHOUT a per-group
-    sort buffer: one grouped two-level rank (bounded windows only), one
-    broadcast of the (groups × quantiles) target-rank frame, one
-    filtered interpolating aggregate.  Returns one row per group with a
-    column per ``quantiles`` key.  ``fused=True`` embeds the boundary
-    probe in the plan (_with_buckets_fused — equal-width min/max bins,
-    no eager approxQuantile job); right for roughly-uniform value
-    columns, see that docstring for the skew tradeoff.
-
-    NULL values are excluded, matching SQL ``median``/``percentile``.
-    The scale-safe replacement for ``percentile(col, array(...))``
-    GROUP BY — which buffers an entire group in one task's aggregation
-    buffer (the r5 scale cliff).
-
-    Unlike a full grouped rank, NO window ever touches the data: the
-    per-(group, bucket) COUNT aggregate (map-side combined, tiny) gives
-    both the bucket offsets and the group totals; each target rank is
-    located in its owning bucket relationally; only the rows of TARGET
-    buckets (≈ quantiles/n_buckets of the data) are re-read through a
-    broadcast join and ranked locally per bucket.  The full table is
-    scanned, never shuffled."""
-    g = list(group_cols)
-    src = df.select(*g, value_col).filter(F.col(value_col).isNotNull())
-    wb = (
-        _with_buckets_fused(src, value_col, n_buckets)
-        if fused and bounds is None
-        else _with_buckets(src, value_col, n_buckets, bounds)
-    )
-    counts = wb.groupBy(*g, "__bucket").agg(F.count("*").alias("__n"))
-    w_off = Window.partitionBy(*g).orderBy("__bucket").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offs = counts.select(
-        *g,
-        "__bucket",
-        "__n",
-        F.coalesce(F.sum("__n").over(w_off), F.lit(0)).alias("__off"),
-    )
-    totals = counts.groupBy(*g).agg(F.sum("__n").alias("__tot"))
-    targets = totals.select(
-        *g,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(name).alias("__qname"),
-                        (F.lit(q) * (F.col("__tot") - 1)).alias("__pos"),
-                    )
-                    for name, q in quantiles.items()
-                ]
-            )
-        ).alias("__t"),
-    ).select(
-        *g,
-        F.col("__t.__qname").alias("__qname"),
-        (F.floor("__t.__pos") + 1).alias("__lo"),
-        (F.col("__t.__pos") - F.floor("__t.__pos")).alias("__frac"),
-    )
-    # the bucket(s) owning ranks {lo, lo+1}: [__off+1, __off+__n] must
-    # intersect that pair — __off <= lo and __off + __n >= lo (equal
-    # values always share a bucket, so the straddle spans <= 2 buckets)
-    target_buckets = (
-        targets.join(offs, g)
-        .filter(
-            (F.col("__off") <= F.col("__lo"))
-            & (F.col("__off") + F.col("__n") >= F.col("__lo"))
-        )
-        .select(*g, "__bucket", "__qname", "__lo", "__frac", "__off")
-    )
-    v = F.col(value_col)
-    cand = wb.join(F.broadcast(target_buckets), g + ["__bucket"])
-    w_in = Window.partitionBy(*g, "__bucket", "__qname").orderBy(value_col)
-    per_q = (
-        cand.withColumn("__r", F.col("__off") + F.row_number().over(w_in))
-        .filter(F.col("__r").between(F.col("__lo"), F.col("__lo") + 1))
-        .groupBy(*g, "__qname")
-        .agg(
-            F.sum(
-                F.when(F.col("__r") == F.col("__lo"), v * (1 - F.col("__frac")))
-                .when(F.col("__r") == F.col("__lo") + 1, v * F.col("__frac"))
-            ).alias("__qv")
-        )
-    )
-    return (
-        per_q.groupBy(*g).pivot("__qname", list(quantiles)).agg(F.first("__qv"))
-    )
-
-
-def grouped_robust_stats(
-    df: DataFrame,
-    value_col: str,
-    group_cols: list[str],
-    trim_frac: float = 0.05,
-    quantiles: dict[str, float] | None = None,
-    n_buckets: int = 32,
-    bounds: list[float] | None = None,
-    sum_scale: int = 6,
-    trimmed_col: str = "trimmed_mean",
-) -> DataFrame:
-    """Two-sided trimmed mean AND exact continuous quantiles per group
-    from ONE histogram and ONE candidate pass — one row per group:
-    ``group_cols + [trimmed_col] + list(quantiles)``.
-
-    Trimmed mean: drop the k = floor(n·trim_frac) smallest and largest
-    values, average the rest.  The naive form ranks the whole group
-    (``row_number() OVER (PARTITION BY g ORDER BY v)``) just to discard
-    2k rows; at 100 TB that is a full-data shuffle plus a per-group sort
-    buffer.  Bucket-targeted instead: the per-(group, bucket) COUNT +
-    exact-decimal SUM aggregate (map-side combined, tiny) plus the
-    bounded offsets frame classify every bucket as fully kept (rank
-    interval inside (k, n−k] — its presummed decimal total counts
-    as-is), fully dropped, or boundary; only boundary buckets and
-    quantile-straddle buckets (≈(2+2q)/n_buckets of the data) are
-    re-read through one broadcast join and ranked in-bucket.  Quantile
-    values interpolate at position q·(n−1) (``quantile_cont``), exactly
-    as grouped_quantiles.  No full-data shuffle, no unbounded window —
-    and, versus composing grouped_trimmed_mean + grouped_quantiles, one
-    table scan and one Catalyst planning pass fewer (planning of the
-    n_buckets-term bucket expression is the dominant toy-scale cost).
-
-    Exactness: sums accumulate in DECIMAL(38, sum_scale) end to end
-    (order-independent), cast to double only for the final division —
-    bit-identical to the oracle's ``SUM(CAST(v AS DECIMAL(38,s)))
-    FILTER (...) / COUNT(...)``.  The trimmed count is n − 2k
-    analytically.  Ties need no tiebreak column: any choice of which
-    equal-valued rows fall at rank ≤ k removes the same multiset of
-    values, so the trimmed sum is invariant.  NULL values are excluded
-    (matching aggregate semantics).  ``bounds`` lets the caller reuse
-    one approxQuantile boundary probe across primitives on the same
-    column (boundaries only balance work, never affect the result)."""
-    if not 0 <= trim_frac < 0.5:
-        # the divisor n - 2k is positive iff trim_frac < 0.5 (k = floor
-        # (n·tf) ≤ n·tf < n/2); at 0.5+ the trimmed mean is undefined
-        # and would silently yield NULL/garbage (ADVICE r6)
-        raise ValueError(
-            f"trim_frac must be in [0, 0.5), got {trim_frac}"
-        )
-    g = list(group_cols)
-    q = dict(quantiles or {})
-    dec = f"decimal(38,{sum_scale})"
-    v = F.col(value_col)
-    src = df.select(*g, value_col).filter(v.isNotNull())
-    wb = _with_buckets(src, value_col, n_buckets, bounds)
-    hist = wb.groupBy(*g, "__bucket").agg(
-        F.count("*").alias("__n"), F.sum(v.cast(dec)).alias("__s")
-    )
-    w_off = Window.partitionBy(*g).orderBy("__bucket").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offs = hist.select(
-        *g,
-        "__bucket",
-        "__n",
-        "__s",
-        F.coalesce(F.sum("__n").over(w_off), F.lit(0)).alias("__off"),
-    )
-    params = hist.groupBy(*g).agg(F.sum("__n").alias("__tot")).select(
-        *g,
-        "__tot",
-        F.floor(F.col("__tot") * trim_frac).alias("__k"),
-    )
-    tagged = offs.join(F.broadcast(params), g)
-    kept_lo, kept_hi = F.col("__k"), F.col("__tot") - F.col("__k")
-    # bucket rank interval is (__off, __off + __n]
-    is_full = (F.col("__off") >= kept_lo) & (
-        F.col("__off") + F.col("__n") <= kept_hi
-    )
-    is_dropped = (F.col("__off") + F.col("__n") <= kept_lo) | (
-        F.col("__off") >= kept_hi
-    )
-    zero = F.lit(0).cast(dec)
-    fulls = (
-        tagged.filter(is_full)
-        .groupBy(*g)
-        .agg(F.sum("__s").alias("__full"))
-    )
-    # candidate buckets needing in-bucket ranks, one row per purpose:
-    # trim-boundary rows (__qname '__trim') and quantile-straddle rows
-    # (one per quantile name; a bucket serving several purposes appears
-    # several times — the rank window partitions by __qname so each
-    # copy is ranked independently)
-    trim_cand = tagged.filter(~is_full & ~is_dropped).select(
-        *g,
-        "__bucket",
-        "__off",
-        "__k",
-        "__tot",
-        F.lit("__trim").alias("__qname"),
-        F.lit(None).cast("long").alias("__lo"),
-        F.lit(None).cast("double").alias("__frac"),
-    )
-    cand = trim_cand
-    if q:
-        targets = params.select(
-            *g,
-            "__k",
-            "__tot",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(name).alias("__qname"),
-                            (F.lit(p) * (F.col("__tot") - 1)).alias("__pos"),
-                        )
-                        for name, p in q.items()
-                    ]
-                )
-            ).alias("__t"),
-        ).select(
-            *g,
-            "__k",
-            "__tot",
-            F.col("__t.__qname").alias("__qname"),
-            (F.floor("__t.__pos") + 1).alias("__lo"),
-            (F.col("__t.__pos") - F.floor("__t.__pos")).alias("__frac"),
-        )
-        q_cand = (
-            targets.join(offs.select(*g, "__bucket", "__n", "__off"), g)
-            .filter(
-                (F.col("__off") <= F.col("__lo"))
-                & (F.col("__off") + F.col("__n") >= F.col("__lo"))
-            )
-            .select(
-                *g, "__bucket", "__off", "__k", "__tot",
-                "__qname", "__lo", "__frac",
-            )
-        )
-        cand = trim_cand.unionByName(q_cand)
-    w_in = Window.partitionBy(*g, "__bucket", "__qname").orderBy(value_col)
-    ranked = wb.join(F.broadcast(cand), g + ["__bucket"]).withColumn(
-        "__r", F.col("__off") + F.row_number().over(w_in)
-    )
-    agg_cols = [
-        F.sum(
-            F.when(
-                (F.col("__qname") == "__trim")
-                & (F.col("__r") > F.col("__k"))
-                & (F.col("__r") <= F.col("__tot") - F.col("__k")),
-                v.cast(dec),
-            )
-        ).alias("__part")
-    ] + [
-        F.sum(
-            F.when(
-                (F.col("__qname") == name)
-                & (F.col("__r") == F.col("__lo")),
-                v * (1 - F.col("__frac")),
-            ).when(
-                (F.col("__qname") == name)
-                & (F.col("__r") == F.col("__lo") + 1),
-                v * F.col("__frac"),
-            )
-        ).alias(name)
-        for name in q
-    ]
-    row_stats = ranked.groupBy(*g).agg(*agg_cols)
-    return (
-        params.join(fulls, g, "left")
-        .join(row_stats, g, "left")
-        .select(
-            *g,
-            (
-                (
-                    F.coalesce(F.col("__full"), zero)
-                    + F.coalesce(F.col("__part"), zero)
-                ).cast("double")
-                / (F.col("__tot") - 2 * F.col("__k"))
-            ).alias(trimmed_col),
-            *[F.col(name) for name in q],
-        )
-    )
-
-
-def grouped_trimmed_mean(
-    df: DataFrame,
-    value_col: str,
-    group_cols: list[str],
-    trim_frac: float = 0.05,
-    n_buckets: int = 32,
-    bounds: list[float] | None = None,
-    sum_scale: int = 6,
-    out_col: str = "trimmed_mean",
-) -> DataFrame:
-    """Two-sided trimmed mean per group; grouped_robust_stats with no
-    quantile arm — see that docstring for the bucket-targeted design."""
-    return grouped_robust_stats(
-        df,
-        value_col,
-        group_cols,
-        trim_frac,
-        None,
-        n_buckets,
-        bounds,
-        sum_scale,
-        out_col,
-    )
-
-
 def weighted_quantile_crossing(
     df: DataFrame,
     value_col: str,
@@ -497,21 +184,20 @@ def weighted_quantile_crossing(
     n_buckets: int = 32,
     out_col: str = "weighted_median",
     total_col: str = "w_total",
-    fused: bool = True,
 ) -> DataFrame:
     """One-row frame (out_col, total_col): the smallest value whose
     cumulative weight in value order reaches q_num/q_den of the total —
     the weighted median for the default 1/2, tested as
     ``q_den·cum ≥ q_num·W`` in exact integer arithmetic.
 
-    Bucket-targeted (the grouped_quantiles shape): per-bucket weight
+    Bucket-targeted: per-bucket weight
     totals (map-side-combined aggregate, tiny) locate the single
     crossing bucket via the bounded offsets frame; only THAT bucket's
     rows (≈1/n_buckets of the data) take the in-bucket cumulative
     window.  No full-data shuffle, no prefix sum over every row —
     against ``SUM(w) OVER (ORDER BY v)``'s single-partition sort.
 
-    ``fused`` (default) embeds the boundary probe in the SAME plan
+    The boundary probe is embedded in the SAME plan
     (_with_buckets_fused) — no eager driver-side approxQuantile job;
     the r8 profile showed that eager job was 0.58 s of xq8's 1.00 s
     wall at sf0.1.
@@ -522,11 +208,7 @@ def weighted_quantile_crossing(
     src = df.select(value_col, weight_col).filter(
         F.col(value_col).isNotNull()
     )
-    wb = (
-        _with_buckets_fused(src, value_col, n_buckets)
-        if fused
-        else _with_buckets(src, value_col, n_buckets)
-    )
+    wb = _with_buckets_fused(src, value_col, n_buckets)
     bt = wb.groupBy("__bucket").agg(F.sum(weight_col).alias("__w"))
     w_off = Window.orderBy("__bucket").rowsBetween(
         Window.unboundedPreceding, -1
@@ -565,45 +247,6 @@ def weighted_quantile_crossing(
     )
 
 
-def global_prefix_sum(
-    df: DataFrame,
-    value_col: str,
-    weight_col: str,
-    tiebreak_cols: list[str] | None = None,
-    n_buckets: int = 32,
-    out_col: str = "cum_weight",
-) -> DataFrame:
-    """Attach the inclusive running sum of ``weight_col`` in global
-    (value_col, *tiebreak_cols) order — same bucket decomposition as
-    global_rank with per-bucket WEIGHT totals as the carry.  Exact for
-    integer weights (long accumulation in both levels).  This is the
-    primitive behind weighted quantiles/medians at scale: the naive
-    ``SUM(w) OVER (ORDER BY v)`` is a single-partition sort."""
-    with_bucket = _with_buckets(df, value_col, n_buckets)
-    totals = with_bucket.groupBy("__bucket").agg(
-        F.sum(weight_col).alias("__w")
-    )
-    w_off = Window.orderBy("__bucket").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = totals.select(
-        "__bucket",
-        F.coalesce(F.sum("__w").over(w_off), F.lit(0)).alias("__offset"),
-    )
-    w_in = (
-        Window.partitionBy("__bucket")
-        .orderBy(value_col, *(tiebreak_cols or []))
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return (
-        with_bucket.join(F.broadcast(offsets), "__bucket")
-        .withColumn(
-            out_col, F.col("__offset") + F.sum(weight_col).over(w_in)
-        )
-        .drop("__bucket", "__offset")
-    )
-
-
 def global_prefix_max(
     df: DataFrame,
     order_col: str,
@@ -616,7 +259,7 @@ def global_prefix_max(
     BEFORE each row in global (order_col, *tiebreak_cols) order — NULL
     for the first row.  The naive ``MAX(v) OVER (ORDER BY o ROWS
     UNBOUNDED PRECEDING AND 1 PRECEDING)`` is a single-partition sort;
-    this is the same bucket decomposition as global_prefix_sum with a
+    this is the same bucket decomposition as global_rank with a
     MAX carry: per-bucket maxima, an exclusive running max over the
     bounded bucket frame, and an intra-bucket exclusive-max window
     partitioned by bucket.
@@ -660,9 +303,12 @@ def grouped_quantiles_band(
     quantiles: dict[str, float],
     accuracy: int = 2000,
 ) -> DataFrame:
-    """Exact continuous quantiles per group (``quantile_cont`` semantics,
-    identical to :func:`grouped_quantiles`) in TWO table scans, zero
-    windows, zero joins on the data — the sketch-steered band rewrite.
+    """Exact continuous quantiles per group (``quantile_cont`` semantics:
+    linear interpolation at position q·(n−1), NULL values excluded —
+    matching SQL ``percentile``) in TWO table scans, zero windows, zero
+    joins on the data — the sketch-steered band rewrite.  The
+    scale-safe replacement for ``percentile(col, array(...))`` GROUP BY,
+    which buffers an entire group in one task's aggregation buffer.
 
     Pass 1 (one scan): per group, a Greenwald-Khanna sketch
     (``percentile_approx``, rank error ≤ n/accuracy guaranteed) locates
@@ -689,9 +335,7 @@ def grouped_quantiles_band(
     Per-group state is ≤ max(10n/accuracy + tie mass, 2·accuracy)
     values — tunable; heavy ties at a band edge widen the collect by
     the tie mass (equal values are interchangeable at a rank, but all
-    must be carried to index through them).  The replacement for the
-    4-scan bucketed form when the caller wants plain quantiles; keep
-    :func:`grouped_quantiles` for shared-bounds batch probes.
+    must be carried to index through them).
 
     ALL band probes ride ONE sketch per group — ``percentile_approx``
     with an array percentage (measured at the x10 replica: 4 separate

@@ -10,17 +10,16 @@ Two paths, same contract:
   At 100 TB the bucket join replaces the corpus-wide scan per query.
 
 The hyperplane matrix is generated from a fixed seed (public numpy RNG) on
-the driver and shipped as literal arrays — deterministic across runs,
-no state to persist.
+the driver and shipped in the Arrow batch kernel's closure — deterministic
+across runs, no state to persist.
 """
 
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.exprs import let1
 from ..functions.vectors import as_double_array, cosine
 
 
@@ -60,45 +59,6 @@ def cosine_topk_bruteforce(
 def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     rng = np.random.default_rng(seed)
     return rng.standard_normal((n_planes, dim)).tolist()
-
-
-def _all_buckets(vec: Column, planes: list[list[float]], n_tables: int, m: int) -> Column:
-    """array<long> of one bucket id per table: project `vec` on the whole
-    plane matrix in ONE transform (sign bits), then pack each table's m
-    bits.  The bit array is let-bound (functions/exprs.let1) so the
-    n_tables×m element references don't make CollapseProject recompute the
-    full projection per reference — that inlining measured 10× slower."""
-    matrix = F.array(
-        *[F.array(*[F.lit(float(w)) for w in plane]) for plane in planes]
-    )
-    bits = F.transform(
-        matrix,
-        lambda plane: F.when(
-            F.aggregate(
-                F.zip_with(vec, plane, lambda x, w: x * w),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-            > 0,
-            F.lit(1).cast("long"),
-        ).otherwise(F.lit(0).cast("long")),
-    )
-
-    def pack(b: Column) -> Column:
-        return F.array(
-            *[
-                sum(
-                    (
-                        F.shiftleft(F.element_at(b, t * m + j + 1), j)
-                        for j in range(1, m)
-                    ),
-                    F.element_at(b, t * m + 1),
-                )
-                for t in range(n_tables)
-            ]
-        )
-
-    return let1(bits, pack)
 
 
 _IVF_CENTROID_CACHE: dict[tuple, list[list[float]]] = {}
@@ -165,7 +125,6 @@ def cosine_topk_ivf(
     k: int = 10,
     n_centroids: int = 16,
     n_probe: int = 4,
-    arrow: bool = True,
     centroids: list[list[float]] | None = None,
     cache_key: tuple | None = None,
     n_assign: int = 1,
@@ -178,11 +137,10 @@ def cosine_topk_ivf(
     path.
 
     Every corpus vector is assigned to its ``n_assign`` nearest centroid
-    lists (one let-bound argmin over the broadcast centroid matrix, or
-    one numpy matmul per Arrow batch); queries probe their ``n_probe``
-    nearest lists.  The candidate join is an equi-join on centroid id —
-    at scale each query scores |corpus|·n_assign·n_probe/n_centroids
-    vectors instead of |corpus|.
+    lists (one numpy cosine matmul per Arrow batch); queries probe their
+    ``n_probe`` nearest lists.  The candidate join is an equi-join on
+    centroid id — at scale each query scores
+    |corpus|·n_assign·n_probe/n_centroids vectors instead of |corpus|.
 
     ``n_assign > 1`` is IVF *multiple assignment* (the standard recall
     refinement for corpora whose neighbors straddle Voronoi boundaries —
@@ -206,98 +164,45 @@ def cosine_topk_ivf(
     cents = centroids if centroids is not None else fit_ivf_quantizer(
         c, n_centroids=n_centroids, cache_key=cache_key
     )
-    cent_matrix = F.array(
-        *[F.array(*[F.lit(float(x)) for x in cent]) for cent in cents]
-    )
+    cents_np = np.asarray(cents, dtype=np.float64)
+    cn = cents_np / np.linalg.norm(cents_np, axis=1, keepdims=True)
 
-    def dists(vec: Column) -> Column:
-        # negative cosine to each centroid (array<double>), one pass
-        return F.transform(
-            cent_matrix, lambda cent: -cosine(vec, cent)
+    def probes_pandas(df: DataFrame, id_name: str, vec_name: str, n: int):
+        """(id, vec) → (id, vec, cent_idx)×n via one cosine-matrix matmul
+        per Arrow batch; a stable argsort breaks distance ties by the
+        lower centroid index."""
+        import pandas as pd
+
+        def gen(batches):
+            for pdf in batches:
+                if pdf.empty:
+                    continue
+                vecs = np.stack(pdf[vec_name].to_numpy())
+                vn = vecs / np.linalg.norm(vecs, axis=1, keepdims=True)
+                dists = -(vn @ cn.T)  # N × n_centroids
+                order = np.argsort(dists, axis=1, kind="stable")[:, :n]
+                yield pd.DataFrame(
+                    {
+                        id_name: np.repeat(pdf[id_name].to_numpy(), n),
+                        vec_name: np.repeat(pdf[vec_name].to_numpy(), n),
+                        "cent_idx": order.reshape(-1).astype(np.int32),
+                    }
+                )
+
+        return df.mapInPandas(
+            gen,
+            schema=f"{id_name} long, {vec_name} array<double>, cent_idx int",
         )
 
-    def argmin_n(vec: Column, n: int) -> Column:
-        """ids of the n nearest centroids, via array_sort over (dist, idx)
-        structs — pure expression, no shuffle."""
-        return let1(
-            dists(vec),
-            lambda ds: F.slice(
-                F.transform(
-                    F.array_sort(
-                        F.zip_with(
-                            ds,
-                            F.array(*[F.lit(i) for i in range(len(cents))]),
-                            lambda d, i: F.struct(d.alias("d"), i.alias("i")),
-                        )
-                    ),
-                    lambda s: s["i"],
-                ),
-                1,
-                n,
-            ),
-        )
-
-    if arrow:
-        cents_np = np.asarray(cents, dtype=np.float64)
-
-        def probes_pandas(df: DataFrame, id_name: str, vec_name: str, n: int):
-            """(id, vec) → (id, vec, cent_idx)×n via one cosine-matrix
-            matmul per Arrow batch; stable argsort reproduces the
-            expression path's (distance, index) tie order."""
-            import pandas as pd
-
-            cn = cents_np / np.linalg.norm(cents_np, axis=1, keepdims=True)
-
-            def gen(batches):
-                for pdf in batches:
-                    if pdf.empty:
-                        continue
-                    vecs = np.stack(pdf[vec_name].to_numpy())
-                    vn = vecs / np.linalg.norm(vecs, axis=1, keepdims=True)
-                    dists = -(vn @ cn.T)  # N × n_centroids
-                    order = np.argsort(dists, axis=1, kind="stable")[:, :n]
-                    yield pd.DataFrame(
-                        {
-                            id_name: np.repeat(pdf[id_name].to_numpy(), n),
-                            vec_name: np.repeat(
-                                pdf[vec_name].to_numpy(), n
-                            ),
-                            "cent_idx": order.reshape(-1).astype(np.int32),
-                        }
-                    )
-
-            return df.mapInPandas(
-                gen,
-                schema=f"{id_name} long, {vec_name} array<double>, cent_idx int",
-            )
-
-        c_assigned = probes_pandas(c, "neighbor_id", "cv", n_assign)
-        q_probes = probes_pandas(q, "query_id", "qv", n_probe)
-    else:
-        if n_assign == 1:
-            c_assigned = c.withColumn(
-                "cent_idx", F.element_at(argmin_n(F.col("cv"), 1), 1)
-            )
-        else:
-            c_assigned = c.select(
-                "neighbor_id",
-                "cv",
-                F.explode(argmin_n(F.col("cv"), n_assign)).alias(
-                    "cent_idx"
-                ),
-            )
-        q_probes = q.select(
-            "query_id",
-            "qv",
-            F.explode(argmin_n(F.col("qv"), n_probe)).alias("cent_idx"),
-        )
+    c_assigned = probes_pandas(c, "neighbor_id", "cv", n_assign)
+    q_probes = probes_pandas(q, "query_id", "qv", n_probe)
 
     # The inverted-list assignment is the INDEX BUILD of IVF — at scale a
     # persisted artifact built once per corpus, not recomputed per query.
     # Under a cache_key we persist it in-process (MEMORY_AND_DISK), the
     # local equivalent of reading the prebuilt index.
     if cache_key is not None:
-        idx_key = ("ivf_index", cache_key, n_centroids, arrow, n_assign)
+        idx_key = ("ivf_index", cache_key, n_centroids, n_assign)
         cached = _IVF_INDEX_CACHE.get(idx_key)
         if cached is not None and cached.sparkSession is c.sparkSession:
             # re-persist on access: a global spark.catalog.clearCache()
@@ -360,8 +265,7 @@ def _bucket_rows_pandas(
     — exactly the shape where the interpreted higher-order-function
     expression path loses 10-50× to a vectorized kernel (measured: the
     expression form made LSH *slower* than brute force at sf0.1).  Bit
-    packing matches the expression version in _all_buckets: table t's
-    bucket = Σ_j bit[t·m+j]·2^j."""
+    packing: table t's bucket = Σ_j bit[t·m+j]·2^j."""
     import pandas as pd
 
     proj = np.asarray(planes, dtype=np.float64).T  # dim × (n_tables·m)
@@ -396,7 +300,6 @@ def cosine_topk_lsh(
     n_tables: int = 16,
     n_planes: int = 4,
     dim: int = 64,
-    arrow: bool = True,
 ) -> DataFrame:
     """Approximate top-k via multi-table random-hyperplane LSH.
 
@@ -410,12 +313,10 @@ def cosine_topk_lsh(
     corpus-side explode is L× rows of (id, bucket) pairs only; vectors are
     re-joined for scoring candidates alone.
 
-    ``arrow=True`` (default) computes the signed projections with a numpy
-    matmul inside mapInPandas (one Arrow batch per partition) — the
-    vectorized escape hatch for dense linear algebra that higher-order
-    functions evaluate interpreted.  ``arrow=False`` keeps the pure
-    Catalyst-expression path (bit-identical packing, same buckets up to
-    float summation order)."""
+    The signed projections are a numpy matmul inside mapInPandas
+    (_bucket_rows_pandas, one Arrow batch at a time) — the vectorized
+    escape hatch for dense linear algebra that higher-order functions
+    evaluate interpreted."""
 
     planes = _hyperplanes(dim, n_tables * n_planes, seed=1042)
 
@@ -426,34 +327,8 @@ def cosine_topk_lsh(
         F.col(id_col).alias("query_id"), as_double_array(vec_col).alias("qv")
     )
 
-    if arrow:
-        c_b = _bucket_rows_pandas(
-            c.select(F.col("neighbor_id"), F.col("cv")),
-            "neighbor_id",
-            "cv",
-            planes,
-            n_tables,
-            n_planes,
-        )
-        q_b = _bucket_rows_pandas(
-            q.select(F.col("query_id"), F.col("qv")),
-            "query_id",
-            "qv",
-            planes,
-            n_tables,
-            n_planes,
-        )
-    else:
-
-        def buckets(vec: Column) -> Column:
-            return _all_buckets(vec, planes, n_tables, n_planes)
-
-        c_b = c.select(
-            "neighbor_id", F.posexplode(buckets(F.col("cv"))).alias("tbl", "bucket")
-        )
-        q_b = q.select(
-            "query_id", F.posexplode(buckets(F.col("qv"))).alias("tbl", "bucket")
-        )
+    c_b = _bucket_rows_pandas(c, "neighbor_id", "cv", planes, n_tables, n_planes)
+    q_b = _bucket_rows_pandas(q, "query_id", "qv", planes, n_tables, n_planes)
 
     cand = (
         c_b.join(q_b, ["tbl", "bucket"])
@@ -485,7 +360,6 @@ def embedding_neardup_pairs_lsh(
     n_tables: int = 16,
     n_planes: int = 4,
     dim: int = 64,
-    arrow: bool = True,
 ) -> DataFrame:
     """Embedding near-duplicate pairs at scale (the LSH twin of the
     bounded O(n²) baseline in queries/vector_ops.q_x03c).
@@ -503,15 +377,7 @@ def embedding_neardup_pairs_lsh(
     c = corpus.select(
         F.col(id_col).alias("vec_id"), as_double_array(vec_col).alias("v")
     )
-    if arrow:
-        b = _bucket_rows_pandas(c, "vec_id", "v", planes, n_tables, n_planes)
-    else:
-        b = c.select(
-            "vec_id",
-            F.posexplode(
-                _all_buckets(F.col("v"), planes, n_tables, n_planes)
-            ).alias("tbl", "bucket"),
-        )
+    b = _bucket_rows_pandas(c, "vec_id", "v", planes, n_tables, n_planes)
     left = b.select(F.col("vec_id").alias("id_a"), "tbl", "bucket")
     right = b.select(F.col("vec_id").alias("id_b"), "tbl", "bucket")
     cand = (

@@ -180,7 +180,10 @@ def mg_candidates(
     each key into a Python object before hashing it; the dict merge
     below touches only the DISTINCT keys of each batch (≪ rows), and
     the decrement rule is byte-identical to the r6 form, so the
-    superset guarantee and its tests are unchanged."""
+    superset guarantee and its tests are unchanged.  The kernel sees
+    only ``key_col`` (selected by name ahead of the Arrow stage), and
+    NULL keys are dropped before tallying, so a NULL never takes a
+    counter slot or surfaces as a candidate."""
 
     def gen(batches):
         import pyarrow as pa
@@ -190,7 +193,7 @@ def mg_candidates(
         ktype = None
         for batch in batches:
             ktype = batch.schema.field(0).type
-            vc = pc.value_counts(batch.column(0))
+            vc = pc.value_counts(pc.drop_null(batch.column(0)))
             for k, c in zip(
                 vc.field("values").to_pylist(), vc.field("counts").to_pylist()
             ):
@@ -212,7 +215,7 @@ def mg_candidates(
     # would silently stringify e.g. bigint keys, and heavy_hitters' join
     # then compares mismatched types via implicit cast (ADVICE r6)
     out_schema = StructType([keys.schema[key_col]])
-    return keys.mapInArrow(gen, schema=out_schema).distinct()
+    return keys.select(key_col).mapInArrow(gen, schema=out_schema).distinct()
 
 
 def heavy_hitters(

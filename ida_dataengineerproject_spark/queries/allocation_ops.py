@@ -414,8 +414,10 @@ def q_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     sides.  Scale shape: one map-side-combined brand aggregate (part
     dim broadcast); the ordered cumulative window runs over the
     dimension-bounded brand frame (25 rows — the bounded-window pin
-    every xq13-family query documents).  For a high-cardinality
-    grouping the window swaps for global_prefix_sum."""
+    every xq13-family query documents).  A high-cardinality grouping
+    would swap the window for the bucketed two-level carry of
+    operators/ranking.global_rank (per-bucket totals, bounded offsets
+    window, in-bucket window)."""
     li = table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_extendedprice"
     )

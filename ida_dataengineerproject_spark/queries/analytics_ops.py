@@ -413,7 +413,7 @@ def q_xq8(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Uses operators/ranking.weighted_quantile_crossing (round 6) — the
     naive form is SUM(w) OVER (ORDER BY v), a single-partition sort;
-    the r5 global_prefix_sum rewrite removed the cliff but still
+    the r5 bucketed prefix-sum rewrite removed the cliff but still
     windowed EVERY distinct price; the bucket-targeted form locates the
     crossing bucket from per-bucket weight totals and windows only its
     ~1/64 of rows (no pre-aggregation needed — the crossing MIN is

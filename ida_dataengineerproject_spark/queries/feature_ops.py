@@ -8,7 +8,8 @@ oracle discipline:
   avoids target leakage; the smoothing prior m tames rare categories).
 - xq30_winsorized_mean — per-group winsorized mean (clamp to [p05, p95]
   instead of dropping — the robust-stats sibling of the trimmed mean in
-  operators/ranking.grouped_robust_stats).
+  queries/analytics_ops.q_robust_group_stats), bounds from
+  operators/ranking.grouped_quantiles_band.
 - x33_stratified_sample — deterministic stratified sampling with EXACT
   per-stratum counts (ceil(n·f)), keyed on a Carter-Wegman integer hash
   so both engines select the identical rows; the scale-safe replacement

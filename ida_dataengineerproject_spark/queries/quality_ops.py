@@ -632,8 +632,8 @@ def group_outlier_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     fence); the median/MAD fence is the standard robust alternative —
     and the naive SQL needs two per-group sorts (median, then median of
     deviations), each a whole-group buffer at 100 TB.  Here both
-    medians come from the bucket-targeted grouped_quantiles primitive
-    (operators/ranking.py — bounded windows only, no full-data
+    medians come from the sketch-band grouped_quantiles_band primitive
+    (operators/ranking.py — two scans, no window, no full-data
     shuffle); the flagging pass is a broadcast join of the 3-row
     (group, median, MAD) frame against the fact followed by one
     map-side-combined aggregate.  The threshold comparison is pure

@@ -74,46 +74,6 @@ def test_only_bounded_single_partition_exchange(spark):
     assert plan.count("Arguments: SinglePartition") == 1, plan
 
 
-def test_prefix_sum_equals_naive(spark):
-    from ida_dataengineerproject_spark.operators.ranking import (
-        global_prefix_sum,
-    )
-
-    li = table(spark, SF, "lineitem")
-    g = li.groupBy(F.col("l_extendedprice").alias("v")).agg(
-        F.sum(F.col("l_quantity").cast("long")).alias("wgt")
-    )
-    got = {
-        r["v"]: r["cum_weight"]
-        for r in global_prefix_sum(g, "v", "wgt").collect()
-    }
-    w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
-    want = {
-        r["v"]: r["cw"]
-        for r in g.withColumn("cw", F.sum("wgt").over(w)).collect()
-    }
-    assert got == want
-
-
-def test_weighted_median_crossing_semantics(spark):
-    from ida_dataengineerproject_spark.operators.ranking import (
-        global_prefix_sum,
-    )
-
-    # weights: 1,1,8 over values 10,20,30 -> half of 10 is 5, first value
-    # whose cumulative weight (1,2,10) doubles past 10 is 30
-    df = spark.createDataFrame(
-        [(10.0, 1), (20.0, 1), (30.0, 8)], ["v", "wgt"]
-    )
-    ps = global_prefix_sum(df, "v", "wgt", out_col="cumw")
-    got = (
-        ps.where(2 * F.col("cumw") >= 10)
-        .agg(F.min("v").alias("m"))
-        .collect()[0]["m"]
-    )
-    assert got == 30.0
-
-
 def test_null_values_rank_first_not_dropped(spark):
     """ADVICE r5: NULL value_col rows were silently dropped (NULL bucket
     id fails the offsets join).  They must rank FIRST, matching the
@@ -130,27 +90,6 @@ def test_null_values_rank_first_not_dropped(spark):
         (r["id"], r["rank"]) for r in _naive(df, "v", ["id"]).collect()
     }
     assert got == want  # same cardinality AND same ranks
-
-
-def test_prefix_sum_null_values_kept_nulls_first(spark):
-    from ida_dataengineerproject_spark.operators.ranking import (
-        global_prefix_sum,
-    )
-
-    df = spark.createDataFrame(
-        [(i, None if i % 5 == 0 else float(i % 13), i % 3 + 1)
-         for i in range(100)],
-        "id long, v double, w long",
-    )
-    got = global_prefix_sum(df, "v", "w", tiebreak_cols=["id"], n_buckets=6)
-    w = (
-        Window.orderBy("v", "id")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    want = df.withColumn("cum_weight", F.sum("w").over(w))
-    assert {
-        (r["id"], r["cum_weight"]) for r in got.collect()
-    } == {(r["id"], r["cum_weight"]) for r in want.collect()}
 
 
 def test_grouped_rank_equals_naive_partitioned_window(spark):
@@ -189,83 +128,6 @@ def test_exact_percentiles_plan_has_no_group_buffer(spark):
             assert "l_returnflag" in line
 
 
-def test_grouped_quantiles_matches_percentile_and_ignores_nulls(spark):
-    from ida_dataengineerproject_spark.operators.ranking import (
-        grouped_quantiles,
-    )
-
-    df = spark.createDataFrame(
-        [
-            (i % 3, None if i % 11 == 0 else float((i * 13) % 97))
-            for i in range(400)
-        ],
-        "g int, v double",
-    )
-    got = {
-        (r["g"], round(r["q25"], 9), round(r["q50"], 9), round(r["q90"], 9))
-        for r in grouped_quantiles(
-            df, "v", ["g"], {"q25": 0.25, "q50": 0.5, "q90": 0.9}, n_buckets=8
-        ).collect()
-    }
-    want = {
-        (r["g"], round(r["p"][0], 9), round(r["p"][1], 9), round(r["p"][2], 9))
-        for r in df.groupBy("g")
-        .agg(F.expr("percentile(v, array(0.25, 0.5, 0.9))").alias("p"))
-        .collect()
-    }
-    assert got == want
-
-
-def test_grouped_trimmed_mean_matches_naive_with_ties_and_nulls(spark):
-    from ida_dataengineerproject_spark.operators.ranking import (
-        grouped_trimmed_mean,
-    )
-
-    # heavy duplicate values (mod 7) so trim boundaries cut inside tie
-    # runs; group 2 is tiny (k=0 → plain mean); NULLs excluded
-    rows = [
-        (i % 3 if i < 390 else 2, None if i % 29 == 0 else float((i * 5) % 7))
-        for i in range(400)
-    ]
-    df = spark.createDataFrame(rows, "g int, v double")
-    got = {
-        r["g"]: round(r["trimmed_mean"], 9)
-        for r in grouped_trimmed_mean(
-            df, "v", ["g"], 0.1, n_buckets=4
-        ).collect()
-    }
-    want = {}
-    for gk in {r[0] for r in rows}:
-        vals = sorted(v for g_, v in rows if g_ == gk and v is not None)
-        k = int(len(vals) * 0.1)
-        kept = vals[k : len(vals) - k]
-        want[gk] = round(sum(kept) / len(kept), 9)
-    assert got == want
-
-
-def test_grouped_trimmed_mean_bounds_reuse_is_result_invariant(spark):
-    from ida_dataengineerproject_spark.operators.ranking import (
-        grouped_trimmed_mean,
-    )
-
-    df = spark.createDataFrame(
-        [(i % 2, float((i * 13) % 101)) for i in range(300)],
-        "g int, v double",
-    )
-    a = {
-        r["g"]: r["trimmed_mean"]
-        for r in grouped_trimmed_mean(df, "v", ["g"], 0.05).collect()
-    }
-    # deliberately terrible boundaries: all mass in one bucket
-    b = {
-        r["g"]: r["trimmed_mean"]
-        for r in grouped_trimmed_mean(
-            df, "v", ["g"], 0.05, bounds=[1000.0, 2000.0]
-        ).collect()
-    }
-    assert a == b
-
-
 def test_weighted_quantile_crossing_matches_naive_and_handles_ties(spark):
     from ida_dataengineerproject_spark.operators.ranking import (
         weighted_quantile_crossing,
@@ -289,6 +151,14 @@ def test_weighted_quantile_crossing_matches_naive_and_handles_ties(spark):
             break
     assert got["weighted_median"] == naive_m
     assert got["w_total"] == total
+
+    # weights 1,1,8 over values 10,20,30: half the total is 5, and the
+    # first value whose cumulative weight (1,2,10) reaches it is 30
+    df = spark.createDataFrame(
+        [(10.0, 1), (20.0, 1), (30.0, 8)], "v double, w long"
+    )
+    got = weighted_quantile_crossing(df, "v", "w").collect()[0]
+    assert (got["weighted_median"], got["w_total"]) == (30.0, 10)
 
 
 def test_global_prefix_max_equals_naive_window(spark):
@@ -365,22 +235,6 @@ def test_skyline_is_pareto_optimal(spark):
         assert dominated(p, pts), p
 
 
-def test_robust_stats_rejects_degenerate_trim_frac(spark):
-    """ADVICE r6: trim_frac >= 0.5 makes the divisor n - 2k zero or
-    negative — must raise, not return NULL/garbage."""
-    import pytest
-
-    from ida_dataengineerproject_spark.operators.ranking import (
-        grouped_robust_stats,
-    )
-
-    df = spark.range(10).select(
-        F.lit("g").alias("g"), F.col("id").cast("double").alias("v")
-    )
-    with pytest.raises(ValueError, match="trim_frac"):
-        grouped_robust_stats(df, "v", ["g"], trim_frac=0.5)
-
-
 def test_grouped_quantiles_band_matches_percentile_both_regimes(spark):
     """Sketch-band exact quantiles == Spark's exact percentile, in the
     small-n whole-collect regime AND the sketch-band regime (accuracy
@@ -389,32 +243,56 @@ def test_grouped_quantiles_band_matches_percentile_both_regimes(spark):
         grouped_quantiles_band,
     )
 
+    def check(df, qs, accuracies, ndigits=None):
+        def r(x):
+            return x if ndigits is None else round(x, ndigits)
+
+        want = {
+            row["g"]: tuple(r(row[n]) for n in qs)
+            for row in df.groupBy("g")
+            .agg(
+                *[
+                    F.expr(f"percentile(v, {q})").alias(n)
+                    for n, q in qs.items()
+                ]
+            )
+            .collect()
+        }
+        for acc in accuracies:
+            got = {
+                row["g"]: tuple(r(row[n]) for n in qs)
+                for row in grouped_quantiles_band(
+                    df, "v", ["g"], qs, accuracy=acc
+                ).collect()
+            }
+            assert got == want, f"accuracy={acc}"
+
     rows = []
     for g in ("a", "b"):
         for i in range(501):
             rows.append((g, float((i * 7) % 101)))  # heavy ties
         rows.append((g, None))
-    df = spark.createDataFrame(rows, ["g", "v"])
-    qs = {"p10": 0.1, "med": 0.5, "p90": 0.9}
-    want = {
-        r["g"]: (r["p10"], r["med"], r["p90"])
-        for r in df.groupBy("g")
-        .agg(
-            *[
-                F.expr(f"percentile(v, {q})").alias(n)
-                for n, q in qs.items()
-            ]
-        )
-        .collect()
-    }
-    for acc in (10000, 100):  # 1002 rows: whole-collect vs sketch band
-        got = {
-            r["g"]: (r["p10"], r["med"], r["p90"])
-            for r in grouped_quantiles_band(
-                df, "v", ["g"], qs, accuracy=acc
-            ).collect()
-        }
-        assert got == want, f"accuracy={acc}"
+    # 1002 rows: whole-collect vs sketch band
+    check(
+        spark.createDataFrame(rows, ["g", "v"]),
+        {"p10": 0.1, "med": 0.5, "p90": 0.9},
+        (10000, 100),
+    )
+
+    # three groups of ~121 non-null values, every 11th value NULL:
+    # NULLs must be ignored, not ranked
+    check(
+        spark.createDataFrame(
+            [
+                (i % 3, None if i % 11 == 0 else float((i * 13) % 97))
+                for i in range(400)
+            ],
+            "g int, v double",
+        ),
+        {"q25": 0.25, "q50": 0.5, "q90": 0.9},
+        (10000, 50),
+        ndigits=9,
+    )
 
 
 def test_order_statistic_tuples_match_naive_ranks(spark):

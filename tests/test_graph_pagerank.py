@@ -95,13 +95,18 @@ def test_count_triangles_arm_selection_pre_build(spark):
     Forcing the huge regime (broadcast_limit_bytes=0) on a small graph
     must (a) still count exactly, (b) produce a final plan with NO
     broadcast hash join on the adjacency, and (c) leave the scoped
-    sort-aggregate conf restored afterwards."""
+    sort-aggregate conf restored afterwards.  The input carries
+    self-loops, which violate the simple-graph contract: both regimes
+    must ignore them alike, so the count cannot depend on which side of
+    the size gate the input lands."""
     from ida_dataengineerproject_spark.operators.graph import count_triangles
 
     conf_key = "spark.sql.execution.useObjectHashAggregateExec"
     before = spark.conf.get(conf_key)
-    edges = [(1, 2), (2, 3), (1, 3), (3, 4), (4, 1), (2, 4), (5, 6)]
-    df = spark.createDataFrame(edges, "src long, dst long")
+    simple = [(1, 2), (2, 3), (1, 3), (3, 4), (4, 1), (2, 4), (5, 6)]
+    df = spark.createDataFrame(
+        simple + [(1, 1), (3, 3), (4, 4), (5, 5)], "src long, dst long"
+    )
 
     tri_shuffle = count_triangles(df, broadcast_limit_bytes=0)
     plan = tri_shuffle._sc._jvm.PythonSQLUtils  # noqa: SLF001 — not used
@@ -112,7 +117,7 @@ def test_count_triangles_arm_selection_pre_build(spark):
     with redirect_stdout(buf):
         tri_shuffle.explain("formatted")
     assert "BroadcastHashJoin" not in buf.getvalue()
-    assert tri_shuffle.collect()[0]["n_triangles"] == _naive_triangles(edges)
+    assert tri_shuffle.collect()[0]["n_triangles"] == _naive_triangles(simple)
     assert spark.conf.get(conf_key) == before  # scoped conf restored
 
     tri_bcast = count_triangles(df)  # default limit: broadcast arm
@@ -120,7 +125,7 @@ def test_count_triangles_arm_selection_pre_build(spark):
     with redirect_stdout(buf2):
         tri_bcast.explain("formatted")
     assert "BroadcastHashJoin" in buf2.getvalue()
-    assert tri_bcast.collect()[0]["n_triangles"] == _naive_triangles(edges)
+    assert tri_bcast.collect()[0]["n_triangles"] == _naive_triangles(simple)
 
 
 def test_adjacency_build_sort_based_under_scoped_conf(spark):

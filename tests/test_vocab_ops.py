@@ -59,6 +59,25 @@ def test_mg_candidates_superset_guarantee(spark):
     assert len(cands) <= capacity * 8
     assert len(cands) < len(truth)
 
+    # the key column is found by NAME, not position: a frame whose first
+    # column is a constant must not be sketched in place of key_col
+    wide = keys.select(F.lit("pad").alias("pad"), F.col("key").alias("tok"))
+    wide_cands = {r["tok"] for r in mg_candidates(wide, capacity, "tok").collect()}
+    assert "pad" not in wide_cands
+    assert not must_have - wide_cands
+
+    # NULL keys are not keys: the heaviest "value" of this stream is NULL,
+    # and it must neither surface as a candidate nor evict a true one
+    nulls = spark.range(n // 4).select(F.lit(None).cast("string").alias("key"))
+    null_cands = {
+        r["key"]
+        for r in mg_candidates(
+            keys.unionByName(nulls).repartition(8), capacity
+        ).collect()
+    }
+    assert None not in null_cands
+    assert not must_have - null_cands
+
 
 def test_heavy_hitters_exact_vs_bruteforce(spark):
     capacity = 128
