@@ -152,6 +152,12 @@ def test_weighted_quantile_crossing_matches_naive_and_handles_ties(spark):
     assert got["weighted_median"] == naive_m
     assert got["w_total"] == total
 
+
+def test_weighted_median_crossing_semantics(spark):
+    from ida_dataengineerproject_spark.operators.ranking import (
+        weighted_quantile_crossing,
+    )
+
     # weights 1,1,8 over values 10,20,30: half the total is 5, and the
     # first value whose cumulative weight (1,2,10) reaches it is 30
     df = spark.createDataFrame(
@@ -243,56 +249,63 @@ def test_grouped_quantiles_band_matches_percentile_both_regimes(spark):
         grouped_quantiles_band,
     )
 
-    def check(df, qs, accuracies, ndigits=None):
-        def r(x):
-            return x if ndigits is None else round(x, ndigits)
-
-        want = {
-            row["g"]: tuple(r(row[n]) for n in qs)
-            for row in df.groupBy("g")
-            .agg(
-                *[
-                    F.expr(f"percentile(v, {q})").alias(n)
-                    for n, q in qs.items()
-                ]
-            )
-            .collect()
-        }
-        for acc in accuracies:
-            got = {
-                row["g"]: tuple(r(row[n]) for n in qs)
-                for row in grouped_quantiles_band(
-                    df, "v", ["g"], qs, accuracy=acc
-                ).collect()
-            }
-            assert got == want, f"accuracy={acc}"
-
     rows = []
     for g in ("a", "b"):
         for i in range(501):
             rows.append((g, float((i * 7) % 101)))  # heavy ties
         rows.append((g, None))
-    # 1002 rows: whole-collect vs sketch band
-    check(
-        spark.createDataFrame(rows, ["g", "v"]),
-        {"p10": 0.1, "med": 0.5, "p90": 0.9},
-        (10000, 100),
+    df = spark.createDataFrame(rows, ["g", "v"])
+    qs = {"p10": 0.1, "med": 0.5, "p90": 0.9}
+    want = {
+        r["g"]: (r["p10"], r["med"], r["p90"])
+        for r in df.groupBy("g")
+        .agg(
+            *[
+                F.expr(f"percentile(v, {q})").alias(n)
+                for n, q in qs.items()
+            ]
+        )
+        .collect()
+    }
+    for acc in (10000, 100):  # 1002 rows: whole-collect vs sketch band
+        got = {
+            r["g"]: (r["p10"], r["med"], r["p90"])
+            for r in grouped_quantiles_band(
+                df, "v", ["g"], qs, accuracy=acc
+            ).collect()
+        }
+        assert got == want, f"accuracy={acc}"
+
+
+def test_grouped_quantiles_matches_percentile_and_ignores_nulls(spark):
+    from ida_dataengineerproject_spark.operators.ranking import (
+        grouped_quantiles_band,
     )
 
     # three groups of ~121 non-null values, every 11th value NULL:
     # NULLs must be ignored, not ranked
-    check(
-        spark.createDataFrame(
-            [
-                (i % 3, None if i % 11 == 0 else float((i * 13) % 97))
-                for i in range(400)
-            ],
-            "g int, v double",
-        ),
-        {"q25": 0.25, "q50": 0.5, "q90": 0.9},
-        (10000, 50),
-        ndigits=9,
+    df = spark.createDataFrame(
+        [
+            (i % 3, None if i % 11 == 0 else float((i * 13) % 97))
+            for i in range(400)
+        ],
+        "g int, v double",
     )
+    qs = {"q25": 0.25, "q50": 0.5, "q90": 0.9}
+    want = {
+        (r["g"], round(r["p"][0], 9), round(r["p"][1], 9), round(r["p"][2], 9))
+        for r in df.groupBy("g")
+        .agg(F.expr("percentile(v, array(0.25, 0.5, 0.9))").alias("p"))
+        .collect()
+    }
+    for acc in (10000, 50):  # whole-collect vs sketch band
+        got = {
+            (r["g"], round(r["q25"], 9), round(r["q50"], 9), round(r["q90"], 9))
+            for r in grouped_quantiles_band(
+                df, "v", ["g"], qs, accuracy=acc
+            ).collect()
+        }
+        assert got == want, f"accuracy={acc}"
 
 
 def test_order_statistic_tuples_match_naive_ranks(spark):
