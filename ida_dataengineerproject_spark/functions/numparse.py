@@ -1,7 +1,7 @@
 """Locale-tolerant numeric parsing (reference op21, etl/etl_ida.py:422-429).
 
 The reference strips '%' and swaps ',' for '.' before float(); failures map
-to None.  Spark equivalent is pure built-ins: two regexp_replace + a cast,
+to None.  Spark equivalent is pure built-ins: one ``translate`` + a cast,
 which under ``spark.sql.ansi.enabled=false`` yields NULL on bad input —
 exactly the reference's None semantics.  Stays inside whole-stage codegen
 (no UDF).
@@ -34,7 +34,6 @@ def parse_locale_number(col: Column | str) -> Column:
     reference parser — tolerates surrounding whitespace of its final
     input, so the guard must too."""
     c = F.col(col) if isinstance(col, str) else col
-    cleaned = F.trim(
-        F.regexp_replace(F.regexp_replace(F.trim(c), ",", "."), "%", "")
-    )
+    # translate maps ',' → '.' and deletes '%' (no replacement char)
+    cleaned = F.trim(F.translate(F.trim(c), ",%", "."))
     return F.when(cleaned.rlike(_FLOAT_RE), cleaned.cast("double"))

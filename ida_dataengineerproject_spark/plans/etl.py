@@ -7,14 +7,20 @@ Reference stages → Spark stages:
   index (the file-order the pandas ffill silently depends on — SURVEY.md
   §7.4.1) — conversion from ODS happens driver-side, out of the engine.
 - DataTransformer.transform (op11/12/16/18-22/25, etl_ida.py:277-429):
-  ffill → blank-row filter → unpivot → invalid-cell filter → locale parse →
-  recode → hash.  All built-in expressions; one Expand node, no shuffle.
+  ffill → blank-row filter → recode/clean per sheet row → unpivot →
+  invalid-cell filter → locale parse → hash.  All built-in expressions;
+  one Window and one Expand node, no shuffle.
 - ensure dims (op36/38, etl_ida.py:556-620): distinct natural keys +
   anti-join upsert; surrogate keys are xxhash64 of the natural key
   (deterministic & distributed — identity sequences are not).
 - PostgreSQLLoader.load (op30/37/06, etl_ida.py:461-554): hash dedup,
-  broadcast dim-key resolution (inner joins: unmatched rows silently drop,
-  matching etl_ida.py:550-551), partitioned fact write.
+  dim-key resolution, partitioned fact write.  The reference resolves
+  keys with inner joins against the dims; here every dim is the
+  distinct natural keys of the same records and every surrogate key is
+  a hash of its natural key, so the fact computes its keys inline and
+  drops the rows an inner join could never match (a NULL natural key —
+  the silent drop of etl_ida.py:550-551).  The fact plan derives the
+  record stream once.
 
 Scale notes: the only shuffles are the dim distincts (tiny) and the fact
 dedup (hash-partitioned).  The ffill window partitions by source file.
@@ -37,7 +43,7 @@ from ..operators.cleaning import (
     drop_invalid_values,
     recode,
 )
-from ..operators.reshape import forward_fill, unpivot_months
+from ..operators.reshape import forward_fill, month_columns, unpivot_months
 from ..operators.upsert import dedup_against
 
 
@@ -50,19 +56,29 @@ def transform_wide(wide: DataFrame) -> DataFrame:
         partition_cols=["ARQUIVO_ORIGEM"],
     )  # op15: merged-cell group names repeat down the sheet
     df = drop_blank_rows(df, "GRUPO_ECONOMICO", "VARIAVEL")  # op11
-    long = unpivot_months(
-        df,
-        id_cols=["GRUPO_ECONOMICO", "VARIAVEL", "SERVICO", "ARQUIVO_ORIGEM", "linha_origem"],
-    )  # op16 + op22
-    long = drop_invalid_values(long, "valor_raw")  # op12
-    rec = long.select(
-        F.col("ano_mes"),
+    # recode/clean once per sheet row, before the unpivot multiplies it
+    # into one row per month cell
+    df = df.select(
         recode("GRUPO_ECONOMICO", GROUP_MAPPING).alias("grupo_economico"),  # op19
         clean_text("SERVICO").alias("servico"),  # op18
         recode("VARIAVEL", VARIABLE_MAPPING).alias("variavel"),  # op20
-        parse_locale_number("valor_raw").alias("valor"),  # op21
         F.col("ARQUIVO_ORIGEM").alias("arquivo_origem"),
         F.col("linha_origem").cast("int"),
+        *month_columns(df),
+    )
+    long = unpivot_months(
+        df,
+        id_cols=["grupo_economico", "servico", "variavel", "arquivo_origem", "linha_origem"],
+    )  # op16 + op22
+    long = drop_invalid_values(long, "valor_raw")  # op12
+    rec = long.select(
+        "ano_mes",
+        "grupo_economico",
+        "servico",
+        "variavel",
+        parse_locale_number("valor_raw").alias("valor"),  # op21
+        "arquivo_origem",
+        "linha_origem",
     ).filter(F.col("valor").isNotNull())  # parse failure == skip (op12)
     return rec.withColumn(
         "hash_registro",
@@ -129,57 +145,29 @@ def build_dims(records: DataFrame) -> dict[str, DataFrame]:
 
 def load_fact(
     records: DataFrame,
-    dims: dict[str, DataFrame],
     existing_fact: DataFrame | None = None,
-    broadcast_dims: bool = True,
 ) -> DataFrame:
     """Dedup + dim-key resolution (op30/op37, etl_ida.py:502-554).
 
-    Inner joins against dims (all broadcast: dims are small by
-    construction) reproduce the reference's silent drop of unmatched
-    records; hash dedup reproduces ON CONFLICT DO NOTHING, anti-joined
-    against the existing fact for idempotent re-runs.
-
-    ``broadcast_dims=False`` drops the explicit broadcast hints —
-    callers with a BOUNDED single-partition input (xq41's fixed-sheet
-    audit rebuild) use it so the four dim joins run inside one codegen
-    pipeline instead of spawning four broadcast-exchange sub-jobs;
-    production ingest keeps the default (at scale the hint is the
-    guarantee the 6-row dims never shuffle the fact)."""
+    Hash dedup reproduces ON CONFLICT DO NOTHING, anti-joined against
+    the existing fact for idempotent re-runs.  The surrogate keys are
+    the hashes ``build_dims`` gives the same natural keys, so no dim
+    join is needed.  A row with a NULL natural key is dropped, as the
+    reference's inner joins drop it (etl_ida.py:550-551)."""
     deduped = dedup_against(records, existing_fact, ["hash_registro"])
-    maybe_b = F.broadcast if broadcast_dims else (lambda df: df)
     return (
-        deduped.join(maybe_b(dims["dim_tempo"].select("tempo_key", "ano_mes")), "ano_mes")
-        .join(
-            maybe_b(
-                dims["dim_grupo_economico"].select(
-                    "grupo_key", F.col("grupo_codigo").alias("grupo_economico")
-                )
-            ),
-            "grupo_economico",
-        )
-        .join(
-            maybe_b(
-                dims["dim_servico"].select(
-                    "servico_key", F.col("servico_codigo").alias("servico")
-                )
-            ),
-            "servico",
-        )
-        .join(
-            maybe_b(
-                dims["dim_variavel"].select(
-                    "variavel_key", F.col("variavel_codigo").alias("variavel")
-                )
-            ),
-            "variavel",
+        deduped.filter(
+            F.col("ano_mes").isNotNull()
+            & F.col("grupo_economico").isNotNull()
+            & F.col("servico").isNotNull()
+            & F.col("variavel").isNotNull()
         )
         .select(
             F.xxhash64("hash_registro").alias("fato_key"),
-            "tempo_key",
-            "grupo_key",
-            "servico_key",
-            "variavel_key",
+            _skey("ano_mes").alias("tempo_key"),
+            _skey("grupo_economico").alias("grupo_key"),
+            _skey("servico").alias("servico_key"),
+            _skey("variavel").alias("variavel_key"),
             F.col("valor").cast("decimal(15,6)").alias("valor"),
             "arquivo_origem",
             "linha_origem",
@@ -197,22 +185,23 @@ def ingest(
 ) -> dict[str, DataFrame]:
     """Full pipeline: wide sheet(s) → {dims..., fact_ida} lazy DataFrames.
     Mirrors ETLPipeline.run (etl_ida.py:732-834) minus the HTTP fetch.
+    Each output derives the normalized records once: the four dims by
+    ``distinct``, the fact by dedup with its keys computed inline.
 
     ``materialize_records=True`` (r13, opt-in so the default contract
     stays fully lazy) eagerly checkpoints the normalized record stream
     before fanning out: the records subtree (ffill window + unpivot
     Expand + parse/recode) feeds FIVE independent consumers — four dim
     distincts and the fact dedup — and with ``write_star`` each of the
-    five write jobs re-derived it from the source (the fact job four
-    more times via its lazy dim joins).  Records are O(sheet cells),
-    so the checkpoint is bounded at any corpus scale.  Callers that
-    consume only one output (xq41's audit rebuild) keep the lazy
-    default."""
+    five write jobs would re-derive it from the source.  Records are
+    O(sheet cells), so the checkpoint is bounded at any corpus scale.
+    Callers that consume only one output (the re-ingest count, xq41's
+    audit rebuild) keep the lazy default."""
     records = transform_wide(wide)
     if materialize_records:
         records = records.localCheckpoint(eager=True)
     dims = build_dims(records)
-    fact = load_fact(records, dims, existing_fact)
+    fact = load_fact(records, existing_fact)
     return {**dims, "fact_ida": fact}
 
 
@@ -221,14 +210,16 @@ def write_star(star: dict[str, DataFrame], base_dir: str) -> None:
     tempo dim (partition pruning for time-range queries — the Spark
     equivalent of the reference's fact indexes, schema_star.sql:96-101).
 
-    The five table writes are independent jobs (the fact plan reuses the
-    LAZY dim frames, never the dim files), so they run from a small
-    thread pool (guide §2.6 — overlap independent jobs): wall is the
-    slowest write, not the sum of five job round-trips.  On a cluster
+    The five table writes are independent jobs (the fact write reuses
+    the LAZY tempo dim frame, never the dim files), so they run from a
+    small thread pool (guide §2.6 — overlap independent jobs): wall is
+    the slowest write, not the sum of five job round-trips.  On a cluster
     the later jobs back-fill executors freed by the earlier jobs' tails.
+    Each pool target inherits the caller's local properties (job group,
+    description) and tags, so the writes stay attributed to the caller.
 
-    Concurrency caveats (ADVICE r12): pool.map raises the FIRST failure
-    only after every in-flight write finishes — a failed fact write can
+    Concurrency caveats (ADVICE r12): the FIRST failure is raised only
+    after every in-flight write finishes — a failed fact write can
     leave sibling tables already (re)written; callers treating the star
     dir as transactional should stage+rename (sources/wap.py).  And
     because SQLConf is session-scoped, a concurrent ``scoped_conf``
@@ -236,6 +227,10 @@ def write_star(star: dict[str, DataFrame], base_dir: str) -> None:
     scope) would leak into these writes — don't run write_star
     concurrently with scoped-conf operators on the same session."""
     from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    spark = star["fact_ida"].sparkSession
 
     def write_one(item: tuple[str, DataFrame]) -> None:
         name, df = item
@@ -252,5 +247,12 @@ def write_star(star: dict[str, DataFrame], base_dir: str) -> None:
             df.coalesce(1).write.mode("overwrite").parquet(f"{base_dir}/{name}")
 
     with ThreadPoolExecutor(max_workers=3) as pool:
-        # consume the iterator so the first exception propagates
-        list(pool.map(write_one, star.items()))
+        # wrap each target here, in the caller's thread: every write gets
+        # its own copy of the caller's local properties (Spark SQL sets
+        # its execution id in them, so one copy must not be shared)
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(write_one), item)
+            for item in star.items()
+        ]
+        for f in futures:
+            f.result()  # the first failure propagates

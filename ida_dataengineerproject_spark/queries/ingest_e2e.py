@@ -8,8 +8,8 @@ Stages wired together — each already unit-tested, here composed end-to-end:
    from `nation` (stands in for the driver-side ODS→DataFrame step; same
    merged-cell nulls / comma decimals / '-' invalid cells the reference
    sheets have)
-3. plans/etl.ingest: ffill → unpivot → parse → recode → hash → dims →
-   fact with broadcast dim-key resolution
+3. plans/etl.ingest: ffill → recode → unpivot → parse → hash → dims →
+   fact with surrogate keys hashed inline from the natural keys
 4. plans/etl.write_star: dims + year-partitioned fact to parquet
 5. idempotent RE-RUN: ingest the same sheets again against the fact read
    back from disk — the anti-join must add zero rows (the reference's

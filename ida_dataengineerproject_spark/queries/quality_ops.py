@@ -802,9 +802,9 @@ def star_ddl_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     trap), and every tiny aggregate stage scheduled 32 shuffle tasks.
     Fix: (1) checkpoint the transformed records ONCE, coalesced to one
     partition, so each branch reuses the materialized 150 rows; (2)
-    drop the dim-join broadcast hints (``load_fact(...,
-    broadcast_dims=False)`` — each hint was a broadcast-build sub-job);
-    (3) execute the bounded audit to its 33-row result inside a scoped
+    no dim joins in the fact: ``load_fact`` computes the surrogate keys
+    inline (each broadcast dim join was a broadcast-build sub-job); (3)
+    execute the bounded audit to its 33-row result inside a scoped
     AQE-off ``shuffle.partitions=1`` block (AQE materializes every
     exchange as its own job; confs bind at execution, so the frame is
     localCheckpointed inside the scope).  Jobs per invocation 20 → 8;
@@ -827,9 +827,7 @@ def star_ddl_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     records = (
         transform_wide(wide).coalesce(1).localCheckpoint(eager=True)
     )
-    dims = build_dims(records)
-    fact = load_fact(records, dims, None, broadcast_dims=False)
-    star = {**dims, "fact_ida": fact}
+    star = {**build_dims(records), "fact_ida": load_fact(records)}
 
     def nulls(c: str) -> F.Column:
         return F.count("*") - F.count(c)

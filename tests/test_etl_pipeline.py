@@ -1,9 +1,12 @@
 """ETL transform-semantics tests against the FIXTURES.md §2 dirty fixture —
 ffill, unpivot, dirty-value parsing, recode pass-through, dedup idempotency,
-silent-drop key resolution.  Golden values hand-computed from the reference
+silent-drop key resolution, the fact plan's shape and write_star's job
+attribution.  Golden values hand-computed from the reference
 semantics (/root/reference/etl/etl_ida.py:277-429)."""
 
 from __future__ import annotations
+
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -106,18 +109,102 @@ def test_dims_and_key_resolution(spark, wide):
     )
 
 
-def test_silent_drop_on_missing_dim(spark, wide):
-    """Records whose dim key is absent are silently dropped (inner-join
-    semantics, etl_ida.py:550-551)."""
-    from ida_dataengineerproject_spark.plans.etl import build_dims, load_fact
-
-    rec = _records(spark, wide)
-    dims = build_dims(rec)
-    dims["dim_grupo_economico"] = dims["dim_grupo_economico"].filter(
-        F.col("grupo_codigo") != "OI"
+@pytest.fixture(scope="module")
+def wide_null_servico(spark, wide):
+    """The fixture plus a third file whose second row has no SERVICO."""
+    extra = spark.createDataFrame(
+        [
+            (1, "GRUPO TIM", "Taxa de Respondidas em 5 dias Úteis", "7", "8", "SCM", "SCM_2017.ods"),
+            (2, None, "Índice de Reclamações", "3,5", "4", None, "SCM_2017.ods"),
+        ],
+        wide.schema,
     )
-    fact = load_fact(rec, dims)
-    assert fact.count() == rec.count() - 2  # the two OI records dropped
+    return wide.unionByName(extra)
+
+
+def test_null_servico_record_dropped_from_fact(spark, wide_null_servico):
+    """A record whose natural key is NULL never resolves to a dim row, so
+    it is silently dropped from the fact (inner-join semantics,
+    etl_ida.py:550-551)."""
+    from ida_dataengineerproject_spark.plans.etl import ingest
+
+    rec = _records(spark, wide_null_servico)
+    dropped = {r.hash_registro for r in rec.filter(F.col("servico").isNull()).collect()}
+    assert len(dropped) == 2  # row 2 of the SCM file, both months
+
+    fact = ingest(spark, wide_null_servico)["fact_ida"]
+    kept = {r.hash_registro for r in fact.collect()}
+    assert kept.isdisjoint(dropped)
+    assert len(kept) == rec.count() - len(dropped)
+
+
+def test_fact_rows_join_exactly_one_row_of_each_dim(spark, wide_null_servico):
+    from ida_dataengineerproject_spark.plans.etl import ingest
+
+    star = ingest(spark, wide_null_servico)
+    fact = star["fact_ida"]
+    n = fact.count()
+    assert n > 0
+    for dim, key in [
+        ("dim_tempo", "tempo_key"),
+        ("dim_grupo_economico", "grupo_key"),
+        ("dim_servico", "servico_key"),
+        ("dim_variavel", "variavel_key"),
+    ]:
+        per_key = star[dim].groupBy(key).agg(F.count("*").alias("dim_rows"))
+        matches = fact.join(per_key, key, "left").select("dim_rows").collect()
+        assert len(matches) == n
+        assert all(r.dim_rows == 1 for r in matches), dim
+
+
+def _node_counts(df) -> dict[str, int]:
+    """Window/Expand/BroadcastExchange nodes in the final adaptive plan."""
+    df.collect()  # finalize the adaptive plan
+    txt = df._jdf.queryExecution().executedPlan().toString()
+    final = txt.split("== Initial Plan ==")[0]
+    found = re.findall(
+        r"(?m)^[\s:|+-]*(?:\*\(\d+\) )?(Window|Expand|BroadcastExchange)\b", final
+    )
+    return {k: found.count(k) for k in ("Window", "Expand", "BroadcastExchange")}
+
+
+def test_fact_plan_derives_records_once(spark, wide, tmp_path):
+    """The fact plan derives the record stream once (one ffill Window,
+    one unpivot Expand) and joins no dim, with and without an existing
+    fact.  Size-based broadcasts are off inside the check: the anti join
+    against a small existing fact may broadcast, so only a hinted join
+    would still show a BroadcastExchange."""
+    from ida_dataengineerproject_spark.plans.etl import ingest, write_star
+    from ida_dataengineerproject_spark.session import scoped_conf
+
+    write_star(ingest(spark, wide), str(tmp_path))
+    existing = spark.read.parquet(str(tmp_path / "fact_ida"))
+    once = {"Window": 1, "Expand": 1, "BroadcastExchange": 0}
+    with scoped_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
+        assert _node_counts(ingest(spark, wide)["fact_ida"]) == once
+        assert _node_counts(ingest(spark, wide, existing_fact=existing)["fact_ida"]) == once
+
+
+def test_write_star_jobs_carry_caller_job_group(spark, wide, tmp_path):
+    """The pooled table writes inherit the caller's job group, so every
+    job write_star launches is attributed to the caller."""
+    from ida_dataengineerproject_spark.plans.etl import ingest, write_star
+
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    star = ingest(spark, wide)
+    sc.setJobGroup("write-star-caller", "write_star job-group test")
+    try:
+        first = jsc.dagScheduler().nextJobId()
+        write_star(star, str(tmp_path))
+        last = jsc.dagScheduler().nextJobId()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jsc.listenerBus().waitUntilEmpty()
+    assert last - first >= len(star)  # at least one job per table
+    groups = [jsc.statusStore().job(j).jobGroup() for j in range(first, last)]
+    assert {g.get() if g.isDefined() else None for g in groups} == {"write-star-caller"}
 
 
 def test_write_star_partitioned(spark, wide, tmp_path):

@@ -51,6 +51,30 @@ def test_parse_locale_matches_reference(spark, raw_values):
             assert g is not None and abs(g - w) < 1e-9, (v, g, w)
 
 
+def test_parse_locale_fixed_examples_match_reference(spark):
+    """The edge cases the 10-example property draw may miss: NULL,
+    stacked or misplaced separators, Java-only number spellings and the
+    special floats."""
+    from ida_dataengineerproject_spark.functions.numparse import (
+        parse_locale_number,
+    )
+
+    raw_values = [
+        None, "12,34", "56,7%", "%%5", "1,2,3", "0 %", ",%", "1d", "0x10",
+        "-inf", "nan",
+    ]
+    df = spark.createDataFrame([(v,) for v in raw_values], "raw string")
+    got = [r.p for r in df.select(parse_locale_number("raw").alias("p")).collect()]
+    for g, v in zip(got, raw_values):
+        w = _ref_parse(v)
+        if w is None:
+            assert g is None, (v, g)
+        elif math.isnan(w):
+            assert g is not None and math.isnan(g), (v, g)
+        else:
+            assert g == w, (v, g, w)
+
+
 @settings(max_examples=10, deadline=None)
 @given(st.lists(_texty, min_size=1, max_size=30))
 def test_clean_text_matches_reference(spark, texts):
