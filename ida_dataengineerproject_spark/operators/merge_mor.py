@@ -46,9 +46,12 @@ table-format jar.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import run_concurrently
 from .merge_cow import (
     BUCKET_COL,
     _claim_commit,
@@ -131,8 +134,6 @@ def upsert_mor(
     append file set holding the non-tombstoned replacement rows.  Change
     keys must be unique (one decision per key per commit).  No existing
     file is touched."""
-    from concurrent.futures import ThreadPoolExecutor
-
     from pyspark.storagelevel import StorageLevel
 
     log = _read_log(spark, path)
@@ -163,21 +164,27 @@ def upsert_mor(
 
     # the DV file set and the append file set are INDEPENDENT jobs over
     # the checkpointed changeset — overlap them (guide §2.6, the
-    # write_star pattern; job descriptions are thread-local).  Same
-    # caveat as write_star: don't run commits concurrently with
-    # scoped-conf operators on the same session (SQLConf is
-    # session-scoped).
-    def _write(job):
-        which, df, target = job
+    # write_star pattern): both keep the caller's job group, and each
+    # sets its own description on its thread's copy of the local
+    # properties.  Same caveat as write_star: don't run commits
+    # concurrently with scoped-conf operators on the same session
+    # (SQLConf is session-scoped).
+    def _write(which: str, df: DataFrame, target: str) -> None:
         spark.sparkContext.setJobDescription(f"mor commit v{c}: {which}")
         df.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(target)
 
-    jobs = [
-        ("dv", dv, dv_dir),
-        ("data", upserts.withColumn(COMMIT_COL, F.lit(c).cast("long")), data_dir),
-    ]
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        list(pool.map(_write, jobs))  # consume so the first failure raises
+    run_concurrently(
+        spark,
+        [
+            partial(_write, "dv", dv, dv_dir),
+            partial(
+                _write,
+                "data",
+                upserts.withColumn(COMMIT_COL, F.lit(c).cast("long")),
+                data_dir,
+            ),
+        ],
+    )
 
     buckets = {b: dict(e) for b, e in log["buckets"].items()}
     for b in _written_buckets(spark, dv_dir):

@@ -4,29 +4,33 @@
 table through one task — the classic Spark scaling cliff (WindowExec
 warns, and at 100 TB it simply doesn't run).  The exact rewrite:
 
-1. pick ~``n_buckets`` approximate quantile boundaries of the order
-   column (``approxQuantile`` — Greenwald-Khanna, deterministic, one
-   pass, driver gets a bounded float list);
-2. assign each row a bucket with a monotone chain of codegen'd
-   comparisons (equal values always share a bucket, so bucket order
-   refines to total order);
-3. per-bucket offsets = running sum over the bucket COUNTS — a window
-   over <= n_buckets rows (bounded, the only single-partition step);
-4. global rank = offset + row_number within the bucket (window
+1. assign each row an equal-width value bucket between the column's
+   min and max (``_with_buckets``: a 1-row min/max aggregate inside the
+   same plan, so building launches no Spark job; equal values always
+   share a bucket, so bucket order refines to total order);
+2. per-bucket offsets = running sum over the bucket COUNTS — a window
+   over <= n_buckets rows (bounded; with the probe's keyless min/max
+   merge, the only single-partition steps);
+3. global rank = offset + row_number within the bucket (window
    partitioned by bucket).
 
 Ranks are EXACT and identical to the naive global window for any
-boundary choice — boundaries only balance work.  Skewed order columns
-degrade gracefully: a bucket holding one hot value processes that
-value's rows in one task, same as any rank-by definition must.
+bucketing — buckets only balance work.  Equal-width buckets balance
+worse than quantile boundaries on heavy-tailed columns: at sf0.1 the
+largest bucket holds 10.1 % of xq7's per-customer revenues (3.2 % with
+the approxQuantile boundaries this module used before) and 4.0 % of
+xt24's ``-n_chars`` (3.3 %).  A bucket holding one hot value processes
+that value's rows in one task, same as any rank-by definition must.
 
-Used by xq7_gini_revenue; the same primitive serves ECDF, exact
-top-percent cuts, and rank-based statistics at scale.
+``global_rank``, ``global_prefix_max`` and ``weighted_quantile_crossing``
+share the one bucket assigner.  Used by xq7_gini_revenue; the same
+primitive serves ECDF, exact top-percent cuts, and rank-based
+statistics at scale.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -35,79 +39,38 @@ def _with_buckets(
     value_col: str,
     n_buckets: int,
 ) -> DataFrame:
-    """Attach ``__bucket``: a monotone, codegen'd bucket id from
-    approximate quantile boundaries (equal values always share a
-    bucket, so bucket order refines to total order).
+    """Attach ``__bucket``: the equal-width bin index of ``value_col``
+    between its min and max, from a 1-row min/max aggregate
+    broadcast-cross-joined onto the rows (codegen'd floor arithmetic, no
+    Python, no sketch, no eager job — probing, bucket counting and
+    ranking all run in the caller's one Spark job).
+
+    The bin arithmetic runs in double: ``v``, min and max are cast
+    BEFORE subtracting.  In the column's own type a ``long`` range wider
+    than 2^63 (``xxhash64`` keys) would wrap silently with ANSI off and
+    put every row into one bucket.  The cast is monotone, so equal values
+    still share a bucket and bucket order still refines value order.
 
     NULL ``value_col`` rows land in a dedicated bucket -1 that sorts
-    before every boundary bucket — NULLS FIRST, matching Spark's default
-    ascending ``ORDER BY`` the naive global window would apply.  (Without
-    the guard, ``v > lit(b)`` is NULL for NULL v, the bucket id is NULL,
-    and the offsets join silently DROPPED those rows — ADVICE r5.)"""
-    probs = [i / n_buckets for i in range(1, n_buckets)]
-    bounds = df.approxQuantile(value_col, probs, 0.001)
-    # dedupe preserving order (constant columns yield repeated bounds)
-    uniq: list[float] = []
-    for b in bounds:
-        if not uniq or b > uniq[-1]:
-            uniq.append(b)
-    v = F.col(value_col)
-    # balanced addition tree, not a left-deep reduce chain: identical
-    # codegen'd per-row work (one comparison per boundary, whole-stage
-    # codegen intact), but depth log2(n) instead of n — Catalyst
-    # re-analyzes this expression inside every operator that embeds the
-    # bucketed frame, and deep left-nested trees made that planning walk
-    # the dominant cost of the whole primitive at toy scale (measured
-    # 3.7 s → 2.3 s cold on a minimal 64-bucket DAG).
-    terms: list[Column] = [(v > F.lit(b)).cast("int") for b in uniq]
-    if not terms:
-        terms = [F.lit(0)]
-    while len(terms) > 1:
-        terms = [
-            terms[i] + terms[i + 1] if i + 1 < len(terms) else terms[i]
-            for i in range(0, len(terms), 2)
-        ]
-    bucket = F.when(v.isNull(), F.lit(-1)).otherwise(terms[0])
-    return df.withColumn("__bucket", bucket)
+    before every value bucket — NULLS FIRST, matching Spark's default
+    ascending ``ORDER BY`` the naive global window would apply (a NULL
+    bucket id would fail the offsets join and silently drop those rows —
+    ADVICE r5).  A constant column (max == min) degenerates to one
+    bucket, never a NULL bucket.
 
-
-def _with_buckets_fused(
-    df: DataFrame,
-    value_col: str,
-    n_buckets: int,
-) -> DataFrame:
-    """``_with_buckets`` with the boundary probe INSIDE the plan: a
-    1-row min/max aggregate broadcast-cross-joined onto the rows,
-    bucket id = equal-width bin index between min and max (codegen'd
-    floor arithmetic, no Python, no sketch).
-
-    Removes the eager driver-side ``approxQuantile`` job entirely —
-    boundary probing, bucket counting, and ranking all run in ONE
-    Spark job (the r8 profiles showed the eager probe is ~60-70% of
-    the wall for small single-statistic queries).  A plan-embedded
-    ``percentile_approx`` HOF variant was built and MEASURED SLOWER
-    than the eager form it replaced (2.44 s vs 1.34 s on xq8 at
-    sf0.1): Catalyst does NOT reuse the aggregate across the branches
-    that embed the bucketed frame, so the sketch pass ran once per
-    branch.  min/max pays the same per-branch duplication but each
-    pass is a cheap codegen'd hash aggregate (measured 0.82 s total).
-
-    Tradeoff vs quantile boundaries: equal-width bins balance work
-    only for roughly-uniform value distributions — heavy value skew
-    concentrates rows in few buckets and fattens the in-bucket window
-    task.  For unknown/skewed distributions ``global_rank``'s default
-    eager quantile probe balances better; correctness is unaffected
-    either way (buckets only balance work).  Same contract as
-    ``_with_buckets``: monotone buckets (equal values share one),
-    NULLs in dedicated bucket -1.  A constant column (max == min)
-    degenerates to one bucket, never a NULL bucket."""
+    A plan-embedded ``percentile_approx`` variant was MEASURED SLOWER
+    (2.44 s vs 1.34 s on xq8 at sf0.1): Catalyst does not reuse the
+    aggregate across the branches that embed the bucketed frame, so the
+    sketch pass ran once per branch.  min/max pays the same per-branch
+    duplication, but each pass is a cheap codegen'd hash aggregate."""
     mm = df.agg(
-        F.min(value_col).alias("__lo"), F.max(value_col).alias("__hi")
+        F.min(value_col).cast("double").alias("__lo"),
+        F.max(value_col).cast("double").alias("__hi"),
     )
     v = F.col(value_col)
-    span = (F.col("__hi") - F.col("__lo")).cast("double")
+    span = F.col("__hi") - F.col("__lo")
     idx = F.floor(
-        (v - F.col("__lo")).cast("double") / (span / n_buckets)
+        (v.cast("double") - F.col("__lo")) / (span / n_buckets)
     ).cast("int")
     bucket = F.when(v.isNull(), F.lit(-1)).otherwise(
         F.when(span <= 0, F.lit(0)).otherwise(
@@ -128,7 +91,6 @@ def global_rank(
     n_buckets: int = 32,
     rank_col: str = "rank",
     group_cols: list[str] | None = None,
-    fused: bool = False,
 ) -> DataFrame:
     """Attach a 1-based dense row number ordered by
     (value_col, *tiebreak_cols) — globally, or WITHIN each distinct
@@ -139,19 +101,16 @@ def global_rank(
     consumers that only read the VALUE at a rank (quantiles) tolerate
     duplicate values with an empty tiebreak.
 
-    One quantile-boundary set serves every group — boundaries only
-    balance work, never affect correctness; the offsets frame grows to
-    (groups × buckets) rows, still bounded commit metadata for the
-    grouped-aggregate cardinalities this serves.  ``fused=True`` embeds
-    the boundary probe in the plan (_with_buckets_fused) instead of an
-    eager driver-side approxQuantile job — right when the caller has no
-    skewed value distribution to balance."""
+    One equal-width bucketing (``_with_buckets``, probed inside the
+    plan — building launches no Spark job) serves every group; buckets
+    only balance work, never affect correctness.  The offsets frame
+    grows to (groups × buckets) rows, still bounded commit metadata for
+    the grouped-aggregate cardinalities this serves.  Balance trade-off:
+    on heavy-tailed columns the largest bucket holds more rows than
+    quantile boundaries would give it (xq7 at sf0.1: 10.1 % vs 3.2 %;
+    xt24: 4.0 % vs 3.3 %), which fattens one in-bucket window task."""
     g = list(group_cols or [])
-    with_bucket = (
-        _with_buckets_fused(df, value_col, n_buckets)
-        if fused
-        else _with_buckets(df, value_col, n_buckets)
-    )
+    with_bucket = _with_buckets(df, value_col, n_buckets)
     counts = with_bucket.groupBy(*g, "__bucket").agg(
         F.count("*").alias("__n")
     )
@@ -197,10 +156,12 @@ def weighted_quantile_crossing(
     window.  No full-data shuffle, no prefix sum over every row —
     against ``SUM(w) OVER (ORDER BY v)``'s single-partition sort.
 
-    The boundary probe is embedded in the SAME plan
-    (_with_buckets_fused) — no eager driver-side approxQuantile job;
-    the r8 profile showed that eager job was 0.58 s of xq8's 1.00 s
-    wall at sf0.1.
+    Buckets come from the shared in-plan assigner (``_with_buckets``):
+    no eager driver-side job — the r8 profile showed the former eager
+    approxQuantile probe was 0.58 s of xq8's 1.00 s wall at sf0.1.  On
+    heavy-tailed values the equal-width crossing bucket can hold more
+    than 1/n_buckets of the rows (see the module docstring); the
+    answer is unaffected.
 
     Duplicate values need no pre-aggregation: the filtered set is a
     suffix of the value order, so MIN(value) over it is the crossing
@@ -208,7 +169,7 @@ def weighted_quantile_crossing(
     src = df.select(value_col, weight_col).filter(
         F.col(value_col).isNotNull()
     )
-    wb = _with_buckets_fused(src, value_col, n_buckets)
+    wb = _with_buckets(src, value_col, n_buckets)
     bt = wb.groupBy("__bucket").agg(F.sum(weight_col).alias("__w"))
     w_off = Window.orderBy("__bucket").rowsBetween(
         Window.unboundedPreceding, -1
@@ -262,7 +223,9 @@ def global_prefix_max(
     this is the same bucket decomposition as global_rank with a
     MAX carry: per-bucket maxima, an exclusive running max over the
     bounded bucket frame, and an intra-bucket exclusive-max window
-    partitioned by bucket.
+    partitioned by bucket.  Same in-plan equal-width bucketing and the
+    same balance trade-off as global_rank; building launches no Spark
+    job.
 
     The exclusive frame is what 2D skyline/Pareto pruning needs: a
     point survives iff its second dimension exceeds every strictly

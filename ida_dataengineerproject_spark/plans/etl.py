@@ -29,6 +29,8 @@ Fact writes partition by (ano) so time-range queries prune files.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -45,6 +47,7 @@ from ..operators.cleaning import (
 )
 from ..operators.reshape import forward_fill, month_columns, unpivot_months
 from ..operators.upsert import dedup_against
+from ..session import run_concurrently
 
 
 def transform_wide(wide: DataFrame) -> DataFrame:
@@ -212,11 +215,12 @@ def write_star(star: dict[str, DataFrame], base_dir: str) -> None:
 
     The five table writes are independent jobs (the fact write reuses
     the LAZY tempo dim frame, never the dim files), so they run from a
-    small thread pool (guide §2.6 — overlap independent jobs): wall is
-    the slowest write, not the sum of five job round-trips.  On a cluster
-    the later jobs back-fill executors freed by the earlier jobs' tails.
-    Each pool target inherits the caller's local properties (job group,
-    description) and tags, so the writes stay attributed to the caller.
+    small thread pool (``session.run_concurrently``; guide §2.6 —
+    overlap independent jobs): wall is the slowest write, not the sum of
+    five job round-trips.  On a cluster the later jobs back-fill
+    executors freed by the earlier jobs' tails.  Each pool target
+    inherits the caller's local properties (job group, description) and
+    tags, so the writes stay attributed to the caller.
 
     Concurrency caveats (ADVICE r12): the FIRST failure is raised only
     after every in-flight write finishes — a failed fact write can
@@ -226,14 +230,9 @@ def write_star(star: dict[str, DataFrame], base_dir: str) -> None:
     mutation on this session from another thread (e.g. graph.py's AQE
     scope) would leak into these writes — don't run write_star
     concurrently with scoped-conf operators on the same session."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
     spark = star["fact_ida"].sparkSession
 
-    def write_one(item: tuple[str, DataFrame]) -> None:
-        name, df = item
+    def write_one(name: str, df: DataFrame) -> None:
         if name == "fact_ida":
             with_ano = df.join(
                 F.broadcast(star["dim_tempo"].select("tempo_key", "ano")), "tempo_key"
@@ -246,13 +245,6 @@ def write_star(star: dict[str, DataFrame], base_dir: str) -> None:
             # one output file each instead of shuffle.partitions files
             df.coalesce(1).write.mode("overwrite").parquet(f"{base_dir}/{name}")
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        # wrap each target here, in the caller's thread: every write gets
-        # its own copy of the caller's local properties (Spark SQL sets
-        # its execution id in them, so one copy must not be shared)
-        futures = [
-            pool.submit(inheritable_thread_target(spark)(write_one), item)
-            for item in star.items()
-        ]
-        for f in futures:
-            f.result()  # the first failure propagates
+    run_concurrently(
+        spark, [partial(write_one, name, df) for name, df in star.items()]
+    )

@@ -269,9 +269,11 @@ def q_xq7(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Gini needs every row's GLOBAL rank — the one statistic that naively
     forces a single-partition sort.  Uses operators/ranking.global_rank
-    (bucketed two-level ranking: quantile-bounded buckets + per-bucket
-    row_number + bounded offset cumsum) so the only unpartitioned step
-    touches <= n_buckets rows.  All arithmetic is exact: revenue in
+    (bucketed two-level ranking: equal-width buckets from an in-plan
+    min/max probe + per-bucket row_number + bounded offset cumsum) so
+    the only unpartitioned steps merge the probe's per-partition
+    partials and the <= n_buckets bucket counts, and building the plan
+    launches no Spark job.  All arithmetic is exact: revenue in
     integer cents, rank*revenue accumulated in DECIMAL(38,0), one final
     double division — bit-identical across engines (ROUND_NOTES trap 4).
     Formula: G = (2*Σ i*x_(i) − (n+1)*Σx) / (n*Σx) over ascending x.
@@ -283,8 +285,8 @@ def q_xq7(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.sum(F.col("o_totalprice").cast("decimal(18,2)")) * 100)
         .cast("long")
         .alias("revc")
-        # global_rank consumes this frame three times (boundary probe,
-        # bucket counts, rank join) — materialize the per-customer
+        # global_rank consumes this frame three times (min/max bucket
+        # probe, bucket counts, rank join) — materialize the per-customer
         # aggregate once instead of re-running the orders groupBy per
         # arm (the xq11 lesson; measured 1.54 -> 1.13 s at sf0.1)
     ).localCheckpoint()
@@ -360,7 +362,7 @@ def q_xq7b(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.sum(F.col("o_totalprice").cast("decimal(18,2)")) * 100)
         .cast("long")
         .alias("revc")
-        # four consumers (boundary probe, bucket counts, rank join,
+        # four consumers (min/max bucket probe, bucket counts, rank join,
         # totals) — materialize once, as in xq7/xq11
     ).localCheckpoint()
     ranked = global_rank(rev, "revc", ["o_custkey"], rank_col="i")

@@ -218,8 +218,10 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the hash is two integer multiplies in codegen
     (functions/hashing.py CW family, property-tested cross-engine); the
     per-stratum rank is operators/ranking.global_rank with
-    ``group_cols`` — quantile-bucketed two-level ranking whose only
-    unpartitioned step touches (strata × buckets) offset rows, never a
+    ``group_cols`` — two-level ranking over in-plan equal-width buckets
+    (one min/max probe shared by every stratum) whose only
+    unpartitioned steps merge the probe's per-partition partials and
+    the (strata × buckets) bucket counts, never a
     per-stratum sort buffer (the naive row_number() OVER (PARTITION BY
     lang) puts an entire language — half the corpus, for English — in
     one task).  Stratum sizes join back from the bounded count frame.

@@ -275,12 +275,12 @@ def q_x30(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Cormack et al. 2009): score = Σ 1/(k + rank_i), k = 60, no score
     calibration needed because only ranks enter.
 
-    Scale shape: each ranking comes from global_rank (quantile-bucketed
+    Scale shape: each ranking comes from global_rank (bucketed
     two-level rank — the oracle's ROW_NUMBER() OVER (ORDER BY …) is the
-    single-partition cliff it replaces) with PLAN-EMBEDDED boundary
-    probes (fused=True): the r8 profile showed the eager shared
-    approxQuantile job was 0.94 s of the 1.29 s wall, so both boundary
-    aggregates now ride the single main job over the checkpointed
+    single-partition cliff it replaces), whose min/max bucket probes
+    are embedded in the plan: the r8 profile showed an eager shared
+    approxQuantile job was 0.94 s of the 1.29 s wall, so both probe
+    aggregates ride the single main job over the checkpointed
     3-column frame (its broadcast exchanges are reused across the rank
     branches).  The fusion join keys on doc_id (co-partitioned,
     high-cardinality) and the top-50 is TakeOrderedAndProject.  A
@@ -302,14 +302,11 @@ def q_x30(spark: SparkSession, sf_dir: str) -> DataFrame:
         # materialize the 3-column frame once so the text scan +
         # quality expression run a single time
     ).localCheckpoint()
-    n_buckets = 32
     rq = global_rank(
-        d.select("doc_id", "nq"), "nq", ["doc_id"], n_buckets,
-        rank_col="r_q", fused=True,
+        d.select("doc_id", "nq"), "nq", ["doc_id"], rank_col="r_q"
     ).select("doc_id", "r_q")
     rl = global_rank(
-        d.select("doc_id", "nl"), "nl", ["doc_id"], n_buckets,
-        rank_col="r_len", fused=True,
+        d.select("doc_id", "nl"), "nl", ["doc_id"], rank_col="r_len"
     ).select("doc_id", "r_len")
     j = rq.join(rl, "doc_id")
     rrf = F.lit(1.0) / (F.lit(60) + F.col("r_q")) + F.lit(1.0) / (

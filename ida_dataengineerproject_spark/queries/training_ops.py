@@ -440,9 +440,10 @@ def q_xt24(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the oracle's ROW_NUMBER() OVER (ORDER BY ...) is a
     single-partition global sort — the exact cliff operators/ranking.py
-    exists to remove.  The Spark side ranks via global_rank (quantile-
-    bucketed two-level rank: the only single-partition step touches
-    <= n_buckets aggregated rows), then the snake arithmetic and the
+    exists to remove.  The Spark side ranks via global_rank (two-level
+    rank over equal-width buckets probed inside the plan: the only
+    single-partition steps merge the min/max probe's per-partition
+    partials and <= n_buckets aggregated rows), then the snake arithmetic and the
     per-shard rollup are pure codegen.  Ranking by (-n_chars, doc_id)
     keeps the order total, so shard assignment is bit-deterministic."""
     from ..operators.ranking import global_rank

@@ -10,6 +10,7 @@ coalescing) is the same one you'd want on a 1000-executor cluster — only
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
@@ -134,6 +135,30 @@ def scoped_conf(spark: SparkSession, confs: dict):
                 logging.getLogger(__name__).warning(msg)
             else:
                 raise RuntimeError(msg) from errors[0][1]
+
+
+def run_concurrently(spark: SparkSession, fns: list[Callable[[], object]]) -> list:
+    """Run independent zero-argument callables (one Spark action each,
+    typically a write) on a thread pool and return their results in
+    order: wall is the slowest job, not the sum of their round-trips.
+    At most three run at once — enough to overlap job round-trips; more
+    would only queue for the same executor slots.
+
+    Each target is wrapped in ``inheritable_thread_target(spark)`` here,
+    in the caller's thread, one wrap per target: its jobs carry the
+    caller's local properties (job group, description) and tags, and no
+    two threads share one copy of them (Spark SQL sets its execution id
+    there).  The first failure, in submission order, is re-raised once
+    every target has finished — so a failed target may leave its
+    siblings' output behind."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    targets = [inheritable_thread_target(spark)(fn) for fn in fns]
+    with ThreadPoolExecutor(max_workers=3) as pool:
+        futures = [pool.submit(t) for t in targets]
+    return [f.result() for f in futures]
 
 
 def get_spark(app_name: str = "ida-spark", shuffle_partitions: int | None = None) -> SparkSession:

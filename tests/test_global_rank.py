@@ -1,11 +1,13 @@
 """Contract tests for operators/ranking.global_rank.
 
 The bucketed two-level rank must equal the naive single-partition
-window rank exactly, for any bucket boundaries — including the
-degenerate constant-column case where every boundary dedupes away.
+window rank exactly, for any bucketing — including the degenerate
+constant-column case where every row shares one bucket.
 """
 
 from __future__ import annotations
+
+import re
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -61,17 +63,75 @@ def test_heavy_skew_still_exact(spark):
 
 
 def test_only_bounded_single_partition_exchange(spark):
+    """Every single-partition exchange in the executed plan sits directly
+    on an aggregate with bounded output: the keyless partial min/max of
+    the bucket probe (one row per map partition) or the per-bucket counts
+    the offset cumsum runs over (<= n_buckets rows) — never on raw rows."""
     rev = (
         table(spark, SF, "orders")
         .groupBy("o_custkey")
         .agg(F.sum("o_totalprice").cast("long").alias("v"))
     )
     df = global_rank(rev, "v", ["o_custkey"])
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    lines = plan.splitlines()
+    node = r"^[\s:|+-]*(?:\*\(\d+\) )?"
+    found = 0
+    for line, child in zip(lines, lines[1:]):
+        if not re.match(node + "Exchange SinglePartition", line):
+            continue
+        found += 1
+        agg = re.match(
+            node + r"HashAggregate\(keys=\[(.*?)\], functions=\[(.*?)\]",
+            child,
+        )
+        assert agg, (line, child)
+        keys, fns = agg.groups()
+        probe = keys == "" and re.fullmatch(
+            r"partial_min\(\S+\), partial_max\(\S+\)", fns
+        )
+        assert probe or keys.startswith("__bucket#"), (line, child)
+    assert found >= 1, plan
+
+
+def test_wide_long_range_spreads_over_buckets(spark):
+    """xxhash64 keys span nearly the whole long range, so max - min
+    exceeds 2^63: bin arithmetic in the column's own type wraps (ANSI is
+    off) and put every row in one bucket — one in-bucket window task
+    over the whole table.  The bins must spread, and ranks stay exact."""
+    from ida_dataengineerproject_spark.operators.ranking import _with_buckets
+
+    df = spark.range(1000).select("id", F.xxhash64("id").alias("v"))
+    sizes = [
+        r["count"]
+        for r in _with_buckets(df, "v", 32).groupBy("__bucket").count().collect()
+    ]
+    assert len(sizes) > 1 and max(sizes) < 100, sorted(sizes)
+    got = {r["id"]: r["rank"] for r in global_rank(df, "v", ["id"]).collect()}
+    want = {r["id"]: r["rank"] for r in _naive(df, "v", ["id"]).collect()}
+    assert got == want
+
+
+def test_building_ranking_plans_launches_no_job(spark):
+    """The bucket probe runs inside the returned plan: building a ranking
+    operator over a lazy input launches no Spark job (an eager
+    approxQuantile boundary probe used to run one per call)."""
+    from ida_dataengineerproject_spark.operators.ranking import (
+        global_prefix_max,
+        weighted_quantile_crossing,
     )
-    # exactly one SinglePartition exchange: the <=n_buckets offset cumsum
-    assert plan.count("Arguments: SinglePartition") == 1, plan
+
+    df = spark.range(1000).select(
+        "id", (F.col("id") * 7 % 101).alias("v"), (F.col("id") % 3).alias("g")
+    )
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    before = scheduler.nextJobId()
+    global_rank(df, "v", ["id"])
+    global_rank(df, "v", ["id"], group_cols=["g"])
+    global_prefix_max(df, "v", "id", ["id"])
+    weighted_quantile_crossing(df, "v", "id")
+    assert scheduler.nextJobId() == before
 
 
 def test_null_values_rank_first_not_dropped(spark):

@@ -278,6 +278,32 @@ def test_scoped_conf_restores_and_surfaces_failures(spark):
             fake2.conf._armed = True
 
 
+def test_run_concurrently_keeps_order_and_raises_first_failure(spark):
+    """run_concurrently returns results in submission order; when
+    targets fail it re-raises the first failure, after every target ran."""
+    from functools import partial
+
+    import pytest
+
+    from ida_dataengineerproject_spark.session import run_concurrently
+
+    assert run_concurrently(spark, [lambda i=i: i * i for i in range(5)]) == [
+        0, 1, 4, 9, 16,
+    ]
+    assert run_concurrently(spark, []) == []
+    ran = []
+
+    def boom(msg):
+        raise ValueError(msg)
+
+    with pytest.raises(ValueError, match="first"):
+        run_concurrently(
+            spark,
+            [partial(boom, "first"), lambda: ran.append(1), partial(boom, "second")],
+        )
+    assert ran == [1]
+
+
 def test_bloom_bitmap_self_probe_and_bit_edges(spark):
     """Every position in the sparse table must pass the packed-bitmap
     probe — including bit 0 of a word whose bit 63 is ALSO set (the

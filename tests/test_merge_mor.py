@@ -189,6 +189,32 @@ def test_read_mor_dv_only_bucket_selection_returns_typed_empty(
     assert out.count() == 0
 
 
+def test_upsert_commit_jobs_carry_caller_job_group(spark, mor_table):
+    """The commit's pooled deletion-vector and append writes inherit the
+    caller's job group, so every job upsert_mor launches is attributed
+    to the caller."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    ch = spark.createDataFrame(
+        [(3, "upd-3", 333, False), (7, None, None, True)],
+        "k long, name string, val long, dead boolean",
+    )
+    sc.setJobGroup("upsert-mor-caller", "upsert_mor job-group test")
+    try:
+        first = jsc.dagScheduler().nextJobId()
+        upsert_mor(spark, mor_table, ch, tombstone_col="dead")
+        last = jsc.dagScheduler().nextJobId()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jsc.listenerBus().waitUntilEmpty()
+    assert last - first >= 2  # at least the DV write and the append write
+    groups = [jsc.statusStore().job(j).jobGroup() for j in range(first, last)]
+    assert {g.get() if g.isDefined() else None for g in groups} == {
+        "upsert-mor-caller"
+    }
+
+
 def test_concurrent_commit_claim_blocks_second_writer(spark, mor_table):
     """Two writers that both computed version n+1: the second create of
     the commit lock fails BEFORE any data is written."""
