@@ -144,19 +144,6 @@ def ngram_shingles(text: Column | str, n: int = 3) -> Column:
     return let1(tokens(text), grams_of)
 
 
-def rolling_fingerprint(text: Column | str, window: int = 8) -> Column:
-    """Document fingerprint: min of xxhash64 over character n-gram windows
-    (winnowing-style rolling hash, one representative hash per doc)."""
-    c = F.col(text) if isinstance(text, str) else text
-    norm = F.regexp_replace(F.lower(F.trim(c)), r"\s+", " ")
-    count = F.greatest(F.length(norm) - F.lit(window - 1), F.lit(1))
-    hashes = F.transform(
-        F.sequence(F.lit(1), count),
-        lambda i: F.xxhash64(norm.substr(i, F.lit(window))),
-    )
-    return F.array_min(hashes)
-
-
 def rolling_fingerprint_kr(norm: Column | str, window: int = 8) -> Column:
     """Karp-Rabin rolling fingerprint: min base-31 polynomial hash over
     ``window``-CHARACTER windows of an (already normalized) string —

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from ..functions.exprs import let1
 from ..functions.textstats import ngram_shingles
+from ..session import materialize
 
 
 # ---------------------------------------------------------------- exact
@@ -181,8 +182,6 @@ def minhash_lsh_pairs(
     batch (_banded_minhash_pandas); the exact-Jaccard verification step
     makes the final pairs hash-family-independent above the threshold.
     """
-    from pyspark.storagelevel import StorageLevel
-
     sh = df.select(
         F.col(id_col).alias("id"), ngram_shingles(text_col, n).alias("sh")
     ).filter(F.size("sh") > 0)
@@ -194,12 +193,10 @@ def minhash_lsh_pairs(
         sh = sh.repartition(target)
     # THREE consumers read sh (banding, and both sides of the verify
     # join): materialize it once instead of recomputing scan + shingle
-    # build per consumer (guide §8: compute the proxy once).  DISK_ONLY —
-    # shingle arrays are corpus-sized; keep them off the unified pool
-    # (the graph.py r9 storage-squeeze lesson) and let the page cache
-    # serve re-reads.  r12 measured at sf0.1: pipeline 3.4 → 2.6 s,
-    # x02b 1.55 → 1.34 s, pair set identical.
-    sh = sh.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+    # build per consumer (guide §8: compute the proxy once).  r12
+    # measured at sf0.1: pipeline 3.4 → 2.6 s, x02b 1.55 → 1.34 s, pair
+    # set identical.
+    sh = materialize(sh)
 
     banded = _banded_minhash_pandas(sh, k, bands)
 
@@ -357,11 +354,9 @@ def simhash_pairs(
         raise ValueError("need n_chunks >= max_hamming+1 for pigeonhole recall")
     chunks = simhash_chunks(df, id_col, text_col, n_chunks, chunk_bits)
     # both sides of the banding self-join read chunks — without this the
-    # signature stage (the mapInPandas kernel) executes
-    # twice; the frame is narrow fixed-width rows (id, sig, chunk, cv),
-    # so the default storage level is fine.  r12 measured at sf0.1:
-    # 1.15 → 0.79 s, pair set identical.
-    chunks = chunks.localCheckpoint(eager=True)
+    # signature stage (the mapInPandas kernel) executes twice.  r12
+    # measured at sf0.1: 1.15 → 0.79 s, pair set identical.
+    chunks = materialize(chunks)
     # unrolled per-chunk XOR popcount: plain expressions stay inside
     # whole-stage codegen, where a zip_with/aggregate lambda would be
     # interpreted per candidate pair — and on a near-duplicate-heavy

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import materialize, scoped_conf
+
 
 def connected_components(
     edges: DataFrame,
@@ -39,13 +41,12 @@ def connected_components(
         .unionAll(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
         .distinct()
     )
-    sym = sym.localCheckpoint(eager=True)
+    sym = materialize(sym)
 
-    labels = (
+    labels = materialize(
         sym.select(F.col("u").alias("node"))
         .distinct()
         .withColumn("comp", F.col("node"))
-        .localCheckpoint(eager=True)
     )
 
     for _ in range(max_iter):
@@ -61,14 +62,13 @@ def connected_components(
         # the change flag rides along in the SAME select (old comp is
         # already in scope), so convergence costs one scan of the
         # checkpoint — not a second labels-vs-labels join job per round
-        staged = (
+        staged = materialize(
             labels.join(neighbor_min, labels.node == neighbor_min.u, "left")
             .select(
                 "node",
                 new_comp.alias("comp"),
                 (new_comp < F.col("comp")).alias("chg"),
             )
-            .localCheckpoint(eager=True)
         )
         changed = staged.filter("chg").limit(1).count()
         labels = staged.drop("chg")
@@ -160,10 +160,6 @@ def count_triangles(
     2.0 s at sf0.1) — the per-batch flatten/sort outweighs the hash-set
     probes it replaces; probe committed in ROUND_NOTES round 7.
     """
-    from pyspark.storagelevel import StorageLevel
-
-    from ..session import scoped_conf
-
     spark = edges.sparkSession
     parallelism = spark.sparkContext.defaultParallelism
     # self-loops dropped once, here, so both build regimes agree: the
@@ -172,16 +168,9 @@ def count_triangles(
     und = edges.select(
         F.col(src).alias("p1"), F.col(dst).alias("p2")
     ).where(F.col("p1") != F.col("p2"))
-    # two consumers in either regime — materialize once.  DISK_ONLY,
-    # not the MEMORY_AND_DISK(deserialized) default: at x100 the edge
-    # snapshot is 10⁸ rows, and deserialized block storage pins
-    # gigabytes of the unified pool (storageFraction-protected from
-    # eviction), starving the very hash aggregates that read it — the
-    # r9 16 g AGGREGATE_OUT_OF_MEMORY landed in the degree/distinct
-    # stage, not the adjacency build.  Serialized long-pairs are
-    # compact and the OS page cache keeps re-reads memory-speed without
-    # touching the JVM heap.
-    und = und.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+    # two consumers in either regime — materialize once (at x100 this
+    # is the 10⁸-row snapshot behind session.materialize's storage level)
+    und = materialize(und)
     # pre-build gate number: a count over executor-local blocks (~0.1 s
     # of job overhead at sf0.1) — the only number needed before the
     # build-shape decision
@@ -194,7 +183,10 @@ def count_triangles(
             F.col("p1").alias("n"), F.col("p2").alias("v")
         ).unionAll(und.select(F.col("p2").alias("n"), F.col("p1").alias("v")))
         gather = F.collect_list if edges_unique else F.collect_set
-        full = (
+        # three consumers (gate numbers, degree side, adjacency build);
+        # rebuilding it per consumer was slower at sf0.1: x24 7.7 → 9.4 s,
+        # in 6 of 6 interleaved pairs
+        full = materialize(
             sym.groupBy("n")
             .agg(gather("v").alias("nbrs"))
             .withColumn("deg", F.size("nbrs"))
@@ -202,7 +194,6 @@ def count_triangles(
             # array stages at full parallelism (byte-based AQE coalesce
             # would squash these byte-light array rows onto ~3 tasks)
             .repartition(parallelism)
-            .localCheckpoint()
         )
         # exact gate numbers: every simple undirected edge contributes
         # 2 to Σdeg of the full adjacency
@@ -219,29 +210,26 @@ def count_triangles(
         rank_up = (F.col("deg") < F.col("deg_v")) | (
             (F.col("deg") == F.col("deg_v")) & (F.col("n") < F.col("v"))
         )
-        adj = (
+        adj = materialize(
             full.select("n", "deg", F.explode("nbrs").alias("v"))
             .join(degf, "v")
             .where(rank_up)
             .groupBy("n")
             .agg(F.collect_list("v").alias("nbrs"))
             .repartition(parallelism)
-            .localCheckpoint()
         )
         n_nodes = full.agg(F.count("*").alias("n_nodes"))
         adj_u = F.col("n")
     else:
         # ---- huge regime: r6-r12 shape (partial-aggregated degree
         # pass + degree-attach joins + sort-aggregate oriented build)
-        deg = (
+        # node-bounded; consumed by BOTH orientation joins (and the
+        # n_nodes arm) — without this the aggregation runs per consumer
+        deg = materialize(
             und.select(F.col("p1").alias("node"))
             .unionByName(und.select(F.col("p2").alias("node")))
             .groupBy("node")
             .agg(F.count("*").alias("deg"))
-            # node-bounded; consumed by BOTH orientation joins (and the
-            # n_nodes arm) — without this the aggregation runs per
-            # consumer
-            .localCheckpoint()
         )
         d1 = deg.withColumnRenamed("node", "p1").withColumnRenamed("deg", "deg1")
         d2 = deg.withColumnRenamed("node", "p2").withColumnRenamed("deg", "deg2")
@@ -261,30 +249,21 @@ def count_triangles(
         n_edges_m = int(_gate["sd"] or 0) // 2
         adj_bytes = n_edges_m * 16 + n_nodes_m * 64
         gather = F.collect_list if edges_unique else F.collect_set
-
-        def build_adj():
-            # fresh frame per call: a DataFrame memoizes its physical
-            # plan, so the sort-aggregate conf below must be live when
-            # the plan is FIRST materialized
-            return (
+        # an adjacency too big to broadcast is the largest object in the
+        # job: build it with the sort-based aggregate.  The frame is
+        # made inside the scope — a DataFrame memoizes its physical
+        # plan, so the conf must be live when the plan is first made
+        sort_agg = (
+            {}
+            if adj_bytes <= broadcast_limit_bytes
+            else {"spark.sql.execution.useObjectHashAggregateExec": "false"}
+        )
+        with scoped_conf(spark, sort_agg):
+            adj = materialize(
                 oriented.groupBy("u")
                 .agg(gather("v").alias("nbrs"))
                 .repartition(parallelism)
             )
-
-        if adj_bytes <= broadcast_limit_bytes:
-            adj = build_adj().localCheckpoint()
-        else:
-            with scoped_conf(
-                spark,
-                {"spark.sql.execution.useObjectHashAggregateExec": "false"},
-            ):
-                # DISK_ONLY for the same storage-squeeze reason as
-                # `und`: the huge-regime adjacency is the largest
-                # object in the job
-                adj = build_adj().localCheckpoint(
-                    eager=True, storageLevel=StorageLevel.DISK_ONLY
-                )
         n_nodes = deg.agg(F.count("*").alias("n_nodes"))
         adj_u = F.col("u")
 

@@ -37,6 +37,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import materialize
+
 BUCKET_COL = "__mbucket"
 
 
@@ -70,16 +72,14 @@ def merge_cow(
 
     Returns {"n_buckets": ..., "impacted_buckets": [...]} — bounded
     commit metadata, mirroring a table format's commit record."""
-    from pyspark.storagelevel import StorageLevel
-
     from ..sources.ingest_ledger import _hadoop_fs
 
     # materialize the changeset once — three consumers (impacted
     # collect, anti-join key set, merged write) otherwise re-run its
     # lineage (r13; see merge_versioned)
-    ch = changes.withColumn(
-        BUCKET_COL, bucket_of(F.col(key), n_buckets)
-    ).localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+    ch = materialize(
+        changes.withColumn(BUCKET_COL, bucket_of(F.col(key), n_buckets))
+    )
     impacted = sorted(
         r[0] for r in ch.select(BUCKET_COL).distinct().collect()
     )
@@ -343,8 +343,6 @@ def merge_versioned(
     """MERGE `changes` into the latest version, committing version n+1.
     Only impacted buckets get new directories; every other bucket entry
     carries over, so old versions remain readable and byte-stable."""
-    from pyspark.storagelevel import StorageLevel
-
     log = _read_log(spark, path)
     key, n_buckets = log["key"], log["n_buckets"]
     new_version = log["version"] + 1
@@ -353,16 +351,15 @@ def merge_versioned(
     # this writer's data/v{n} directories (ADVICE r5)
     _claim_commit(spark, path, new_version)
 
-    # materialize the changeset ONCE (O(changeset) rows, DISK_ONLY):
-    # it is consumed by the impacted-bucket collect, the anti-join key
-    # set AND the merged write, and its lineage may be arbitrarily
-    # expensive (e.g. a filter over read_version of this very table) —
-    # without this every consumer re-ran it (r13).  Materializing
-    # pre-commit also pins the change rows before any directory of this
-    # table moves.
-    ch = changes.withColumn(
-        BUCKET_COL, bucket_of(F.col(key), n_buckets)
-    ).localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+    # materialize the changeset ONCE (O(changeset) rows): it is consumed
+    # by the impacted-bucket collect, the anti-join key set AND the
+    # merged write, and its lineage may be arbitrarily expensive (e.g. a
+    # filter over read_version of this very table) — without this every
+    # consumer re-ran it (r13).  Materializing pre-commit also pins the
+    # change rows before any directory of this table moves.
+    ch = materialize(
+        changes.withColumn(BUCKET_COL, bucket_of(F.col(key), n_buckets))
+    )
     impacted = sorted(
         int(r[0]) for r in ch.select(BUCKET_COL).distinct().collect()
     )

@@ -51,7 +51,7 @@ from functools import partial
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import run_concurrently
+from ..session import materialize, run_concurrently
 from .merge_cow import (
     BUCKET_COL,
     _claim_commit,
@@ -134,8 +134,6 @@ def upsert_mor(
     append file set holding the non-tombstoned replacement rows.  Change
     keys must be unique (one decision per key per commit).  No existing
     file is touched."""
-    from pyspark.storagelevel import StorageLevel
-
     log = _read_log(spark, path)
     key, n_buckets = log["key"], log["n_buckets"]
     c = log["version"] + 1
@@ -143,14 +141,13 @@ def upsert_mor(
     # race fails here, not after clobbering the winner's v{c} directories
     _claim_commit(spark, path, c)
 
-    # materialize the changeset ONCE (O(changeset) rows, DISK_ONLY):
-    # both commit files below consume it, and its lineage may be
-    # arbitrarily expensive (a filter over the live table, a 3-branch
-    # CDC union...) — without this each write re-ran it (r13, §6
-    # compute-the-proxy-once)
-    ch = changes.withColumn(
-        BUCKET_COL, bucket_of(F.col(key), n_buckets)
-    ).localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+    # materialize the changeset ONCE (O(changeset) rows): both commit
+    # files below consume it, and its lineage may be arbitrarily
+    # expensive (a filter over the live table, a 3-branch CDC union...)
+    # — without this each write re-ran it (r13, §6 compute-the-proxy-once)
+    ch = materialize(
+        changes.withColumn(BUCKET_COL, bucket_of(F.col(key), n_buckets))
+    )
     dv = ch.select(
         F.col(key), F.col(BUCKET_COL), F.lit(c).cast("long").alias(COMMIT_COL)
     )

@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import materialize
+
 
 def _with_buckets(
     df: DataFrame,
@@ -310,7 +312,7 @@ def grouped_quantiles_band(
     EAGER/SNAPSHOT CONTRACT: building this plan runs one Spark job (the
     band scan is collected to the driver so the ≤64-group literal path
     can inline bounds as codegen'd literals; the >64-group path
-    localCheckpoints the same frame).  The returned DataFrame therefore
+    materializes the same frame).  The returned DataFrame therefore
     snapshots the SOURCE AS OF BUILD TIME for its band bounds and group
     counts: re-executing it after the underlying data changes reuses
     the stale bounds (the in-band confirm re-reads live data, so the
@@ -415,8 +417,9 @@ def grouped_quantiles_band(
             literal_ok = False
 
     if not literal_ok:
-        bands = bands.localCheckpoint()  # band scan must not re-run per
-        # consumer; checkpoint replaces the collected literals
+        # the band scan must not re-run per consumer; the materialized
+        # frame replaces the collected literals
+        bands = materialize(bands)
         if g:
             # NULL-SAFE band attach: a NULL group key is a legal grouping
             # value (groupBy puts all NULLs in one group), and a plain

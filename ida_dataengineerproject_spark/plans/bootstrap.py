@@ -13,14 +13,6 @@ from pyspark.sql import SparkSession
 
 from ..sources.tables import load_tables
 
-STAR_TABLES = [
-    "dim_tempo",
-    "dim_grupo_economico",
-    "dim_servico",
-    "dim_variavel",
-    "fact_ida",
-]
-
 
 def bootstrap_views(spark: SparkSession, sf_dir: str) -> list[str]:
     """Register every testdata table as a temp view (the engine's
@@ -28,15 +20,6 @@ def bootstrap_views(spark: SparkSession, sf_dir: str) -> list[str]:
     names = []
     for name, df in load_tables(spark, sf_dir).items():
         df.createOrReplaceTempView(name)
-        names.append(name)
-    return names
-
-
-def bootstrap_star(spark: SparkSession, star_dir: str) -> list[str]:
-    """Register a persisted star schema (plans/etl.write_star output)."""
-    names = []
-    for name in STAR_TABLES:
-        spark.read.parquet(f"{star_dir}/{name}").createOrReplaceTempView(name)
         names.append(name)
     return names
 

@@ -16,25 +16,21 @@ and the near-dup drop set is usually tiny → broadcast anti-join.
 
 Laziness caveat (ADVICE r12): calling ``prepare_documents`` (and the
 minhash/simhash operators it uses) runs Spark jobs AT CONSTRUCTION TIME
-— the deduped frame is eagerly localCheckpoint'ed (DISK_ONLY) because
-two consumers would otherwise re-run the scan + regex gates + dedup
-window.  The checkpoint barrier also blocks downstream filter pushdown
-past stage 3, and executor-local checkpoint blocks are not
-fault-tolerant: on a cluster, losing an executor mid-query fails the
-job (fail-fast) instead of recomputing — acceptable for a pipeline
-step that is simply re-run; a long-lived deployment would swap in a
-reliable checkpoint dir or persist-with-replication.
+— the deduped frame goes through ``session.materialize`` because two
+consumers would otherwise re-run the scan + regex gates + dedup window.
+That helper's docstring holds what this costs: no filter pushdown past
+stage 3, and blocks that do not survive executor loss.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from ..functions.hashing import text_fingerprint
 from ..functions.textstats import lang_id, n_tokens, quality_score, token_count_bpe_ish
 from ..operators.dedup import exact_dedup, minhash_lsh_pairs
+from ..session import materialize
 from ..sources.tables import table
 
 
@@ -60,11 +56,9 @@ def prepare_documents(
     # TWO consumers re-run the scan + regex gates + dedup window otherwise
     # (the near-dup pair build and the survivors anti-join side) — the
     # quality/lang regexes are the corpus-scale cost, so recomputing them
-    # is worse than one DISK_ONLY materialization.  r12: neutral at sf0.1
+    # is worse than one materialization.  r12: neutral at sf0.1
     # (2.60 vs 2.64 s), 11.62 → 9.94 s at the x10 replica, rows identical.
-    deduped = deduped.localCheckpoint(
-        eager=True, storageLevel=StorageLevel.DISK_ONLY
-    )
+    deduped = materialize(deduped)
 
     pairs = minhash_lsh_pairs(
         deduped, "doc_id", "text", threshold=neardup_threshold

@@ -47,7 +47,7 @@ from ..operators.cleaning import (
 )
 from ..operators.reshape import forward_fill, month_columns, unpivot_months
 from ..operators.upsert import dedup_against
-from ..session import run_concurrently
+from ..session import materialize, run_concurrently
 
 
 def transform_wide(wide: DataFrame) -> DataFrame:
@@ -192,8 +192,8 @@ def ingest(
     ``distinct``, the fact by dedup with its keys computed inline.
 
     ``materialize_records=True`` (r13, opt-in so the default contract
-    stays fully lazy) eagerly checkpoints the normalized record stream
-    before fanning out: the records subtree (ffill window + unpivot
+    stays fully lazy) materializes the normalized record stream before
+    fanning out: the records subtree (ffill window + unpivot
     Expand + parse/recode) feeds FIVE independent consumers — four dim
     distincts and the fact dedup — and with ``write_star`` each of the
     five write jobs would re-derive it from the source.  Records are
@@ -202,7 +202,7 @@ def ingest(
     audit rebuild) keep the lazy default."""
     records = transform_wide(wide)
     if materialize_records:
-        records = records.localCheckpoint(eager=True)
+        records = materialize(records)
     dims = build_dims(records)
     fact = load_fact(records, existing_fact)
     return {**dims, "fact_ida": fact}

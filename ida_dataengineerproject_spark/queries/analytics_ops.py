@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from ..operators.sessionize import session_stats
 from ..registry import register
+from ..session import materialize
 from ..sources.tables import table
 from .events_ops import EVENTS_US
 
@@ -281,15 +282,17 @@ def q_xq7(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.ranking import global_rank
 
     orders = table(spark, sf_dir, "orders")
-    rev = orders.groupBy("o_custkey").agg(
-        (F.sum(F.col("o_totalprice").cast("decimal(18,2)")) * 100)
-        .cast("long")
-        .alias("revc")
-        # global_rank consumes this frame three times (min/max bucket
-        # probe, bucket counts, rank join) — materialize the per-customer
-        # aggregate once instead of re-running the orders groupBy per
-        # arm (the xq11 lesson; measured 1.54 -> 1.13 s at sf0.1)
-    ).localCheckpoint()
+    # global_rank consumes this frame three times (min/max bucket
+    # probe, bucket counts, rank join) — materialize the per-customer
+    # aggregate once instead of re-running the orders groupBy per
+    # arm (the xq11 lesson; measured 1.54 -> 1.13 s at sf0.1)
+    rev = materialize(
+        orders.groupBy("o_custkey").agg(
+            (F.sum(F.col("o_totalprice").cast("decimal(18,2)")) * 100)
+            .cast("long")
+            .alias("revc")
+        )
+    )
     ranked = global_rank(rev, "revc", ["o_custkey"], rank_col="i")
     a = ranked.agg(
         F.count("*").alias("n"),
@@ -358,13 +361,15 @@ def q_xq7b(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.ranking import global_rank
 
     orders = table(spark, sf_dir, "orders")
-    rev = orders.groupBy("o_custkey").agg(
-        (F.sum(F.col("o_totalprice").cast("decimal(18,2)")) * 100)
-        .cast("long")
-        .alias("revc")
-        # four consumers (min/max bucket probe, bucket counts, rank join,
-        # totals) — materialize once, as in xq7/xq11
-    ).localCheckpoint()
+    # four consumers (min/max bucket probe, bucket counts, rank join,
+    # totals) — materialize once, as in xq7/xq11
+    rev = materialize(
+        orders.groupBy("o_custkey").agg(
+            (F.sum(F.col("o_totalprice").cast("decimal(18,2)")) * 100)
+            .cast("long")
+            .alias("revc")
+        )
+    )
     ranked = global_rank(rev, "revc", ["o_custkey"], rank_col="i")
     totals = rev.agg(
         F.count("*").alias("n"), F.sum("revc").alias("total")
@@ -489,11 +494,11 @@ def q_xq11(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("revc"),
     )
-    # one checkpoint (one row per customer, orders-of-magnitude smaller
-    # than the fact): the three boundary probes and the final
+    # materialized once (one row per customer, orders-of-magnitude
+    # smaller than the fact): the three boundary probes and the final
     # classification pass read it instead of re-running the
     # per-customer groupBy from the parquet scan each time.
-    per = per.localCheckpoint()
+    per = materialize(per)
     bounds = order_statistic_tuples(
         per,
         ["rec_day", "n_orders", "revc"],
@@ -1583,12 +1588,10 @@ def q_dau_mau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shuffles: the (user, day) dedup and two keyed counts — all linear,
     all key-uniform; the day spine is calendar-sized and broadcast."""
     ev = table(spark, sf_dir, "events")
-    active = (
-        ev.select("user_id", F.to_date("ts").alias("day"))
-        .distinct()
-        # three consumers (DAU agg, day spine, 28-day fan-out) —
-        # materialize the deduped activity frame once
-        .localCheckpoint()
+    # three consumers (DAU agg, day spine, 28-day fan-out) —
+    # materialize the deduped activity frame once
+    active = materialize(
+        ev.select("user_id", F.to_date("ts").alias("day")).distinct()
     )
     dau = active.groupBy("day").agg(F.count("*").alias("dau"))
     spine = active.select("day").distinct().withColumnRenamed(
@@ -1668,12 +1671,11 @@ def q_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     window over the calendar; first-week is one groupBy(user).  All
     outputs are exact BIGINT counts over calendar-bounded weeks."""
     ev = table(spark, sf_dir, "events")
-    a = (
+    # five consumers (first-week agg, current, prev, next, churn) —
+    # materialize the deduped activity frame once (xq7/xq11 lesson)
+    a = materialize(
         ev.select("user_id", F.trunc(F.to_date("ts"), "week").alias("wk"))
         .distinct()
-        # five consumers (first-week agg, current, prev, next, churn) —
-        # materialize the deduped activity frame once (xq7/xq11 lesson)
-        .localCheckpoint()
     )
     fw = a.groupBy("user_id").agg(F.min("wk").alias("first_wk"))
     prev = a.select(

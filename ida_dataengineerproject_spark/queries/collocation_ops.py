@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import register
+from ..session import materialize
 from ..sources.tables import table
 
 MIN_COUNT = 5
@@ -172,11 +173,13 @@ def q_x22(spark: SparkSession, sf_dir: str) -> DataFrame:
         "  transform(s, x -> struct(x AS src_a, CAST(NULL AS STRING) AS src_b))"
         ")"
     )
-    agg = (
+    # two consumers (the pair intersections and the per-source sizes)
+    # of one aggregate; building it lazily for both was slower at sf0.1:
+    # 3.01 → 3.12 s, in 5 of 6 interleaved pairs
+    agg = materialize(
         sets.select(F.explode(F.expr(tokens)).alias("p"), "cnt")
         .groupBy(F.col("p.src_a").alias("src_a"), F.col("p.src_b").alias("src_b"))
         .agg(F.sum("cnt").alias("c"))
-        .localCheckpoint()
     )
     inter = agg.filter(F.col("src_b").isNotNull()).withColumnRenamed(
         "c", "n_inter"
@@ -198,54 +201,6 @@ def q_x22(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / (F.col("na") + F.col("nb") - F.col("n_inter")).cast(
                     "double"
                 )
-            ).alias("jaccard"),
-        )
-    )
-
-
-def corpus_source_jaccard_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """x22's sketch twin: source × source Jaccard from threshold-filtered
-    KMV sketches (operators/sketch.py::kmv_sketch_filtered) instead of
-    the exact per-shingle source-set aggregate.
-
-    NOT the bench override — measured at sf0.1 it LOSES to the exact
-    hashed form (2.43 s vs 1.17 s): this corpus is scan-dominated and
-    the sketch build pays a second full scan (HLL pass + filter pass)
-    to collapse a shuffle that wasn't the bottleneck.  The sketch form
-    is the right arm only when per-group distinct cardinality makes the
-    exact groupBy(g) shuffle spill (its shuffle is O(groups × margin × k)
-    vs the exact O(distinct shingles)); the adjudication with these
-    numbers lives in BASELINE.md.  Estimator: est_jaccard =
-    est_inter / (n̂_a + n̂_b − est_inter), all three terms from the same
-    sketches — rse ≈ 1/√(k−1) ≈ 3% at k=1024, inflated on low-overlap
-    pairs by the Jaccard factor.  Accuracy vs the exact form is pinned
-    by tests/test_streaming_sketches.py::test_kmv_filtered_*."""
-    from ..functions.textstats import ngram_shingles
-    from ..operators.sketch import kmv_overlap, kmv_sizes, kmv_sketch_filtered
-
-    K = 1024
-    docs = table(spark, sf_dir, "documents")
-    sh = docs.select(
-        "source",
-        F.explode(
-            F.transform(ngram_shingles("text", SHINGLE_K), lambda s: F.xxhash64(s))
-        ).alias("g"),
-    )
-    sk = kmv_sketch_filtered(sh, "source", "g", k=K).localCheckpoint()
-    inter = kmv_overlap(sk, k=K)
-    sizes = kmv_sizes(sk, k=K)
-    sa = sizes.select(F.col("g").alias("g_a"), F.col("est_n").alias("na"))
-    sb = sizes.select(F.col("g").alias("g_b"), F.col("est_n").alias("nb"))
-    return (
-        inter.join(F.broadcast(sa), "g_a")
-        .join(F.broadcast(sb), "g_b")
-        .select(
-            F.col("g_a").alias("src_a"),
-            F.col("g_b").alias("src_b"),
-            F.col("est_inter").alias("n_inter"),
-            (
-                F.col("est_inter")
-                / (F.col("na") + F.col("nb") - F.col("est_inter"))
             ).alias("jaccard"),
         )
     )

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import CW_PRIME, cw_bucket, cw_bucket_sql
 from ..registry import register
+from ..session import materialize
 from ..sources.tables import table
 
 _TE_M = 10  # smoothing prior weight (pseudo-observations of the global mean)
@@ -78,11 +79,11 @@ def q_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = table(spark, sf_dir, "customer").select(
         "c_custkey", F.col("c_mktsegment").alias("seg")
     )
-    j = o.join(c, o.o_custkey == c.c_custkey).select(
-        "o_orderkey", "seg", "p"
-        # three consumers (segment stats, global mean, encode) —
-        # materialize the joined fact once (ADVICE r7 pattern)
-    ).localCheckpoint()
+    # three consumers (segment stats, global mean, encode) —
+    # materialize the joined fact once (ADVICE r7 pattern)
+    j = materialize(
+        o.join(c, o.o_custkey == c.c_custkey).select("o_orderkey", "seg", "p")
+    )
     s = j.groupBy("seg").agg(
         F.sum("p").alias("sp"), F.count("*").alias("n")
     )

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
+from ..session import materialize, scoped_conf
 from ..sources.tables import table
 
 _DAMP = 0.85
@@ -207,7 +208,7 @@ def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     6.0 -> 4.0 s at sf0.1).  The conf is SCOPED (session.scoped_conf):
     because AQE reads confs at execution time, the whole query executes
     eagerly inside the scope — the final frame is ONE row, so the
-    localCheckpoint materialization is bounded — and the previous value
+    materialization is bounded — and the previous value
     is restored in a finally, never leaking to other workloads on the
     session."""
     li = table(spark, sf_dir, "lineitem")
@@ -223,7 +224,6 @@ def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         b, (F.col("a.o") == F.col("b.o")) & (F.col("a.p") < F.col("b.p"))
     ).select(F.col("a.p").alias("p1"), F.col("b.p").alias("p2"))
     from ..operators.graph import count_triangles
-    from ..session import scoped_conf
 
     with scoped_conf(
         spark,
@@ -232,4 +232,4 @@ def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = count_triangles(
             pairs, "p1", "p2", edges_unique=False, with_graph_stats=True
         )
-        return out.localCheckpoint()
+        return materialize(out)

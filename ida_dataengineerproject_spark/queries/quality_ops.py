@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import register
+from ..session import materialize, scoped_conf
 from ..sources.tables import table
 
 
@@ -650,9 +651,10 @@ def group_outlier_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     g = ["l_returnflag"]
     li = table(spark, sf_dir, "lineitem").select(*g, "l_extendedprice")
-    med = grouped_quantiles_band(
-        li, "l_extendedprice", g, {"med": 0.5}
-    ).localCheckpoint()  # one row per group (bounded metadata)
+    # one row per group (bounded metadata)
+    med = materialize(
+        grouped_quantiles_band(li, "l_extendedprice", g, {"med": 0.5})
+    )
     dev = li.join(F.broadcast(med), g).withColumn(
         "adev", F.abs(F.col("l_extendedprice") - F.col("med"))
     )
@@ -800,14 +802,14 @@ def star_ddl_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     full ingest lineage (transform → dims → 4 broadcast joins) inside
     the union action (the ROUND_NOTES un-materialized-small-aggregate
     trap), and every tiny aggregate stage scheduled 32 shuffle tasks.
-    Fix: (1) checkpoint the transformed records ONCE, coalesced to one
+    Fix: (1) materialize the transformed records ONCE, coalesced to one
     partition, so each branch reuses the materialized 150 rows; (2)
     no dim joins in the fact: ``load_fact`` computes the surrogate keys
     inline (each broadcast dim join was a broadcast-build sub-job); (3)
     execute the bounded audit to its 33-row result inside a scoped
     AQE-off ``shuffle.partitions=1`` block (AQE materializes every
     exchange as its own job; confs bind at execution, so the frame is
-    localCheckpointed inside the scope).  Jobs per invocation 20 → 8;
+    materialized inside the scope).  Jobs per invocation 20 → 8;
     warm best-of-4 at x100 4.1 → 1.8 s.  The residual is per-job
     scheduler fixed cost plus per-invocation plan analysis/codegen of
     the 33-branch plan — overhead class by construction (the input
@@ -817,16 +819,13 @@ def star_ddl_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the serialized one-task pipeline costs more than the jobs saved);
     final coalesce(1) (5.6 s: collapses the union's parallelism)."""
     from ..plans.etl import build_dims, load_fact, transform_wide
-    from ..session import scoped_conf
     from .ingest_e2e import _SVC_OFFSET, _wide_sheet
 
     nation = table(spark, sf_dir, "nation")
     wide = _wide_sheet(nation, "SMP", _SVC_OFFSET["SMP"]).unionByName(
         _wide_sheet(nation, "STFC", _SVC_OFFSET["STFC"])
     )
-    records = (
-        transform_wide(wide).coalesce(1).localCheckpoint(eager=True)
-    )
+    records = materialize(transform_wide(wide).coalesce(1))
     star = {**build_dims(records), "fact_ida": load_fact(records)}
 
     def nulls(c: str) -> F.Column:
@@ -912,7 +911,7 @@ def star_ddl_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (the r11 form ran 20 jobs per invocation — pure scheduler fixed
     # cost on a 25-row input); with AQE off and one shuffle partition
     # the whole union runs as one job.  scoped_conf binds at execution,
-    # so the bounded frame is localCheckpointed inside the scope.
+    # so the bounded frame is materialized inside the scope.
     with scoped_conf(
         spark,
         {
@@ -920,4 +919,4 @@ def star_ddl_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "spark.sql.shuffle.partitions": "1",
         },
     ):
-        return out.orderBy("constraint_name").localCheckpoint(eager=True)
+        return materialize(out.orderBy("constraint_name"))

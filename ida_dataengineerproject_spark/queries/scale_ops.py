@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from ..operators.zorder import _INPUT_MASK, _SPREAD, zorder_key_epoch_day
 from ..registry import register
+from ..session import materialize, scoped_conf
 from ..sources.tables import table
 
 
@@ -1054,9 +1055,8 @@ def cbo_reordered_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The CBO demonstrator's plan, built INSIDE a cbo-enabled scope so
     the optimizer sees the confs (AQE/optimizer confs are read at
     execution, not build — see session.scoped_conf); the bounded result
-    is localCheckpoint-materialized in-scope, so callers get the
+    is materialized in-scope, so callers get the
     CBO-planned result regardless of their session confs."""
-    from ..session import scoped_conf
 
     li_n, o_n, c_n = _cbo_catalog_tables(spark, sf_dir)
     # Deliberately MIS-ORDERED SQL: the two facts meet first, the
@@ -1085,7 +1085,7 @@ def cbo_reordered_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
             "spark.sql.cbo.joinReorder.enabled": "true",
         },
     ):
-        return spark.sql(q).localCheckpoint()
+        return materialize(spark.sql(q))
 
 
 @register(

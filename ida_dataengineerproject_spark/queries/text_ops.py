@@ -21,6 +21,7 @@ from ..functions.textstats import (
     type_token_ratio,
 )
 from ..registry import register
+from ..session import materialize
 from ..sources.tables import table
 
 _TOKS = "regexp_split_to_array(trim(text), '\\s+')"
@@ -293,15 +294,17 @@ def q_x30(spark: SparkSession, sf_dir: str) -> DataFrame:
     LIMIT boundary is deterministic."""
     from ..operators.ranking import global_rank
 
-    d = table(spark, sf_dir, "documents").select(
-        "doc_id",
-        (-F.col("n_chars")).alias("nl"),
-        (-quality_score("text")).alias("nq"),
-        # rank pipelines traverse this projection several times
-        # (bucket-count + join re-read per ranker, boundary aggregates);
-        # materialize the 3-column frame once so the text scan +
-        # quality expression run a single time
-    ).localCheckpoint()
+    # rank pipelines traverse this projection several times
+    # (bucket-count + join re-read per ranker, boundary aggregates);
+    # materialize the 3-column frame once so the text scan + quality
+    # expression run a single time
+    d = materialize(
+        table(spark, sf_dir, "documents").select(
+            "doc_id",
+            (-F.col("n_chars")).alias("nl"),
+            (-quality_score("text")).alias("nq"),
+        )
+    )
     rq = global_rank(
         d.select("doc_id", "nq"), "nq", ["doc_id"], rank_col="r_q"
     ).select("doc_id", "r_q")

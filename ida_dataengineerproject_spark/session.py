@@ -13,7 +13,7 @@ import os
 from collections.abc import Callable
 from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Confs that are safe (and required for oracle fidelity) to set at runtime on
 # ANY session, including one handed to us by an external driver.
@@ -83,7 +83,7 @@ def scoped_conf(spark: SparkSession, confs: dict):
 
     AQE reads confs at EXECUTION time, not DataFrame-build time, so a
     query that wants a non-default conf must either execute inside this
-    scope (materializing its result, e.g. via ``localCheckpoint`` on a
+    scope (materializing its result, e.g. via ``materialize`` on a
     bounded frame) or accept that a lazily-returned plan runs under
     whatever conf is live later.  Never set a session-wide conf and rely
     on a later ``harden()`` to reset it — the conf would leak to any
@@ -135,6 +135,38 @@ def scoped_conf(spark: SparkSession, confs: dict):
                 logging.getLogger(__name__).warning(msg)
             else:
                 raise RuntimeError(msg) from errors[0][1]
+
+
+def materialize(df: DataFrame) -> DataFrame:
+    """Compute ``df`` now and return a frame that reads the stored rows:
+    the one place the engine cuts lineage.  A call site materializes
+    when a frame has several consumers that would each re-run its plan;
+    it says why at the call, and it never chooses how the rows are kept.
+
+    Policy: an eager ``localCheckpoint`` at ``DISK_ONLY``.
+
+    * Eager, so the job runs at the call — inside any ``scoped_conf``
+      block around it, since AQE reads confs at execution time — and
+      building a plan that materializes launches Spark jobs.
+    * ``DISK_ONLY``, not the ``MEMORY_AND_DISK`` (deserialized) default.
+      At the x100 replica an edge snapshot is 10⁸ rows, and deserialized
+      blocks pin gigabytes of the unified memory pool, protected from
+      eviction by ``storageFraction``, starving the very hash aggregates
+      that read them: r9's 16 g ``AGGREGATE_OUT_OF_MEMORY`` landed in the
+      triangle count's degree/distinct stage, not in the adjacency build.
+      Serialized blocks are compact, and the OS page cache serves
+      re-reads at memory speed without touching the JVM heap.  At toy
+      sizes the level is neutral (every materialized frame forced to
+      ``DISK_ONLY``: perfbench ``pass_s`` unchanged, same job counts).
+    * A barrier: no filter or projection is pushed down past it.
+    * Not fault-tolerant.  The blocks live on the executors that
+      computed them, so on a cluster losing one mid-query fails the job
+      instead of recomputing it.  That is acceptable for a step that is
+      simply re-run; a long-lived deployment would change this function
+      to a reliable checkpoint directory or a replicated level."""
+    from pyspark.storagelevel import StorageLevel
+
+    return df.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
 
 
 def run_concurrently(spark: SparkSession, fns: list[Callable[[], object]]) -> list:

@@ -110,21 +110,6 @@ def ensure_bucketed(
     return name
 
 
-def bucketed_pair(
-    spark: SparkSession,
-    sf_dir: str,
-    specs: list[tuple[str, str, list[str]]],
-    n_buckets: int | None = None,
-) -> list[DataFrame]:
-    """Materialize several tables bucketed with ONE shared bucket count
-    (the co-location precondition) and return their DataFrames."""
-    n = n_buckets or default_buckets()
-    return [
-        spark.table(ensure_bucketed(spark, sf_dir, t, k, c, n))
-        for t, k, c in specs
-    ]
-
-
 # The fact tables' at-rest bucket keys — the join/aggregate key every
 # orderkey-grain query shares (flagship, q3, q10, q18, q21, ...).
 FACT_KEYS = {"lineitem": "l_orderkey", "orders": "o_orderkey"}

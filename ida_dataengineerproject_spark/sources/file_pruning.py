@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import materialize
+
 BUCKET_COL = "__zbucket"
 
 
@@ -75,9 +77,9 @@ def build_bucket_manifest(
     # the pruned read's broadcast semi-join, the totals readout, the kept
     # readout — would otherwise recompute this aggregate's full DATA scan
     # lazily (the xs4 r5 regression: 3 hidden scans of the table per
-    # pruned read).  localCheckpoint keeps it on executors — bounded rows,
+    # pruned read).  materialize keeps it on executors — bounded rows,
     # never a driver collect, same contract at a 10⁶-row manifest.
-    return df.groupBy(BUCKET_COL).agg(*aggs).localCheckpoint()
+    return materialize(df.groupBy(BUCKET_COL).agg(*aggs))
 
 
 def keep_expr(predicates: dict[str, tuple]) -> "F.Column":

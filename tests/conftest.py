@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import re
 import sys
 from pathlib import Path
 
@@ -36,6 +37,32 @@ def duck():
         )
     yield con
     con.close()
+
+
+def assert_bounded_single_partition_exchanges(plan: str) -> int:
+    """Every ``Exchange SinglePartition`` node of an executed-plan tree
+    string sits directly on an aggregate with bounded output: the keyless
+    partial min/max of the ranking bucket probe (one row per map
+    partition) or a count keyed by ``__bucket`` (<= n_buckets rows) —
+    never on raw rows.  Returns the number of such exchanges."""
+    lines = plan.splitlines()
+    node = r"^[\s:|+-]*(?:\*\(\d+\) )?"
+    found = 0
+    for line, child in zip(lines, lines[1:]):
+        if not re.match(node + "Exchange SinglePartition", line):
+            continue
+        found += 1
+        agg = re.match(
+            node + r"HashAggregate\(keys=\[(.*?)\], functions=\[(.*?)\]",
+            child,
+        )
+        assert agg, (line, child)
+        keys, fns = agg.groups()
+        probe = keys == "" and re.fullmatch(
+            r"partial_min\(\S+\), partial_max\(\S+\)", fns
+        )
+        assert probe or keys.startswith("__bucket#"), (line, child)
+    return found
 
 
 def assert_parity(spark_df, duck_con, sql: str):

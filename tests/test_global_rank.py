@@ -7,13 +7,13 @@ constant-column case where every row shares one bucket.
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ida_dataengineerproject_spark.operators.ranking import global_rank
 from ida_dataengineerproject_spark.sources.tables import table
+
+from .conftest import assert_bounded_single_partition_exchanges
 
 SF = "/root/testdata/sf0.001"
 
@@ -75,24 +75,7 @@ def test_only_bounded_single_partition_exchange(spark):
     df = global_rank(rev, "v", ["o_custkey"])
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
-    lines = plan.splitlines()
-    node = r"^[\s:|+-]*(?:\*\(\d+\) )?"
-    found = 0
-    for line, child in zip(lines, lines[1:]):
-        if not re.match(node + "Exchange SinglePartition", line):
-            continue
-        found += 1
-        agg = re.match(
-            node + r"HashAggregate\(keys=\[(.*?)\], functions=\[(.*?)\]",
-            child,
-        )
-        assert agg, (line, child)
-        keys, fns = agg.groups()
-        probe = keys == "" and re.fullmatch(
-            r"partial_min\(\S+\), partial_max\(\S+\)", fns
-        )
-        assert probe or keys.startswith("__bucket#"), (line, child)
-    assert found >= 1, plan
+    assert assert_bounded_single_partition_exchanges(plan) >= 1, plan
 
 
 def test_wide_long_range_spreads_over_buckets(spark):
