@@ -1,16 +1,18 @@
-"""Distributed global ranking without a single-partition sort (round 5d).
+"""Exact order statistics without a single-partition sort or a
+whole-group buffer: two primitives.
 
-``row_number() OVER (ORDER BY v)`` with no PARTITION BY moves the whole
-table through one task — the classic Spark scaling cliff (WindowExec
-warns, and at 100 TB it simply doesn't run).  The exact rewrite:
+**Bucketed two-level rank** (round 5d).  ``row_number() OVER (ORDER BY
+v)`` with no PARTITION BY moves the whole table through one task — the
+classic Spark scaling cliff (WindowExec warns, and at 100 TB it simply
+doesn't run).  The exact rewrite:
 
 1. assign each row an equal-width value bucket between the column's
    min and max (``_with_buckets``: a 1-row min/max aggregate inside the
    same plan, so building launches no Spark job; equal values always
    share a bucket, so bucket order refines to total order);
 2. per-bucket offsets = running sum over the bucket COUNTS — a window
-   over <= n_buckets rows (bounded; with the probe's keyless min/max
-   merge, the only single-partition steps);
+   over <= ``_N_BUCKETS`` rows (bounded; with the probe's keyless
+   min/max merge, the only single-partition steps);
 3. global rank = offset + row_number within the bucket (window
    partitioned by bucket).
 
@@ -21,19 +23,37 @@ largest bucket holds 10.1 % of xq7's per-customer revenues (3.2 % with
 the approxQuantile boundaries this module used before) and 4.0 % of
 xt24's ``-n_chars`` (3.3 %).  A bucket holding one hot value processes
 that value's rows in one task, same as any rank-by definition must.
-
 ``global_rank``, ``global_prefix_max`` and ``weighted_quantile_crossing``
-share the one bucket assigner.  Used by xq7_gini_revenue; the same
-primitive serves ECDF, exact top-percent cuts, and rank-based
-statistics at scale.
+share the one bucket assigner.
+
+**Sketch band + in-band confirm** (round 9).  Order statistics at known
+fractions need no rank column at all: one scan brackets each target
+rank in a value band with a per-group GK sketch, a second scan counts
+the values below the band exactly and collects the bounded in-band
+values, and the target rank indexes the sorted band.  One private core,
+``_sketch_band``, runs this plan for any group keys, value columns and
+target fractions, with one band attach and one staleness guard;
+``grouped_quantiles_band`` (payload ``v``, ``quantile_cont``
+interpolation) and ``order_statistic_tuples`` (payload ``struct(v,
+tb)``, exact integer rank targets) are its two final projections.
+``sketch_band_edges`` holds the rank-slack rule and the whole-domain
+regime, shared with xq12's own confirm pass.  Building a band plan runs
+one job (the band collect) and snapshots the source; see
+``_sketch_band`` for the contract and its runtime guard.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from functools import reduce
+from operator import and_, or_
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..session import materialize
+
+_N_BUCKETS = 32  # equal-width bins of the bucketed rank
+_LITERAL_GROUPS = 64  # band rows inlined as when-chains, else joined
 
 
 def _with_buckets(
@@ -90,7 +110,6 @@ def global_rank(
     df: DataFrame,
     value_col: str,
     tiebreak_cols: list[str],
-    n_buckets: int = 32,
     rank_col: str = "rank",
     group_cols: list[str] | None = None,
 ) -> DataFrame:
@@ -112,7 +131,7 @@ def global_rank(
     quantile boundaries would give it (xq7 at sf0.1: 10.1 % vs 3.2 %;
     xt24: 4.0 % vs 3.3 %), which fattens one in-bucket window task."""
     g = list(group_cols or [])
-    with_bucket = _with_buckets(df, value_col, n_buckets)
+    with_bucket = _with_buckets(df, value_col, _N_BUCKETS)
     counts = with_bucket.groupBy(*g, "__bucket").agg(
         F.count("*").alias("__n")
     )
@@ -142,7 +161,6 @@ def weighted_quantile_crossing(
     weight_col: str,
     q_num: int = 1,
     q_den: int = 2,
-    n_buckets: int = 32,
     out_col: str = "weighted_median",
     total_col: str = "w_total",
 ) -> DataFrame:
@@ -154,7 +172,7 @@ def weighted_quantile_crossing(
     Bucket-targeted: per-bucket weight
     totals (map-side-combined aggregate, tiny) locate the single
     crossing bucket via the bounded offsets frame; only THAT bucket's
-    rows (≈1/n_buckets of the data) take the in-bucket cumulative
+    rows (≈1/_N_BUCKETS of the data) take the in-bucket cumulative
     window.  No full-data shuffle, no prefix sum over every row —
     against ``SUM(w) OVER (ORDER BY v)``'s single-partition sort.
 
@@ -162,7 +180,7 @@ def weighted_quantile_crossing(
     no eager driver-side job — the r8 profile showed the former eager
     approxQuantile probe was 0.58 s of xq8's 1.00 s wall at sf0.1.  On
     heavy-tailed values the equal-width crossing bucket can hold more
-    than 1/n_buckets of the rows (see the module docstring); the
+    than 1/_N_BUCKETS of the rows (see the module docstring); the
     answer is unaffected.
 
     Duplicate values need no pre-aggregation: the filtered set is a
@@ -171,7 +189,7 @@ def weighted_quantile_crossing(
     src = df.select(value_col, weight_col).filter(
         F.col(value_col).isNotNull()
     )
-    wb = _with_buckets(src, value_col, n_buckets)
+    wb = _with_buckets(src, value_col, _N_BUCKETS)
     bt = wb.groupBy("__bucket").agg(F.sum(weight_col).alias("__w"))
     w_off = Window.orderBy("__bucket").rowsBetween(
         Window.unboundedPreceding, -1
@@ -189,7 +207,7 @@ def weighted_quantile_crossing(
             >= q_num * F.col("__tot")
         )
         .orderBy("__bucket")
-        .limit(1)  # bounded: <= n_buckets rows enter this sort
+        .limit(1)  # bounded: <= _N_BUCKETS rows enter this sort
         .select("__bucket", "__off", "__tot")
     )
     w_in = (
@@ -215,7 +233,6 @@ def global_prefix_max(
     order_col: str,
     value_col: str,
     tiebreak_cols: list[str] | None = None,
-    n_buckets: int = 32,
     out_col: str = "prev_max",
 ) -> DataFrame:
     """Attach the running MAX of ``value_col`` over all rows STRICTLY
@@ -232,7 +249,7 @@ def global_prefix_max(
     The exclusive frame is what 2D skyline/Pareto pruning needs: a
     point survives iff its second dimension exceeds every strictly
     earlier point's."""
-    with_bucket = _with_buckets(df, order_col, n_buckets)
+    with_bucket = _with_buckets(df, order_col, _N_BUCKETS)
     totals = with_bucket.groupBy("__bucket").agg(
         F.max(value_col).alias("__m")
     )
@@ -261,6 +278,218 @@ def global_prefix_max(
     )
 
 
+
+def sketch_band_edges(
+    v: Column, fracs: list[float], accuracy: int
+) -> list[tuple[Column, Column]]:
+    """Aggregate expressions for the value band [lo, hi] that holds the
+    order statistics at each fraction of ``fracs``, per group of the
+    aggregate they ride — the one home of the rank-slack rule and the
+    whole-domain regime.
+
+    ALL probes ride ONE sketch: ``percentile_approx`` with an array
+    percentage, probed at q ± 4/accuracy clipped to [0, 1] (measured at
+    the x10 replica: 4 separate sketch aggregates 2.20 s vs one 4-probe
+    sketch 0.80 s at accuracy 10000, 0.44 s at 1000 — sketch
+    maintenance, not probing, is the cost).  Catalyst deduplicates the
+    count, min, max and sketch across the returned expressions.
+
+    Rank-slack proof, dual regime (margins must be literals — Spark
+    requires a foldable percentage — so the regime switch is in-plan):
+    - n ≥ 2·accuracy: ε·n ≥ 2 where ε = 1/accuracy.  lo probed at q−4ε
+      has true rank ≤ (q−3ε)n ≤ qn−3; hi probed at q+4ε has rank
+      ≥ (q+3ε)n ≥ qn+3.  The straddle ranks of q·(n−1) and the rank
+      target (n·num) div den both land inside with ≥ 1 rank of slack.
+    - n < 2·accuracy: the sketch bound εn < 2 cannot cover the ±2-rank
+      gap between the q·n and q·(n−1) conventions, so the band widens
+      to the WHOLE domain [min, max] — an exact bounded collect
+      (< 2·accuracy values, the same order of state as the sketch).
+    n counts the non-NULL values; a group with none gets NULL edges."""
+    eps = 1.0 / accuracy
+    probes = [
+        p for q in fracs for p in (max(0.0, q - 4 * eps), min(1.0, q + 4 * eps))
+    ]
+    bp = F.percentile_approx(v, F.array(*map(F.lit, probes)), F.lit(accuracy))
+    whole = F.count(v) < 2 * accuracy
+    return [
+        (
+            F.when(whole, F.min(v)).otherwise(F.element_at(bp, 2 * i + 1)),
+            F.when(whole, F.max(v)).otherwise(F.element_at(bp, 2 * i + 2)),
+        )
+        for i in range(len(fracs))
+    ]
+
+
+def _checksum(v: Column) -> Column:
+    # order-independent checksum of the non-NULL values (bit_xor
+    # ignores the NULL the when() maps NULL rows to): a count alone
+    # misses an equal-count substitution of values.  Residual blind
+    # spot: a mutation whose added AND removed
+    # multisets each xor to the same value (swapping a duplicate PAIR
+    # {a,a} for {b,b}) — count and xor both unchanged.
+    return F.bit_xor(F.when(v.isNotNull(), F.xxhash64(v)))
+
+
+def _key_match(keys: list[str], other: list) -> Column:
+    """Null-safe equality of ``keys`` with ``other`` (columns or
+    literals): a NULL group key is a legal grouping value (groupBy puts
+    all NULLs in one group), and a plain equality would drop that group
+    on exactly one attach path (tests/test_band_paths.py::
+    test_fallback_path_null_group_key)."""
+    return reduce(and_, [F.col(k).eqNullSafe(o) for k, o in zip(keys, other)])
+
+
+def _sketch_band(
+    df: DataFrame,
+    group_cols: list[str],
+    value_cols: list[str],
+    fracs: list[float],
+    tiebreak: str | None,
+    accuracy: int,
+) -> DataFrame:
+    """The shared core of the exact order statistics: per group and
+    value column ``j``, the guarded non-NULL count ``__n{j}`` and, per
+    fraction ``i``, the exact count of values below the band
+    ``__nb{j}_{i}`` and the sorted in-band payloads ``__band{j}_{i}``
+    (``v``, or ``struct(v, tb)`` with a tiebreak).  The order statistic
+    of rank r is then ``element_at(__band, r − __nb)``.
+
+    Pass 1 (one scan, one aggregate): per (group, value column) the
+    non-NULL count, a checksum of the non-NULL values and the band edges
+    of :func:`sketch_band_edges`; the band frame is collected (one job,
+    grain = group count).  Band attach, by one predicate:
+    - ≤ ``_LITERAL_GROUPS`` band rows: every band column becomes a
+      null-safe when-chain of literals on the group key — no join, no
+      recompute, every hot pass pure codegen (r9 at the x100
+      exact_median: a broadcast re-attach cost ~62 ns/row, and the
+      un-materialized band frame re-ran the sketch scan inside every
+      consumer; 12.5 → ~4 s).  Deleting this path, so that every call
+      took the join form, made exact_median_percentiles slower
+      (1.395 → 1.564 s at sf0.1, 6 → 8 jobs).  No group keys means one
+      band row, so plain literals.
+    - more: the band frame is materialized and attached by a null-safe
+      LEFT broadcast join — when-chain width is a per-row compare
+      count, fine at 64 and wrong at 10^6 groups.
+    Pass 2 (one scan): SPLIT aggregates (r9) — below-band counts ride a
+    codegen HashAggregate over all rows; the ``collect_list`` aggregate
+    (TypedImperative, so an interpreted ObjectHashAggregate) sees only
+    the band-prefiltered rows.  The two meet on the group grain by a
+    null-safe LEFT broadcast join, so a group whose every value is NULL
+    keeps its row with NULL bands, as SQL ``percentile`` keeps it.
+
+    EAGER/SNAPSHOT CONTRACT: the band edges, counts and checksums are a
+    build-time snapshot of the source, while pass 2 reads live data.
+    The staleness guard gates every ``__n{j}`` on live count ==
+    snapshot count and live checksum <=> snapshot checksum (NULL-safe:
+    a column with no non-NULL values has a NULL checksum on both sides)
+    for every value column; ``assert_true`` fails the job otherwise.
+    It catches any add/remove of values in a snapshotted group, an
+    equal-count substitution (see ``_checksum``), and a wholly NEW group
+    (its snapshot columns are NULL — unmatched when-chain or LEFT-join
+    miss — and the guard evaluates NULL).  A group REMOVED from the
+    source yields no live row, visible to the caller only as a missing
+    output row.  Rebuild the plan after any source mutation."""
+    g = list(group_cols)
+    tb = [F.col(tiebreak).alias("__tb")] if tiebreak else []
+    src = df.select(*g, *value_cols, *tb)
+    band_aggs = []
+    for j, vc in enumerate(value_cols):
+        v = F.col(vc)
+        band_aggs += [F.count(v).alias(f"__n{j}"), _checksum(v).alias(f"__chk{j}")]
+        for i, (lo, hi) in enumerate(sketch_band_edges(v, fracs, accuracy)):
+            band_aggs += [lo.alias(f"__lo{j}_{i}"), hi.alias(f"__hi{j}_{i}")]
+    bands = src.groupBy(*g).agg(*band_aggs)
+    snap_cols = bands.columns[len(g):]
+    band_rows = bands.collect()  # one job; grain = group count
+    # the guard's snapshot columns: a literal chain reads only the group
+    # key, so it evaluates on the output grain; the join form carries
+    # them through the count aggregate
+    guard_cols = [f"__{p}{j}" for j in range(len(value_cols)) for p in ("n", "chk")]
+    if len(band_rows) <= _LITERAL_GROUPS:
+        live, carried = src, []
+        if g:
+            hits = [_key_match(g, [F.lit(r[k]) for k in g]) for r in band_rows]
+            snap = {}
+            for c in snap_cols:
+                chain = F.lit(None)  # a group absent from the snapshot
+                for i, (hit, r) in enumerate(zip(hits, band_rows)):
+                    val = F.lit(r[c])
+                    chain = chain.when(hit, val) if i else F.when(hit, val)
+                snap[c] = chain
+        else:
+            snap = {c: F.lit(band_rows[0][c]) for c in snap_cols}
+    else:
+        keyed = materialize(bands).select(
+            *[F.col(k).alias(f"__b_{k}") for k in g], *snap_cols
+        )
+        live = src.join(
+            F.broadcast(keyed), _key_match(g, [F.col(f"__b_{k}") for k in g]),
+            "left",
+        )
+        snap = {c: F.col(c) for c in snap_cols}
+        carried = [F.first(c).alias(c) for c in guard_cols]
+
+    cnt_aggs, col_aggs, in_band = carried, [], []
+    for j, vc in enumerate(value_cols):
+        v = F.col(vc)
+        cnt_aggs += [
+            F.count(v).alias(f"__nl{j}"),
+            _checksum(v).alias(f"__chkl{j}"),
+        ]
+        payload = F.struct(v.alias("v"), F.col("__tb").alias("tb")) if tb else v
+        for i in range(len(fracs)):
+            lo, hi = snap[f"__lo{j}_{i}"], snap[f"__hi{j}_{i}"]
+            cnt_aggs.append(F.sum((v < lo).cast("long")).alias(f"__nb{j}_{i}"))
+            hit = (v >= lo) & (v <= hi)
+            in_band.append(hit)
+            col_aggs.append(
+                F.sort_array(F.collect_list(F.when(hit, payload))).alias(
+                    f"__band{j}_{i}"
+                )
+            )
+    counts = live.groupBy(*g).agg(*cnt_aggs)
+    collects = live.filter(reduce(or_, in_band)).groupBy(*g).agg(*col_aggs)
+    if g:
+        right = collects.select(
+            *[F.col(k).alias(f"__r_{k}") for k in g], *collects.columns[len(g):]
+        )
+        got = counts.join(
+            F.broadcast(right), _key_match(g, [F.col(f"__r_{k}") for k in g]),
+            "left",
+        )
+    else:
+        got = counts.crossJoin(F.broadcast(collects))
+    fresh = reduce(
+        and_,
+        [
+            (F.col(f"__nl{j}") == snap[f"__n{j}"])
+            & F.col(f"__chkl{j}").eqNullSafe(snap[f"__chk{j}"])
+            for j in range(len(value_cols))
+        ],
+    )
+    ok = F.assert_true(
+        fresh,
+        F.lit(
+            "sketch-band order statistics: source changed since the plan "
+            "was built (band bounds are a build-time snapshot) — rebuild "
+            "the plan after any source mutation"
+        ),
+    ).isNull()
+    return got.select(
+        *g,
+        *[
+            F.when(ok, snap[f"__n{j}"]).alias(f"__n{j}")
+            for j in range(len(value_cols))
+        ],
+        *[
+            f"__{p}{j}_{i}"
+            for j in range(len(value_cols))
+            for i in range(len(fracs))
+            for p in ("nb", "band")
+        ],
+    )
+
+
 def grouped_quantiles_band(
     df: DataFrame,
     value_col: str,
@@ -269,296 +498,44 @@ def grouped_quantiles_band(
     accuracy: int = 2000,
 ) -> DataFrame:
     """Exact continuous quantiles per group (``quantile_cont`` semantics:
-    linear interpolation at position q·(n−1), NULL values excluded —
-    matching SQL ``percentile``) in TWO table scans, zero windows, zero
-    joins on the data — the sketch-steered band rewrite.  The
-    scale-safe replacement for ``percentile(col, array(...))`` GROUP BY,
-    which buffers an entire group in one task's aggregation buffer.
+    linear interpolation at position q·(n−1), NULL values excluded, a
+    group of only NULLs gives NULL — matching SQL ``percentile``) in TWO
+    table scans, zero windows, zero joins on the data.  The scale-safe
+    replacement for ``percentile(col, array(...))`` GROUP BY, which
+    buffers an entire group in one task's aggregation buffer.
 
-    Pass 1 (one scan): per group, a Greenwald-Khanna sketch
-    (``percentile_approx``, rank error ≤ n/accuracy guaranteed) locates
-    a VALUE BAND [blo, bhi] around each target quantile, probed at
-    q ± 4/accuracy; plus the exact group count.  Pass 2 (one scan, the
-    band frame broadcast back on the group key): one combined aggregate
-    computes, per quantile, the exact ``count(v < blo)`` and a bounded
-    ``collect_list`` of the in-band values.  The final projection sorts
-    each ≤ O(n/accuracy)-element band array and indexes the two straddle
-    ranks — exact order statistics, so the OUTPUT is deterministic even
-    though the sketch's merge order is not (the band only steers).
+    On the sketch-band core (:func:`_sketch_band`, payload ``v``): the
+    final projection indexes the two straddle ranks of q·(n−1) in the
+    sorted band and interpolates — exact order statistics, so the
+    OUTPUT is deterministic even though the sketch's merge order is not
+    (the band only steers).  Per-group state is ≤ max(10n/accuracy +
+    tie mass, 2·accuracy) values; heavy ties at a band edge widen the
+    collect by the tie mass.  Default accuracy 2000 balances sketch
+    insert cost against band collect size.
 
-    Rank-slack proof, dual regime (margins must be literals — Spark
-    requires a foldable percentage — so the regime switch is in-plan):
-    - n ≥ 2·accuracy: ε·n ≥ 2 where ε = 1/accuracy.  blo probed at
-      q−4ε has true rank ≤ (q−3ε)n ≤ qn−3 < r_lo; bhi probed at q+4ε
-      has rank ≥ (q+3ε)n ≥ qn+3 > r_lo+1.  Both straddle ranks land
-      inside the band with ≥1 rank of slack.
-    - n < 2·accuracy: the sketch bound εn < 2 cannot cover the ±2-rank
-      gap between the q·n and q·(n−1) conventions, so the band widens
-      to the WHOLE group — an exact bounded collect (< 2·accuracy
-      values, the same order of state as the sketch itself).
-
-    Per-group state is ≤ max(10n/accuracy + tie mass, 2·accuracy)
-    values — tunable; heavy ties at a band edge widen the collect by
-    the tie mass (equal values are interchangeable at a rank, but all
-    must be carried to index through them).
-
-    ALL band probes ride ONE sketch per group — ``percentile_approx``
-    with an array percentage (measured at the x10 replica: 4 separate
-    sketch aggregates 2.20 s vs one 4-probe sketch 0.80 s at
-    accuracy 10000, 0.44 s at 1000 — sketch maintenance, not probing,
-    is the cost).  Default accuracy 2000 balances sketch insert cost
-    against band collect size.
-
-    EAGER/SNAPSHOT CONTRACT: building this plan runs one Spark job (the
-    band scan is collected to the driver so the ≤64-group literal path
-    can inline bounds as codegen'd literals; the >64-group path
-    materializes the same frame).  The returned DataFrame therefore
-    snapshots the SOURCE AS OF BUILD TIME for its band bounds and group
-    counts: re-executing it after the underlying data changes reuses
-    the stale bounds (the in-band confirm re-reads live data, so the
-    result could be silently wrong, not just stale).  Rebuild the plan
-    after any source mutation.  This is an intentional exception to the
-    repo's "never an action in the plan-building path" pattern — the
-    literal inlining is worth 3× on the hot pass (see measurements
-    above) and the band grain is bounded by the grouping semantics.
-
-    r11 (ADVICE r10): violation is now DETECTED at runtime — the confirm
-    pass carries a live per-group count and every output value is gated
-    on ``assert_true(live == snapshot)``, so executing a stale plan
-    against mutated data fails the job with an explicit message instead
-    of returning wrong quantiles (tests/test_band_paths.py).
-    """
-    g = list(group_cols)
-    src = df.select(*g, value_col).filter(F.col(value_col).isNotNull())
-    eps = 1.0 / accuracy
-    names = list(quantiles)
-    probes: list[float] = []
-    for q in quantiles.values():
-        probes.append(max(0.0, q - 4 * eps))
-        probes.append(min(1.0, q + 4 * eps))
-    # __chk: order-independent value checksum (bit_xor of xxhash64) —
-    # with the count alone, an equal-count substitution (swap one
-    # in-group value for another) passed the staleness guard silently
-    # (ADVICE r11); the xor rides the same codegen aggregate for ~one
-    # hash per row.  Residual blind spot: a mutation whose added AND
-    # removed multisets each xor to the same value (e.g. swapping a
-    # duplicate PAIR {a,a} for {b,b}) — count and xor both unchanged.
-    bands = src.groupBy(*g).agg(
-        F.count("*").alias("__tot"),
-        F.bit_xor(F.xxhash64(value_col)).alias("__chk"),
-        F.min(value_col).alias("__mn"),
-        F.max(value_col).alias("__mx"),
-        F.percentile_approx(
-            value_col, F.array(*[F.lit(p) for p in probes]), F.lit(accuracy)
-        ).alias("__bp"),
+    Building the plan runs the core's band job, and the result snapshots
+    the source as of build time, guarded at run time (see
+    :func:`_sketch_band`)."""
+    core = _sketch_band(
+        df, group_cols, [value_col], list(quantiles.values()), None, accuracy
     )
-    v = F.col(value_col)
-
-    # Pass-2 structure (r9, measured at the x100 exact_median):
-    # 1. SPLIT aggregates — a single aggregate carrying both the
-    #    below-band sums AND the in-band collect_lists ran as ONE
-    #    ObjectHashAggregate (collect_list is TypedImperative, dropping
-    #    the sums out of whole-stage codegen too: ~10 s interpreted).
-    #    Counts now ride a codegen HashAggregate over the full frame;
-    #    collects run on a band-PREFILTERED frame that only ever holds
-    #    the O(n/accuracy + ties) in-band rows.
-    # 2. LITERAL band frame for bounded group counts — re-attaching the
-    #    group-grain band row by broadcast join cost ~62 ns/row (a 3-row
-    #    build measured 0.9 → 4.6 s on a 60 M-row sum pass: probe + row
-    #    concat per row), and the un-materialized band frame re-ran the
-    #    full GK sketch scan inside EVERY consumer.  For ≤ 64 groups the
-    #    band row collapses to null-safe when-chains of literals — no
-    #    join, no recompute, every hot pass pure codegen.  12.5 → ~4 s.
-    #    Above 64 groups (or when a value resists F.lit) the broadcast-
-    #    join form below is the scale path — when-chain width is per-row
-    #    compare COUNT, fine at 64, wrong at 10^6 groups.
-    band_rows = bands.collect()  # one job; grain = group count (bounded
-    # by the caller's grouping semantics, same readout the sketch makes)
-    literal_ok = 0 < len(band_rows) <= 64
-
-    def _match(row):
-        cond = None
-        for k in g:
-            e = F.col(k).eqNullSafe(F.lit(row[k]))
-            cond = e if cond is None else (cond & e)
-        return cond
-
-    def _chain(rows, fn):
-        """when-chain over groups: fn(row) -> literal value."""
-        if not g:
-            return F.lit(fn(rows[0]))
-        e = None
-        for row in rows:
-            val = F.lit(fn(row))
-            e = F.when(_match(row), val) if e is None else e.when(
-                _match(row), val
-            )
-        return e
-
-    if literal_ok:
-        try:
-            blos, bhis = {}, {}
-            for i, name in enumerate(names):
-                def lo_of(row, i=i):
-                    if row["__tot"] < 2 * accuracy:
-                        return row["__mn"]
-                    return row["__bp"][2 * i]
-
-                def hi_of(row, i=i):
-                    if row["__tot"] < 2 * accuracy:
-                        return row["__mx"]
-                    return row["__bp"][2 * i + 1]
-
-                blos[name] = _chain(band_rows, lo_of)
-                bhis[name] = _chain(band_rows, hi_of)
-            tot_expr = _chain(band_rows, lambda r: r["__tot"])
-            chk_expr = _chain(band_rows, lambda r: r["__chk"])
-        except Exception:  # noqa: BLE001 — unliteralizable value type
-            literal_ok = False
-
-    if not literal_ok:
-        # the band scan must not re-run per consumer; the materialized
-        # frame replaces the collected literals
-        bands = materialize(bands)
-        if g:
-            # NULL-SAFE band attach: a NULL group key is a legal grouping
-            # value (groupBy puts all NULLs in one group), and a plain
-            # equi-join here would silently drop every such row ONLY on
-            # this >64-group path — the literal path's eqNullSafe
-            # when-chains and the final rejoin already handle it.  Same
-            # input must yield the same group set regardless of group
-            # cardinality (tests/test_band_paths.py::
-            # test_fallback_path_null_group_key).
-            battach = bands
-            for k in g:
-                battach = battach.withColumnRenamed(k, f"__b_{k}")
-            jcond = None
-            for k in g:
-                e = F.col(k).eqNullSafe(F.col(f"__b_{k}"))
-                jcond = e if jcond is None else (jcond & e)
-            # LEFT join (ADVICE r11): a live group ABSENT from the
-            # snapshot (added after build) must reach the guard — the
-            # old inner join silently dropped its rows here, so the new
-            # group never surfaced at all.  With the left join its rows
-            # carry NULL __tot/__chk, the guard condition evaluates
-            # NULL, and assert_true(NULL) fails the job.
-            joined = src.join(F.broadcast(battach), jcond, "left").drop(
-                *[f"__b_{k}" for k in g]
-            )
-        else:
-            joined = src.crossJoin(F.broadcast(bands))
-        small = F.col("__tot") < F.lit(2 * accuracy)
-        blos, bhis = {}, {}
-        for i, name in enumerate(names):
-            blos[name] = F.when(small, F.col("__mn")).otherwise(
-                F.element_at("__bp", 2 * i + 1)
-            )
-            bhis[name] = F.when(small, F.col("__mx")).otherwise(
-                F.element_at("__bp", 2 * i + 2)
-            )
-        tot_expr = F.col("__tot")
-        chk_expr = F.col("__chk")
-        src = joined
-
-    # live per-group count + value checksum alongside the snapshots:
-    # the runtime staleness guard (ADVICE r10/r11) — see the
-    # assert_true below
-    cnt_aggs = [
-        F.first(tot_expr).alias("__tot"),
-        F.count("*").alias("__tot_live"),
-        F.first(chk_expr).alias("__chk"),
-        F.bit_xor(F.xxhash64(v)).alias("__chk_live"),
-    ]
-    in_any_band = None
-    for name in names:
-        blo, bhi = blos[name], bhis[name]
-        cnt_aggs.append(F.sum((v < blo).cast("long")).alias(f"__nb_{name}"))
-        band_pred = (v >= blo) & (v <= bhi)
-        in_any_band = (
-            band_pred if in_any_band is None else (in_any_band | band_pred)
-        )
-    counts = (
-        src.groupBy(*g).agg(*cnt_aggs) if g else src.groupBy().agg(*cnt_aggs)
-    )
-    col_aggs = []
-    for name in names:
-        blo, bhi = blos[name], bhis[name]
-        col_aggs.append(
-            F.sort_array(
-                F.collect_list(F.when((v >= blo) & (v <= bhi), v))
-            ).alias(f"__band_{name}")
-        )
-    jf = src.filter(in_any_band)
-    collects = (
-        jf.groupBy(*g).agg(*col_aggs) if g else jf.groupBy().agg(*col_aggs)
-    )
-    # group keys are the aggregate's own grain — the rejoin is tiny and
-    # broadcast.  A group whose every row fell outside all bands cannot
-    # exist (each band contains its straddle ranks by construction), but
-    # a left join keeps the failure mode visible (NULL band → NULL out)
-    # rather than silently dropping the group.  NULL-SAFE key equality:
-    # a NULL group key is a legal grouping value on both sides, and a
-    # plain equi-join would orphan its counts row from its collects row
-    # (caught by tests/test_band_paths.py::test_literal_path_null_group_key).
-    if g:
-        right = collects
-        for k in g:
-            right = right.withColumnRenamed(k, f"__r_{k}")
-        cond = None
-        for k in g:
-            e = F.col(k).eqNullSafe(F.col(f"__r_{k}"))
-            cond = e if cond is None else (cond & e)
-        got = counts.join(F.broadcast(right), cond, "left").drop(
-            *[f"__r_{k}" for k in g]
-        )
-    else:
-        got = counts.crossJoin(F.broadcast(collects))
-    # RUNTIME STALENESS GUARD (ADVICE r10, strengthened r11→r12): the
-    # band bounds, __tot and __chk are a BUILD-TIME snapshot; the
-    # confirm pass reads LIVE data.  If the source mutated between
-    # build and execution the result would be silently wrong — so every
-    # output value is gated on BOTH the live per-group count and the
-    # live value checksum matching their snapshots (assert_true returns
-    # NULL on success and fails the job otherwise; per-GROUP-row cost
-    # plus one hash per row in the counts aggregate).  Detection scope:
-    # any add/remove of non-null values within a snapshotted group
-    # (count), any equal-count substitution of values (checksum), a
-    # wholly NEW group on either path (its snapshot columns are NULL —
-    # unmatched when-chain on the literal path, LEFT-join miss on the
-    # fallback path — and assert_true(NULL) throws).  A group fully
-    # REMOVED from the source yields no live row at all: detectable
-    # only by the caller (the output loses that group's row), not by a
-    # row-level guard.  Residual blind spot: mutations whose added and
-    # removed value multisets have equal size and equal xor (see the
-    # __chk comment at the bands aggregate).
-    stale_ok = F.assert_true(
-        (F.col("__tot_live") == F.col("__tot"))
-        & (F.col("__chk_live") == F.col("__chk")),
-        F.lit(
-            "grouped_quantiles_band: source changed since the plan was "
-            "built (band bounds are a build-time snapshot) — rebuild the "
-            "plan after any source mutation"
-        ),
-    )
-    out = list(g)
-    for name, q in quantiles.items():
-        pos = F.lit(q) * (F.col("__tot") - 1).cast("double")
+    n = F.col("__n0")
+    out = []
+    for i, (name, q) in enumerate(quantiles.items()):
+        pos = F.lit(q) * (n - 1).cast("double")
         lo_rank = F.floor(pos) + 1  # 1-based global rank of the floor value
         frac = pos - F.floor(pos)
-        arr = F.col(f"__band_{name}")
-        v_lo = F.element_at(arr, (lo_rank - F.col(f"__nb_{name}")).cast("int"))
-        v_hi = F.element_at(
-            arr, (lo_rank + 1 - F.col(f"__nb_{name}")).cast("int")
-        )
+        arr, nb = F.col(f"__band0_{i}"), F.col(f"__nb0_{i}")
+        v_lo = F.element_at(arr, (lo_rank - nb).cast("int")).cast("double")
+        v_hi = F.element_at(arr, (lo_rank + 1 - nb).cast("int")).cast("double")
         # frac == 0 is exact (q·(n−1) hits an integer only when the double
         # product is integral), and v_lo·1.0 ≡ v_lo bitwise — emit v_lo
         # directly so a missing rank-(lo+1) row can never inject a NULL.
-        expr = F.when(frac == 0, v_lo.cast("double")).otherwise(
-            v_lo.cast("double") * (F.lit(1.0) - frac)
-            + v_hi.cast("double") * frac
+        expr = F.when(frac == 0, v_lo).otherwise(
+            v_lo * (F.lit(1.0) - frac) + v_hi * frac
         )
-        out.append(F.when(stale_ok.isNull(), expr).alias(name))
-    return got.select(*out)
+        out.append(F.when(n > 0, expr).alias(name))
+    return core.select(*group_cols, *out)
 
 
 def order_statistic_tuples(
@@ -573,10 +550,8 @@ def order_statistic_tuples(
     out, one struct column ``{vc}_{name}`` per (dimension, cut).
     Targets are RATIONAL on purpose: ``floor(n·(1/3))`` in doubles can
     land one rank off ``n div 3`` when the truncated binary fraction
-    rounds down across an integer; integer arithmetic is
-    convention-exact against a ``CAST(x // 3 AS ...)`` oracle.  Same
-    sketch-band + in-band-confirm plan as
-    :func:`grouped_quantiles_band` (two scans, zero windows).
+    rounds down across an integer; the in-plan integer ``div`` is
+    convention-exact against a ``CAST(x // 3 AS ...)`` oracle.
 
     The boundary consumer's contract: ``row_number() OVER (ORDER BY v,
     tb)`` ≤ floor(frac·n)  ⇔  struct(v, tb) ≤ the returned boundary
@@ -586,163 +561,27 @@ def order_statistic_tuples(
     broadcast back — per-row classification is a codegen'd struct
     comparison, no rank column ever materializes.
 
-    Band regime as in grouped_quantiles_band: whole-domain collect for
-    n < 2·accuracy, sketch band at frac ± 4/accuracy otherwise (the
-    target rank (n·num) div den sits strictly inside by ≥ 2 ranks).
-    Ties in a value column are resolved by the in-band sort on (v, tb);
-    the band is value-only, so all tuples sharing a boundary value ride
-    the collect — tie mass bounds the state, exactly as the grouped
-    form.  A rank target of 0 (num = 0, or n < den/num) has no boundary
-    tuple: the struct is NULL and the caller must coalesce its
-    comparison (no row has rank ≤ 0).
-
-    ALL dimensions and ALL cut fractions share ONE bands pass and ONE
-    confirm pass — per dimension a single array-probe sketch (sketch
-    maintenance dominates; see grouped_quantiles_band).  Per-dimension
-    NULL values are excluded from that dimension's count/band (aggregate
-    semantics), matching a per-dimension ``WHERE v IS NOT NULL`` rank.
-
-    EAGER/SNAPSHOT CONTRACT (same as :func:`grouped_quantiles_band`):
-    plan construction collects the one-row band frame and inlines every
-    bound, count, and rank target as a literal — including ``n`` itself.
-    The returned DataFrame snapshots the source as of build time;
-    re-executing after a source mutation mixes stale bounds/targets with
-    live in-band data.  Rebuild after any mutation.  r11 (ADVICE r10):
-    as in grouped_quantiles_band, violation now fails at runtime — the
-    confirm aggregate carries live counts and every output is gated on
-    ``assert_true(live == snapshot)``."""
-    eps = 1.0 / accuracy
-    src = df.select(*value_cols, F.col(tiebreak_col).alias("__tb"))
-    probes: list[float] = []
-    for num, den in rank_fracs.values():
-        q = num / den
-        probes.append(max(0.0, q - 4 * eps))
-        probes.append(min(1.0, q + 4 * eps))
-    def _vchk(vc: str) -> F.Column:
-        # order-independent per-dimension value checksum (r12, same
-        # rationale as grouped_quantiles_band's __chk): NULLs are
-        # excluded so the checksum tracks exactly the values __n_{vc}
-        # counts (bit_xor ignores NULL inputs; the when() maps null
-        # rows to NULL)
-        v = F.col(vc)
-        return F.bit_xor(F.when(v.isNotNull(), F.xxhash64(v)))
-
-    band_aggs = [F.count("*").alias("__tot")]
-    for vc in value_cols:
-        band_aggs += [
-            F.count(vc).alias(f"__n_{vc}"),
-            _vchk(vc).alias(f"__chk_{vc}"),
-            F.min(vc).alias(f"__mn_{vc}"),
-            F.max(vc).alias(f"__mx_{vc}"),
-            F.percentile_approx(
-                vc, F.array(*[F.lit(p) for p in probes]), F.lit(accuracy)
-            ).alias(f"__bp_{vc}"),
-        ]
-    bands = src.groupBy().agg(*band_aggs)
-    # The band frame is ONE row — read it out and inline every bound as
-    # a literal (r9; same two defects grouped_quantiles_band had): the
-    # un-materialized crossJoin re-ran the sketch scan inside the
-    # confirm job, and one ObjectHashAggregate carrying sums +
-    # collect_lists evaluated every row interpreted.  Now: counts ride a
-    # codegen HashAggregate over literal comparisons, collects see only
-    # the band-prefiltered rows, targets are exact driver-side integer
-    # arithmetic.  Measured on xq11 (3 dimensions × 2 cuts over the
-    # per-customer grain): 8.8 → ~5 s at the x100 replica.
-    brow = bands.collect()[0]
-    bounds: dict[tuple[str, str], tuple] = {}
-    for vc in value_cols:
-        n_vc = brow[f"__n_{vc}"]
-        small = n_vc < 2 * accuracy
-        for i, name in enumerate(rank_fracs):
-            bp = brow[f"__bp_{vc}"]
-            blo_v = brow[f"__mn_{vc}"] if small else (bp[2 * i] if bp else None)
-            bhi_v = (
-                brow[f"__mx_{vc}"] if small else (bp[2 * i + 1] if bp else None)
-            )
-            bounds[(vc, name)] = (blo_v, bhi_v)
-    # live counts alongside the snapshot literals: the runtime staleness
-    # guard (ADVICE r10) — see the assert_true gating below
-    cnt_aggs = [F.count("*").alias("__tot_live")]
-    for vc in value_cols:
-        cnt_aggs += [
-            F.count(vc).alias(f"__n_live_{vc}"),
-            _vchk(vc).alias(f"__chk_live_{vc}"),
-        ]
-    in_any_band = None
-    for vc in value_cols:
-        v = F.col(vc)
-        for name in rank_fracs:
-            blo_v, bhi_v = bounds[(vc, name)]
-            cnt_aggs.append(
-                F.sum((v < F.lit(blo_v)).cast("long")).alias(
-                    f"__nb_{vc}_{name}"
-                )
-            )
-            band_pred = (v >= F.lit(blo_v)) & (v <= F.lit(bhi_v))
-            in_any_band = (
-                band_pred
-                if in_any_band is None
-                else (in_any_band | band_pred)
-            )
-    counts = src.groupBy().agg(*cnt_aggs)
-    col_aggs = []
-    for vc in value_cols:
-        v = F.col(vc)
-        for name in rank_fracs:
-            blo_v, bhi_v = bounds[(vc, name)]
-            col_aggs.append(
-                F.sort_array(
-                    F.collect_list(
-                        F.when(
-                            (v >= F.lit(blo_v)) & (v <= F.lit(bhi_v)),
-                            F.struct(
-                                v.alias("v"), F.col("__tb").alias("tb")
-                            ),
-                        )
-                    )
-                ).alias(f"__band_{vc}_{name}")
-            )
-    collects = src.filter(in_any_band).groupBy().agg(*col_aggs)
-    got = counts.crossJoin(F.broadcast(collects))
-    _stale_msg = (
-        "order_statistic_tuples: source changed since the plan was built "
-        "(bounds/targets are a build-time snapshot) — rebuild the plan "
-        "after any source mutation"
-    )
-    tot_ok = F.assert_true(
-        F.col("__tot_live") == F.lit(brow["__tot"]), F.lit(_stale_msg)
-    )
-    out = [
-        F.when(tot_ok.isNull(), F.lit(brow["__tot"]))
-        .cast("long")
-        .alias("n")
-    ]
-    for vc in value_cols:
-        # count + checksum (r12): count alone passed an equal-count
-        # value substitution silently; NULL-safe equality on the
-        # checksum — both sides are NULL when the dimension has no
-        # non-null values at all, which is a MATCH, not a mutation
-        vc_ok = F.assert_true(
-            (F.col(f"__n_live_{vc}") == F.lit(brow[f"__n_{vc}"]))
-            & F.col(f"__chk_live_{vc}").eqNullSafe(
-                F.lit(brow[f"__chk_{vc}"])
-            ),
-            F.lit(_stale_msg),
-        )
-        for name, (num, den) in rank_fracs.items():
-            target = (brow[f"__n_{vc}"] * num) // den  # exact int, driver
-            idx = (F.lit(target) - F.col(f"__nb_{vc}_{name}")).cast("int")
+    On the sketch-band core (:func:`_sketch_band`, no group keys,
+    payload ``struct(v, tb)``): ALL dimensions and ALL cuts share ONE
+    band pass and ONE confirm pass.  Ties in a value column are resolved
+    by the in-band sort on (v, tb); the band is value-only, so all
+    tuples sharing a boundary value ride the collect.  Per-dimension
+    NULL values are excluded from that dimension's count and band,
+    matching a per-dimension ``WHERE v IS NOT NULL`` rank.  A rank
+    target of 0 (num = 0, or n < den/num) has no boundary tuple: the
+    struct is NULL and the caller must coalesce its comparison (no row
+    has rank ≤ 0).  Same snapshot contract and runtime staleness guard
+    as :func:`grouped_quantiles_band`."""
+    fracs = [num / den for num, den in rank_fracs.values()]
+    core = _sketch_band(df, [], value_cols, fracs, tiebreak_col, accuracy)
+    out = []
+    for j, vc in enumerate(value_cols):
+        n = F.col(f"__n{j}").cast("long")
+        for i, (name, (num, den)) in enumerate(rank_fracs.items()):
+            target = F.call_function("div", n * num, F.lit(den))
+            idx = (target - F.col(f"__nb{j}_{i}")).cast("int")
             out.append(
-                # the when() keeps the struct type even when target <= 0
-                # is decided at the driver (a bare F.lit(None) would be
-                # NullType and break callers' struct comparisons)
-                F.when(F.lit(target <= 0), F.lit(None))
-                .otherwise(
-                    F.when(
-                        vc_ok.isNull(),
-                        F.element_at(F.col(f"__band_{vc}_{name}"), idx),
-                    )
-                )
+                F.when(target > 0, F.element_at(F.col(f"__band{j}_{i}"), idx))
                 .alias(f"{vc}_{name}")
             )
-    return got.select(*out)
+    return core.select(*out)

@@ -504,7 +504,7 @@ def q_xq11(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["rec_day", "n_orders", "revc"],
         "o_custkey",
         {"b1": (1, 3), "b2": (2, 3)},
-    ).drop("n")
+    )
 
     def tercile(dim: str) -> Column:
         t = F.struct(
@@ -769,8 +769,8 @@ def q_robust_group_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
        double at every SF — asserted by bit-exact parity vs the
        decimal-summing oracle), so every sum below is an exact long.
     2. ONE pass: per group, count + total cents + a single 6-probe GK
-       sketch banding ranks 0.05n, 0.95n, 0.5n (rank slack proof in
-       ranking.grouped_quantiles_band).
+       sketch banding ranks 0.05n, 0.95n, 0.5n (ranking.sketch_band_edges:
+       the rank-slack rule and whole-domain regime of the band core).
     3. ONE confirm pass: per band, exact below-band count and cents sum
        plus the bounded in-band collect.
     4. Final projection (grain rows only): the trimmed sum is the exact
@@ -788,36 +788,30 @@ def q_robust_group_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Four scans of orders total, zero windows, zero joins wider than a
     broadcast of one row per group."""
     from ..functions.aggs import cents
-    from ..operators.ranking import grouped_quantiles_band
+    from ..operators.ranking import grouped_quantiles_band, sketch_band_edges
 
     g = "o_orderpriority"
     acc = 2000
-    eps = 1.0 / acc
     o = table(spark, sf_dir, "orders").select(g, "o_totalprice")
     src = o.select(
         g, cents("o_totalprice").alias("vc")
     )
-    probes = [
-        p
-        for q in (0.05, 0.95, 0.5)
-        for p in (max(0.0, q - 4 * eps), min(1.0, q + 4 * eps))
-    ]
+    vc = F.col("vc")
+    tags = ("lo", "hi", "md")
+    edges = sketch_band_edges(vc, [0.05, 0.95, 0.5], acc)
     bands = src.groupBy(g).agg(
         F.count("*").alias("n"),
-        F.min("vc").alias("mn"),
-        F.max("vc").alias("mx"),
         F.sum("vc").alias("s_tot"),
-        F.percentile_approx(
-            "vc", F.array(*[F.lit(p) for p in probes]), F.lit(acc)
-        ).alias("bp"),
+        *[
+            e.alias(f"{side}_{tag}")
+            for tag, pair in zip(tags, edges)
+            for side, e in zip(("blo", "bhi"), pair)
+        ],
     )
     j = src.join(F.broadcast(bands), g)
-    small = F.col("n") < F.lit(2 * acc)
-    vc = F.col("vc")
 
-    def band_aggs(i: int, tag: str):
-        blo = F.when(small, F.col("mn")).otherwise(F.element_at("bp", 2 * i + 1))
-        bhi = F.when(small, F.col("mx")).otherwise(F.element_at("bp", 2 * i + 2))
+    def band_aggs(tag: str):
+        blo, bhi = F.col(f"blo_{tag}"), F.col(f"bhi_{tag}")
         return [
             F.sum((vc < blo).cast("long")).alias(f"nb_{tag}"),
             F.coalesce(F.sum(F.when(vc < blo, vc)), F.lit(0).cast("long")).alias(
@@ -831,9 +825,7 @@ def q_robust_group_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     got = j.groupBy(g).agg(
         F.first("n").alias("n"),
         F.first("s_tot").alias("s_tot"),
-        *band_aggs(0, "lo"),
-        *band_aggs(1, "hi"),
-        *band_aggs(2, "md"),
+        *[a for tag in tags for a in band_aggs(tag)],
     )
 
     n = F.col("n")

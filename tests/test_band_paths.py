@@ -1,16 +1,22 @@
-"""Pin the r9 band-primitive path split and the q9 predicate fold.
+"""Pin the two band-attach forms of the sketch-band core and the q9
+predicate fold.
 
-r9 made grouped_quantiles_band pick between two physical forms:
-- literal path (<= 64 groups): band bounds collected and inlined as
-  null-safe when-chains — every registry caller takes this path;
-- broadcast-join path (> 64 groups, or unliteralizable values): the
-  100 TB form for high-cardinality grouping.
+``ranking._sketch_band`` (behind grouped_quantiles_band and
+order_statistic_tuples) attaches its build-time band rows in one of two
+physical forms, chosen by one predicate on the band row count:
+- literal path (<= 64 band rows, and always with no group keys): band
+  columns inlined as null-safe when-chains of literals — every registry
+  caller takes this path;
+- broadcast-join path (> 64 groups): the band frame materialized and
+  attached by a null-safe LEFT broadcast join, the 100 TB form for
+  high-cardinality grouping.
 
-Because no registry query exercises the join path anymore, these tests
-are what keeps it correct: both paths must equal Spark's exact
+Because no registry query exercises the join path, these tests are
+what keeps it correct: both paths must equal Spark's exact
 ``percentile`` on the same data, including the small-group regime
-(n < 2·accuracy → whole-domain band) and NULL group keys (null-safe
-when-chain matching).
+(n < 2·accuracy → whole-domain band), NULL group keys, and groups whose
+values are all NULL (kept, with a NULL quantile).  The staleness tests
+pin the one runtime guard against a source mutated after the build.
 
 q9's partsupp arm collapsed from a join against the synthesized table to
 an OR-of-4 membership predicate + inline supplycost expression; the
@@ -110,6 +116,50 @@ def test_fallback_path_null_group_key(spark):
     assert None in got
     for k in want:
         assert math.isclose(got[k], want[k], abs_tol=1e-9), k
+
+
+def test_no_group_keys_empty_and_all_null_give_null_row(spark):
+    """With no group keys, an empty frame and an all-NULL value column
+    each give the single NULL row SQL ``percentile`` gives.  The guard
+    compares the NULL checksum of "no values" null-safely, so neither
+    case is mistaken for a source that changed since the build."""
+    from ida_dataengineerproject_spark.operators.ranking import (
+        grouped_quantiles_band,
+    )
+
+    frames = {
+        "empty": spark.createDataFrame([], "v double"),
+        "all_null": spark.createDataFrame([(None,)] * 5, "v double"),
+    }
+    for label, df in frames.items():
+        want = [
+            tuple(r)
+            for r in df.agg(F.expr("percentile(v, 0.5)").alias("med")).collect()
+        ]
+        got = [
+            tuple(r)
+            for r in grouped_quantiles_band(df, "v", [], {"med": 0.5}).collect()
+        ]
+        assert got == want == [(None,)], label
+
+
+def test_all_null_group_kept_on_both_paths(spark):
+    """A group whose values are all NULL keeps its row with a NULL
+    quantile, as ``percentile(v, q) GROUP BY g`` keeps it — on the
+    literal path (5 groups) and on the broadcast-join path (81)."""
+    for n_groups in (5, 81):
+        rows = [(0, None)] * 30 + [
+            (g, float((g * 37 + i * 13) % 500))
+            for g in range(1, n_groups)
+            for i in range(40)
+        ]
+        df = spark.createDataFrame(rows, "g int, v double")
+        got = _band(spark, df, "g", "v", 0.5, accuracy=200)
+        want = _exact(spark, df, "g", "v", 0.5)
+        assert got.keys() == want.keys(), n_groups
+        assert got[0] is None and want[0] is None
+        for k in want.keys() - {0}:
+            assert math.isclose(got[k], want[k], abs_tol=1e-9), (n_groups, k)
 
 
 def test_q9_membership_predicate_equals_partsupp_join(spark):

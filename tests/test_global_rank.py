@@ -117,6 +117,35 @@ def test_building_ranking_plans_launches_no_job(spark):
     assert scheduler.nextJobId() == before
 
 
+def test_building_band_plans_stays_in_job_budget(spark):
+    """The sketch-band operators run their band collect while building
+    (the snapshot contract); that budget must not grow.  Literal path:
+    the collect plus its AQE shuffle stage (2 jobs).  >64-group path:
+    those plus the materialized band frame (3).  The keyless
+    order_statistic_tuples takes the literal path (2)."""
+    from ida_dataengineerproject_spark.operators.ranking import (
+        grouped_quantiles_band,
+        order_statistic_tuples,
+    )
+
+    df = spark.range(1000).select(
+        "id",
+        (F.col("id") * 7 % 101).cast("double").alias("v"),
+        (F.col("id") % 5).alias("g5"),
+        (F.col("id") % 81).alias("g81"),
+    )
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+
+    def jobs(build):
+        before = scheduler.nextJobId()
+        build()
+        return scheduler.nextJobId() - before
+
+    assert jobs(lambda: grouped_quantiles_band(df, "v", ["g5"], {"m": 0.5})) <= 2
+    assert jobs(lambda: grouped_quantiles_band(df, "v", ["g81"], {"m": 0.5})) <= 3
+    assert jobs(lambda: order_statistic_tuples(df, ["v"], "id", {"t": (1, 3)})) <= 2
+
+
 def test_null_values_rank_first_not_dropped(spark):
     """ADVICE r5: NULL value_col rows were silently dropped (NULL bucket
     id fails the offsets join).  They must rank FIRST, matching the
@@ -127,7 +156,7 @@ def test_null_values_rank_first_not_dropped(spark):
     )
     got = {
         (r["id"], r["rank"])
-        for r in global_rank(df, "v", ["id"], n_buckets=8).collect()
+        for r in global_rank(df, "v", ["id"]).collect()
     }
     want = {
         (r["id"], r["rank"]) for r in _naive(df, "v", ["id"]).collect()
@@ -143,7 +172,7 @@ def test_grouped_rank_equals_naive_partitioned_window(spark):
     got = {
         (r["g"], r["id"], r["rank"])
         for r in global_rank(
-            df, "v", ["id"], n_buckets=8, group_cols=["g"]
+            df, "v", ["id"], group_cols=["g"]
         ).collect()
     }
     w = Window.partitionBy("g").orderBy("v", "id")
@@ -233,7 +262,7 @@ def test_global_prefix_max_equals_naive_window(spark):
     got = {
         r["id"]: r["pm"]
         for r in global_prefix_max(
-            df, "o", "v", ["negv", "id"], n_buckets=16, out_col="pm"
+            df, "o", "v", ["negv", "id"], out_col="pm"
         ).collect()
     }
     w = Window.orderBy("o", "negv", "id").rowsBetween(
