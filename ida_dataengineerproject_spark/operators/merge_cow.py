@@ -14,9 +14,10 @@ keys map to:
 2. the surviving rows of impacted buckets are read via partition pruning
    (non-impacted directories are never listed or opened), changed keys
    anti-joined out, upserts unioned in;
-3. the merged buckets are staged to a scratch directory and committed by
-   per-directory delete+rename — untouched buckets keep their exact
-   files (byte-identical, same mtimes), and a bucket whose rows were all
+3. the merged buckets are staged and committed by the per-bucket
+   rename-aside swap of sources/commit.py (``rename_aside``, with its
+   crash-recovery sweep) — untouched buckets keep their exact files
+   (byte-identical, same mtimes), and a bucket whose rows were all
    deleted simply loses its directory (the case dynamic partition
    overwrite cannot express).
 
@@ -26,6 +27,10 @@ amplification (big buckets) against small-file pressure (many buckets),
 and sources/compaction.py's target-size writer applies to the staged
 output unchanged.
 
+The versioned tables below (and operators/merge_mor.py) commit through
+``sources.commit.versioned_commit``: claim ``_log/v{n}.lock``, write new
+directories, write ``_log/v{n}.json``, release the claim.
+
 Reference scope: the reference upserts dimensions row-wise via
 INSERT ... ON CONFLICT (/root/reference/etl/etl_ida.py, op38); this is
 the same MERGE semantics lifted to immutable columnar storage.
@@ -33,13 +38,22 @@ the same MERGE semantics lifted to immutable columnar storage.
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..session import materialize
-
-BUCKET_COL = "__mbucket"
+from ..sources.commit import (  # noqa: F401  (ConcurrentWriteError: re-export)
+    BUCKET_COL,
+    ConcurrentWriteError,
+    filesystem,
+    log_dir,
+    rename_aside,
+    versioned_commit,
+    written_buckets,
+)
 
 
 def bucket_of(key: Column, n_buckets: int) -> Column:
@@ -72,8 +86,6 @@ def merge_cow(
 
     Returns {"n_buckets": ..., "impacted_buckets": [...]} — bounded
     commit metadata, mirroring a table format's commit record."""
-    from ..sources.ingest_ledger import _hadoop_fs
-
     # materialize the changeset once — three consumers (impacted
     # collect, anti-join key set, merged write) otherwise re-run its
     # lineage (r13; see merge_versioned)
@@ -86,90 +98,30 @@ def merge_cow(
     if not impacted:
         return {"n_buckets": n_buckets, "impacted_buckets": []}
 
-    target = spark.read.parquet(path).filter(F.col(BUCKET_COL).isin(impacted))
-    survivors = target.join(
-        ch.select(key).distinct(), on=key, how="left_anti"
-    )
-    upserts = (
-        ch.filter(~F.col(tombstone_col)).drop(tombstone_col)
-        if tombstone_col
-        else ch
-    )
-    merged = survivors.unionByName(
-        upserts.select(*survivors.columns)
-    ).withColumn(BUCKET_COL, F.col(BUCKET_COL).cast("int"))
-
-    staging = path.rstrip("/") + "__staging"
-    merged.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(staging)
-
-    fs, root = _hadoop_fs(spark, path)
-    Path = spark._jvm.org.apache.hadoop.fs.Path
-    # Rename-aside commit (the wap.py pattern, per bucket): the live
-    # directory is MOVED to <path>__prev — never deleted — before the
-    # staged directory is renamed in.  A crash mid-loop therefore never
-    # loses a bucket: its data is under __prev (and the merge result
-    # under __staging); the recovery sweep below restores it on the next
-    # merge.  __prev lives OUTSIDE the table path so a reader listing
-    # <path> mid-commit never sees a malformed partition directory.
-    prev_root = path.rstrip("/") + "__prev"
-    _recover_prev(fs, Path, path, prev_root)
-    fs.mkdirs(Path(prev_root))
-    try:
-        for b in impacted:
-            final_dir = Path(f"{path}/{BUCKET_COL}={b}")
-            staged_dir = Path(f"{staging}/{BUCKET_COL}={b}")
-            prev_dir = Path(f"{prev_root}/{BUCKET_COL}={b}")
-            # Hadoop FileSystem signals most failures by RETURNING FALSE,
-            # not raising — an unchecked rename would fall through to the
-            # staging cleanup below and destroy the only copy of a bucket.
-            if fs.exists(final_dir) and not fs.rename(final_dir, prev_dir):
-                raise IOError(
-                    f"COW commit: could not move {final_dir} aside"
-                )
-            if fs.exists(staged_dir) and not fs.rename(staged_dir, final_dir):
-                if fs.exists(prev_dir) and not fs.rename(prev_dir, final_dir):
-                    raise IOError(
-                        f"COW commit: rename {staged_dir} -> {final_dir} "
-                        f"failed AND rollback failed; previous copy at "
-                        f"{prev_dir}, staged data under {staging}"
-                    )
-                raise IOError(
-                    f"COW commit: rename {staged_dir} -> {final_dir} "
-                    f"failed; bucket rolled back, staged data left under "
-                    f"{staging} for inspection"
-                )
-            # no staged dir: every row of bucket b was deleted — gone
-        fs.delete(Path(prev_root), True)
-        fs.delete(Path(staging), True)
-    finally:
-        # cached file listings of the live path are stale after ANY
-        # rename touching it — including the partial-failure paths
-        spark.catalog.refreshByPath(path)
+    # the swap recovers a crashed earlier commit BEFORE the target is
+    # listed, so the survivors are read from the restored buckets
+    with rename_aside(spark, path, impacted) as staging:
+        target = spark.read.parquet(path).filter(
+            F.col(BUCKET_COL).isin(impacted)
+        )
+        survivors = target.join(
+            ch.select(key).distinct(), on=key, how="left_anti"
+        )
+        merged = survivors.unionByName(
+            _upserts(ch, tombstone_col).select(*survivors.columns)
+        ).withColumn(BUCKET_COL, F.col(BUCKET_COL).cast("int"))
+        merged.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(
+            staging
+        )
     return {"n_buckets": n_buckets, "impacted_buckets": impacted}
 
 
-def _recover_prev(fs, Path, path: str, prev_root: str) -> None:
-    """Self-heal a crashed in-place commit: any bucket directory left
-    under ``__prev`` whose live counterpart is MISSING crashed between
-    the two renames — restore it (the merge never fully committed, so
-    the pre-merge state is the correct rollback).  A __prev bucket whose
-    live counterpart EXISTS was superseded by a completed rename — drop
-    it.  Bounded metadata work: one listing of __prev."""
-    prev = Path(prev_root)
-    if not fs.exists(prev):
-        return
-    for st in fs.listStatus(prev):
-        name = st.getPath().getName()
-        if not (st.isDirectory() and name.startswith(BUCKET_COL + "=")):
-            continue
-        live = Path(f"{path}/{name}")
-        if not fs.exists(live):
-            if not fs.rename(st.getPath(), live):
-                raise IOError(
-                    f"COW recovery: could not restore {st.getPath()}"
-                )
-    if not fs.delete(prev, True):
-        raise IOError(f"COW recovery: could not clear {prev_root}")
+def _upserts(ch: DataFrame, tombstone_col: str | None) -> DataFrame:
+    """The change rows that survive as data: all of them, or the
+    non-tombstoned ones with the tombstone column dropped."""
+    if not tombstone_col:
+        return ch
+    return ch.filter(~F.col(tombstone_col)).drop(tombstone_col)
 
 
 # ---------------------------------------------------------------------------
@@ -185,29 +137,20 @@ def _recover_prev(fs, Path, path: str, prev_root: str) -> None:
 # O(impacted buckets) per commit and old versions stay byte-stable.
 # ---------------------------------------------------------------------------
 
-import json
-
-
-def _log_dir(path: str) -> str:
-    return path.rstrip("/") + "/_log"
-
 
 def _read_log(spark: SparkSession, path: str, version: int | None = None) -> dict:
-    from ..sources.ingest_ledger import _hadoop_fs
-
-    fs, _ = _hadoop_fs(spark, path)
-    Path = spark._jvm.org.apache.hadoop.fs.Path
-    if not fs.exists(Path(_log_dir(path))):
+    fs, Path = filesystem(spark, path)
+    if not fs.exists(Path(log_dir(path))):
         raise FileNotFoundError(f"no commits under {path} (no _log dir)")
     if version is None:
         version = -1
-        for st in fs.listStatus(Path(_log_dir(path))):
+        for st in fs.listStatus(Path(log_dir(path))):
             name = st.getPath().getName()
             if name.startswith("v") and name.endswith(".json"):
                 version = max(version, int(name[1:-5]))
         if version < 0:
             raise FileNotFoundError(f"no commits under {path}")
-    p = Path(f"{_log_dir(path)}/v{version}.json")
+    p = Path(f"{log_dir(path)}/v{version}.json")
     if not fs.exists(p):
         raise FileNotFoundError(f"version {version} does not exist")
     stream = fs.open(p)
@@ -218,81 +161,17 @@ def _read_log(spark: SparkSession, path: str, version: int | None = None) -> dic
     return json.loads(raw)
 
 
-def _write_log(spark: SparkSession, path: str, log: dict) -> None:
-    from ..sources.ingest_ledger import _hadoop_fs
-
-    fs, _ = _hadoop_fs(spark, path)
-    Path = spark._jvm.org.apache.hadoop.fs.Path
-    out = fs.create(Path(f"{_log_dir(path)}/v{log['version']}.json"), False)
-    try:
-        out.write(bytearray(json.dumps(log).encode()))
-    finally:
-        out.close()
-
-
-class ConcurrentWriteError(RuntimeError):
-    """Another writer claimed this commit version first.  Retry the whole
-    operation (it will re-read the log and target the next version).  A
-    stale ``_log/v{n}.lock`` with no matching ``v{n}.json`` and no live
-    writer is a crashed commit — delete the lock to unblock."""
-
-
-def _claim_commit(spark: SparkSession, path: str, version: int) -> None:
-    """Writer-side mutual exclusion: atomically create
-    ``_log/v{version}.lock`` (create with overwrite=False is the one
-    atomic primitive plain Hadoop FS gives us) BEFORE any data directory
-    is written.  Two concurrent writers that both computed
-    ``version = latest + 1`` race on this create; the loser fails HERE,
-    before it can clobber the winner's ``data/v{version}`` files — the
-    window ADVICE r5 flagged (both wrote data with mode=overwrite and
-    only collided later at the log write, after the damage)."""
-    from ..sources.ingest_ledger import _hadoop_fs
-
-    fs, _ = _hadoop_fs(spark, path)
-    Path = spark._jvm.org.apache.hadoop.fs.Path
-    lock = Path(f"{_log_dir(path)}/v{version}.lock")
-    try:
-        fs.create(lock, False).close()
-    except Exception as exc:  # JVM FileAlreadyExists surfaces via py4j
-        raise ConcurrentWriteError(
-            f"commit v{version} of {path} already claimed ({lock}); "
-            f"retry, or remove a stale lock left by a crashed writer"
-        ) from exc
-
-
-def _release_commit(spark: SparkSession, path: str, version: int) -> None:
-    from ..sources.ingest_ledger import _hadoop_fs
-
-    fs, _ = _hadoop_fs(spark, path)
-    Path = spark._jvm.org.apache.hadoop.fs.Path
-    fs.delete(Path(f"{_log_dir(path)}/v{version}.lock"), False)
-
-
 def create_versioned(
     spark: SparkSession, path: str, df: DataFrame, key: str, n_buckets: int
 ) -> int:
     """Commit v0 of a versioned bucketed table: all buckets written under
     data/v0/, log records the mapping."""
-    _claim_commit(spark, path, 0)
-    data = path.rstrip("/") + "/data/v0"
-    df.withColumn(BUCKET_COL, bucket_of(F.col(key), n_buckets)).write.mode(
-        "overwrite"
-    ).partitionBy(BUCKET_COL).parquet(data)
-    buckets = sorted(
-        int(r[0])
-        for r in spark.read.parquet(data).select(BUCKET_COL).distinct().collect()
-    )
-    _write_log(
-        spark,
-        path,
-        {
-            "version": 0,
-            "key": key,
-            "n_buckets": n_buckets,
-            "buckets": {str(b): 0 for b in buckets},
-        },
-    )
-    _release_commit(spark, path, 0)
+    log = {"version": 0, "key": key, "n_buckets": n_buckets, "buckets": {}}
+    with versioned_commit(spark, path, log):
+        data = path.rstrip("/") + "/data/v0"
+        write_bucketed(df, key, n_buckets, data)
+        written = sorted(written_buckets(spark, data))
+        log["buckets"] = {str(b): 0 for b in written}
     return 0
 
 
@@ -345,77 +224,55 @@ def merge_versioned(
     carries over, so old versions remain readable and byte-stable."""
     log = _read_log(spark, path)
     key, n_buckets = log["key"], log["n_buckets"]
-    new_version = log["version"] + 1
+    # shallow clones stay clones: base/base_watermark carry over
+    new_log = dict(
+        log, version=log["version"] + 1, buckets=dict(log["buckets"])
+    )
     # claim the version BEFORE any data write: a concurrent merge that
-    # computed the same new_version fails here instead of overwriting
-    # this writer's data/v{n} directories (ADVICE r5)
-    _claim_commit(spark, path, new_version)
+    # computed the same version fails here instead of overwriting this
+    # writer's data/v{n} directories (ADVICE r5)
+    with versioned_commit(spark, path, new_log):
+        # materialize the changeset ONCE (O(changeset) rows): it is
+        # consumed by the impacted-bucket collect, the anti-join key set
+        # AND the merged write, and its lineage may be arbitrarily
+        # expensive (e.g. a filter over read_version of this very table)
+        # — without this every consumer re-ran it (r13).  Materializing
+        # pre-commit also pins the change rows before any directory of
+        # this table moves.
+        ch = materialize(
+            changes.withColumn(BUCKET_COL, bucket_of(F.col(key), n_buckets))
+        )
+        impacted = sorted(
+            int(r[0]) for r in ch.select(BUCKET_COL).distinct().collect()
+        )
+        live = [b for b in impacted if str(b) in log["buckets"]]
+        # read ONLY the impacted buckets' directories, resolved from the
+        # log — reading the whole version and row-filtering would scan
+        # O(table) per merge (leaf-dir reads carry no partition column to
+        # prune on)
+        live_dirs = _bucket_dirs(path, log, live)
+        merged = _upserts(ch, tombstone_col)
+        if live_dirs:
+            survivors = (
+                spark.read.parquet(*live_dirs)
+                .withColumn(BUCKET_COL, bucket_of(F.col(key), n_buckets))
+                .join(ch.select(key).distinct(), on=key, how="left_anti")
+            )
+            merged = survivors.unionByName(merged.select(*survivors.columns))
+        data = f"{path.rstrip('/')}/data/v{new_log['version']}"
+        merged.withColumn(
+            BUCKET_COL, F.col(BUCKET_COL).cast("int")
+        ).write.mode("overwrite").partitionBy(BUCKET_COL).parquet(data)
 
-    # materialize the changeset ONCE (O(changeset) rows): it is consumed
-    # by the impacted-bucket collect, the anti-join key set AND the
-    # merged write, and its lineage may be arbitrarily expensive (e.g. a
-    # filter over read_version of this very table) — without this every
-    # consumer re-ran it (r13).  Materializing pre-commit also pins the
-    # change rows before any directory of this table moves.
-    ch = materialize(
-        changes.withColumn(BUCKET_COL, bucket_of(F.col(key), n_buckets))
-    )
-    impacted = sorted(
-        int(r[0]) for r in ch.select(BUCKET_COL).distinct().collect()
-    )
-    live = [b for b in impacted if str(b) in log["buckets"]]
-    # read ONLY the impacted buckets' directories, resolved from the log —
-    # reading the whole version and row-filtering would scan O(table) per
-    # merge (leaf-dir reads carry no partition column to prune on)
-    live_dirs = _bucket_dirs(path, log, live)
-    target = spark.read.parquet(*live_dirs) if live_dirs else None
-
-    upserts = (
-        ch.filter(~F.col(tombstone_col)).drop(tombstone_col)
-        if tombstone_col
-        else ch
-    )
-    if target is not None:
-        survivors = target.withColumn(
-            BUCKET_COL, bucket_of(F.col(key), n_buckets)
-        ).join(ch.select(key).distinct(), on=key, how="left_anti")
-        merged = survivors.unionByName(upserts.select(*survivors.columns))
-    else:
-        merged = upserts
-    data = f"{path.rstrip('/')}/data/v{new_version}"
-    merged.withColumn(BUCKET_COL, F.col(BUCKET_COL).cast("int")).write.mode(
-        "overwrite"
-    ).partitionBy(BUCKET_COL).parquet(data)
-
-    # list written bucket dirs via the filesystem: an all-deletes commit
-    # writes an EMPTY directory, which parquet cannot re-read for schema
-    from ..sources.ingest_ledger import _hadoop_fs
-
-    fs, _ = _hadoop_fs(spark, data)
-    Path = spark._jvm.org.apache.hadoop.fs.Path
-    written = {
-        int(st.getPath().getName().split("=", 1)[1])
-        for st in fs.listStatus(Path(data))
-        if st.isDirectory() and st.getPath().getName().startswith(BUCKET_COL + "=")
-    }
-    buckets = dict(log["buckets"])
-    for b in impacted:
-        if b in written:
-            buckets[str(b)] = new_version
-        else:
-            buckets.pop(str(b), None)  # bucket fully deleted this commit
-    new_log = {
-        "version": new_version,
-        "key": key,
-        "n_buckets": n_buckets,
-        "buckets": buckets,
-    }
-    for k in ("base", "base_watermark"):  # shallow clones stay clones
-        if k in log:
-            new_log[k] = log[k]
-    _write_log(spark, path, new_log)
-    _release_commit(spark, path, new_version)
-    return new_version
+        # an all-deletes commit writes an EMPTY directory, which parquet
+        # cannot re-read for schema — the listing sees no bucket there
+        written = written_buckets(spark, data)
+        for b in impacted:
+            if b in written:
+                new_log["buckets"][str(b)] = new_log["version"]
+            else:  # bucket fully deleted this commit
+                new_log["buckets"].pop(str(b), None)
+    return new_log["version"]
 
 
 def vacuum_versioned(spark: SparkSession, path: str, retain_from: int) -> dict:
@@ -438,19 +295,14 @@ def vacuum_versioned(spark: SparkSession, path: str, retain_from: int) -> dict:
 
     Returns {"deleted_dirs", "retained_dirs", "deleted_logs",
     "retain_from", "latest"}."""
-    from ..sources.ingest_ledger import _hadoop_fs
-
+    fs, Path = filesystem(spark, path)
     latest = _read_log(spark, path)["version"]
     # a shallow clone's history starts at its watermark, not 0 — its
     # earliest log IS its creation entry, and retaining below it would
     # try to read logs that never existed here
-    from ..sources.ingest_ledger import _hadoop_fs as _hfs
-
-    fs0, _ = _hfs(spark, path)
-    JPath = spark._jvm.org.apache.hadoop.fs.Path
     earliest = min(
         int(st.getPath().getName()[1:-5])
-        for st in fs0.listStatus(JPath(_log_dir(path)))
+        for st in fs.listStatus(Path(log_dir(path)))
         if st.getPath().getName().startswith("v")
         and st.getPath().getName().endswith(".json")
     )
@@ -472,8 +324,6 @@ def vacuum_versioned(spark: SparkSession, path: str, retain_from: int) -> dict:
             (int(commit), int(b)) for b, commit in log["buckets"].items()
         )
 
-    fs, _ = _hadoop_fs(spark, path)
-    Path = spark._jvm.org.apache.hadoop.fs.Path
     data_root = Path(path.rstrip("/") + "/data")
     deleted = retained = 0
     # a fresh shallow clone owns no data dirs yet — nothing to reclaim
@@ -484,24 +334,22 @@ def vacuum_versioned(spark: SparkSession, path: str, retain_from: int) -> dict:
             continue
         commit = int(name[1:])
         live_left = False
-        for st in fs.listStatus(commit_st.getPath()):
-            leaf = st.getPath().getName()
-            if not (st.isDirectory() and leaf.startswith(BUCKET_COL + "=")):
-                continue  # _SUCCESS etc. — removed with the commit dir
-            b = int(leaf.split("=", 1)[1])
+        # _SUCCESS etc. are removed with the commit dir
+        for b in written_buckets(spark, commit_st.getPath().toString()):
             if (commit, b) in keep:
                 live_left = True
                 retained += 1
-            else:
-                if not fs.delete(st.getPath(), True):
-                    raise IOError(f"vacuum: could not delete {st.getPath()}")
-                deleted += 1
+                continue
+            leaf = Path(commit_st.getPath(), f"{BUCKET_COL}={b}")
+            if not fs.delete(leaf, True):
+                raise IOError(f"vacuum: could not delete {leaf}")
+            deleted += 1
         if not live_left and not fs.delete(commit_st.getPath(), True):
             raise IOError(f"vacuum: could not delete {commit_st.getPath()}")
 
     deleted_logs = 0
     for v in range(retain_from):
-        p = Path(f"{_log_dir(path)}/v{v}.json")
+        p = Path(f"{log_dir(path)}/v{v}.json")
         if fs.exists(p):
             if not fs.delete(p, False):
                 raise IOError(f"vacuum: could not delete {p}")
@@ -626,5 +474,6 @@ def shallow_clone(spark: SparkSession, src_path: str, dst_path: str) -> int:
                 "cannot shallow-clone a clone that has diverged from its "
                 "base — materialize it first (read latest + create_versioned)"
             )
-    _write_log(spark, dst_path, clone_log)
+    with versioned_commit(spark, dst_path, clone_log):
+        pass  # no data moves: the log entry is the whole clone
     return version

@@ -20,11 +20,14 @@ trade — the Delta deletion-vector / Iceberg merge-on-read position:
   their vectors — the background maintenance that keeps read
   amplification bounded.
 
-Commit/versioning model matches merge_cow's versioned tables: a JSON log
-maps each bucket to the list of commits holding its data and deletion
+Commit/versioning model matches merge_cow's versioned tables, through
+the same ``sources.commit.versioned_commit`` (claim, write, log,
+release — the claim is released when a commit fails): a JSON log maps
+each bucket to the list of commits holding its data and deletion
 vectors; every commit writes NEW directories only (data/v{c}/…,
 dv/v{c}/…), so concurrent readers of the previous log never see a
-half-applied commit.
+half-applied commit.  Written buckets come from
+``sources.commit.written_buckets`` (a listing, no Spark job).
 
 Row-level semantics: every stored row carries ``__commit`` (the commit
 that wrote it); a deletion-vector entry (key, c) tombstones every stored
@@ -52,35 +55,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..session import materialize, run_concurrently
-from .merge_cow import (
-    BUCKET_COL,
-    _claim_commit,
-    _read_log,
-    _release_commit,
-    _write_log,
-    bucket_of,
-)
+from ..sources.commit import BUCKET_COL, versioned_commit, written_buckets
+from .merge_cow import _read_log, _upserts, bucket_of
 
 COMMIT_COL = "__commit"
-
-
-def _written_buckets(spark: SparkSession, commit_dir: str) -> set[int]:
-    """Bucket ids actually materialized under a commit directory, via the
-    Hadoop FS (an all-tombstone upsert writes an empty data dir, which
-    parquet cannot re-read for schema — merge_cow trap 20)."""
-    from ..sources.ingest_ledger import _hadoop_fs
-
-    fs, _ = _hadoop_fs(spark, commit_dir)
-    Path = spark._jvm.org.apache.hadoop.fs.Path
-    p = Path(commit_dir)
-    if not fs.exists(p):
-        return set()
-    return {
-        int(st.getPath().getName().split("=", 1)[1])
-        for st in fs.listStatus(p)
-        if st.isDirectory()
-        and st.getPath().getName().startswith(BUCKET_COL + "=")
-    }
 
 
 def _leaf_dirs(path: str, log: dict, kind: str, buckets=None) -> list[str]:
@@ -101,25 +79,20 @@ def create_mor(
 ) -> int:
     """Commit v0: the base data, bucket-partitioned, each row stamped
     with ``__commit = 0``."""
-    _claim_commit(spark, path, 0)
-    data = f"{path.rstrip('/')}/data/v0"
-    (
-        df.withColumn(BUCKET_COL, bucket_of(F.col(key), n_buckets))
-        .withColumn(COMMIT_COL, F.lit(0).cast("long"))
-        .write.mode("overwrite")
-        .partitionBy(BUCKET_COL)
-        .parquet(data)
-    )
-    buckets = {
-        str(b): {"data": [0], "dv": []}
-        for b in sorted(_written_buckets(spark, data))
-    }
-    _write_log(
-        spark,
-        path,
-        {"version": 0, "key": key, "n_buckets": n_buckets, "buckets": buckets},
-    )
-    _release_commit(spark, path, 0)
+    log = {"version": 0, "key": key, "n_buckets": n_buckets, "buckets": {}}
+    with versioned_commit(spark, path, log):
+        data = f"{path.rstrip('/')}/data/v0"
+        (
+            df.withColumn(BUCKET_COL, bucket_of(F.col(key), n_buckets))
+            .withColumn(COMMIT_COL, F.lit(0).cast("long"))
+            .write.mode("overwrite")
+            .partitionBy(BUCKET_COL)
+            .parquet(data)
+        )
+        log["buckets"] = {
+            str(b): {"data": [0], "dv": []}
+            for b in sorted(written_buckets(spark, data))
+        }
     return 0
 
 
@@ -137,65 +110,48 @@ def upsert_mor(
     log = _read_log(spark, path)
     key, n_buckets = log["key"], log["n_buckets"]
     c = log["version"] + 1
+    buckets = {b: dict(e) for b, e in log["buckets"].items()}
     # claim commit c before any data/dv write — the loser of a concurrent
     # race fails here, not after clobbering the winner's v{c} directories
-    _claim_commit(spark, path, c)
+    with versioned_commit(spark, path, dict(log, version=c, buckets=buckets)):
+        # materialize the changeset ONCE (O(changeset) rows): both commit
+        # files below consume it, and its lineage may be arbitrarily
+        # expensive (a filter over the live table, a 3-branch CDC
+        # union...) — without this each write re-ran it (r13, §6
+        # compute-the-proxy-once)
+        ch = materialize(
+            changes.withColumn(BUCKET_COL, bucket_of(F.col(key), n_buckets))
+        )
+        dv = ch.select(
+            F.col(key),
+            F.col(BUCKET_COL),
+            F.lit(c).cast("long").alias(COMMIT_COL),
+        )
+        upserts = _upserts(ch, tombstone_col).withColumn(
+            COMMIT_COL, F.lit(c).cast("long")
+        )
 
-    # materialize the changeset ONCE (O(changeset) rows): both commit
-    # files below consume it, and its lineage may be arbitrarily
-    # expensive (a filter over the live table, a 3-branch CDC union...)
-    # — without this each write re-ran it (r13, §6 compute-the-proxy-once)
-    ch = materialize(
-        changes.withColumn(BUCKET_COL, bucket_of(F.col(key), n_buckets))
-    )
-    dv = ch.select(
-        F.col(key), F.col(BUCKET_COL), F.lit(c).cast("long").alias(COMMIT_COL)
-    )
-    dv_dir = f"{path.rstrip('/')}/dv/v{c}"
-    upserts = (
-        ch.filter(~F.col(tombstone_col)).drop(tombstone_col)
-        if tombstone_col
-        else ch
-    )
-    data_dir = f"{path.rstrip('/')}/data/v{c}"
+        # the DV file set and the append file set are INDEPENDENT jobs
+        # over the checkpointed changeset — overlap them (guide §2.6, the
+        # write_star pattern): both keep the caller's job group, and each
+        # sets its own description on its thread's copy of the local
+        # properties.  Same caveat as write_star: don't run commits
+        # concurrently with scoped-conf operators on the same session
+        # (SQLConf is session-scoped).
+        def _write(kind: str, df: DataFrame) -> None:
+            spark.sparkContext.setJobDescription(f"mor commit v{c}: {kind}")
+            df.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(
+                f"{path.rstrip('/')}/{kind}/v{c}"
+            )
 
-    # the DV file set and the append file set are INDEPENDENT jobs over
-    # the checkpointed changeset — overlap them (guide §2.6, the
-    # write_star pattern): both keep the caller's job group, and each
-    # sets its own description on its thread's copy of the local
-    # properties.  Same caveat as write_star: don't run commits
-    # concurrently with scoped-conf operators on the same session
-    # (SQLConf is session-scoped).
-    def _write(which: str, df: DataFrame, target: str) -> None:
-        spark.sparkContext.setJobDescription(f"mor commit v{c}: {which}")
-        df.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(target)
-
-    run_concurrently(
-        spark,
-        [
-            partial(_write, "dv", dv, dv_dir),
-            partial(
-                _write,
-                "data",
-                upserts.withColumn(COMMIT_COL, F.lit(c).cast("long")),
-                data_dir,
-            ),
-        ],
-    )
-
-    buckets = {b: dict(e) for b, e in log["buckets"].items()}
-    for b in _written_buckets(spark, dv_dir):
-        entry = buckets.setdefault(str(b), {"data": [], "dv": []})
-        entry["dv"] = list(entry["dv"]) + [c]
-    for b in _written_buckets(spark, data_dir):
-        entry = buckets.setdefault(str(b), {"data": [], "dv": []})
-        entry["data"] = list(entry["data"]) + [c]
-    _write_log(
-        spark,
-        path,
-        {"version": c, "key": key, "n_buckets": n_buckets, "buckets": buckets},
-    )
-    _release_commit(spark, path, c)
+        run_concurrently(
+            spark,
+            [partial(_write, "dv", dv), partial(_write, "data", upserts)],
+        )
+        for kind in ("dv", "data"):
+            for b in written_buckets(spark, f"{path.rstrip('/')}/{kind}/v{c}"):
+                entry = buckets.setdefault(str(b), {"data": [], "dv": []})
+                entry[kind] = list(entry[kind]) + [c]
     return c
 
 
@@ -290,28 +246,21 @@ def compact_mor(
     if not chosen and not dv_only:
         return {"version": log["version"], "compacted": []}
 
-    _claim_commit(spark, path, c)
-    written: set[int] = set()
-    if chosen:
-        live = read_mor(spark, path, buckets=set(chosen))
-        data_dir = f"{path.rstrip('/')}/data/v{c}"
-        (
-            live.withColumn(BUCKET_COL, bucket_of(F.col(key), n_buckets))
-            .withColumn(COMMIT_COL, F.lit(c).cast("long"))
-            .write.mode("overwrite")
-            .partitionBy(BUCKET_COL)
-            .parquet(data_dir)
-        )
-        written = _written_buckets(spark, data_dir)
-    for b in chosen:
-        if b in written:
-            buckets[str(b)] = {"data": [c], "dv": []}
-        else:
-            buckets.pop(str(b), None)  # every row tombstoned
-    _write_log(
-        spark,
-        path,
-        {"version": c, "key": key, "n_buckets": n_buckets, "buckets": buckets},
-    )
-    _release_commit(spark, path, c)
+    with versioned_commit(spark, path, dict(log, version=c, buckets=buckets)):
+        if chosen:
+            data_dir = f"{path.rstrip('/')}/data/v{c}"
+            (
+                read_mor(spark, path, buckets=set(chosen))
+                .withColumn(BUCKET_COL, bucket_of(F.col(key), n_buckets))
+                .withColumn(COMMIT_COL, F.lit(c).cast("long"))
+                .write.mode("overwrite")
+                .partitionBy(BUCKET_COL)
+                .parquet(data_dir)
+            )
+            written = written_buckets(spark, data_dir)
+            for b in chosen:
+                if b in written:
+                    buckets[str(b)] = {"data": [c], "dv": []}
+                else:
+                    buckets.pop(str(b), None)  # every row tombstoned
     return {"version": c, "compacted": chosen, "dropped_dv_only": dv_only}

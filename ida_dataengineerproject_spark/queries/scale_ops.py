@@ -333,7 +333,7 @@ def merge_cow_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle computes the identical post-MERGE state relationally from
     the source — so the parity check covers the whole write-merge-commit
     pipeline, not just the merge expression.  Only impacted bucket
-    directories are rewritten (per-directory delete+rename commit);
+    directories are rewritten (per-bucket rename-aside commit);
     untouched buckets keep byte-identical files — asserted in
     tests/test_merge_cow.py.  100 TB: rewrite cost is O(impacted
     buckets) like Delta's COW MERGE; see operators/merge_cow.py."""

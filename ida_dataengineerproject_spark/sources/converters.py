@@ -48,7 +48,7 @@ def normalize_wide(
         m = _MONTH_PAT.search(str(c))
         if m:
             rename[c] = f"{m.group(1)}-{m.group(2)}"
-    out = out.rename(columns=rename)
+    out.columns = [rename.get(c, c) for c in cols]
     month_cols = [c for c in out.columns if _MONTH_PAT.fullmatch(str(c))]
     out = out[["GRUPO_ECONOMICO", "VARIAVEL"] + month_cols]
     out[month_cols] = out[month_cols].astype("string")

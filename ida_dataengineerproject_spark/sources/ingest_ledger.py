@@ -18,13 +18,15 @@ same contract foreachBatch sinks use (tests/test_foreach_batch.py).
 
 The ledger itself is a parquet table of file identities
 (path, size_bytes, mtime_ms).  Listing and existence checks go through
-the Hadoop FileSystem API, so the same code runs against local paths and
-object stores (s3a://, abfss://, …).  Including the modification time in
-the identity means an in-place rewrite is re-ingested even when the new
-file happens to have the SAME byte size (the size-only blind spot); the
-residual blind spot — same name, same size, same filesystem mtime
-granularity — requires a rewrite within one mtime tick and is the same
-contract the Structured Streaming file source accepts.  mtime is
+the Hadoop FileSystem handle of sources/commit.py (``filesystem``, the
+one the lake commit protocol uses), so the same code runs against local
+paths and object stores (s3a://, abfss://, …).  Including the
+modification time in the identity means an in-place rewrite is
+re-ingested even when the new file happens to have the SAME byte size
+(the size-only blind spot); the residual blind spot — same name, same
+size, same filesystem mtime granularity — requires a rewrite within one
+mtime tick and is the same contract the Structured Streaming file source
+accepts.  mtime is
 listing-stable (it changes only when the file actually changes), so
 reruns over an unchanged source stay deterministic.
 """
@@ -33,6 +35,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from .commit import filesystem
 
 LEDGER_SCHEMA = T.StructType(
     [
@@ -45,19 +49,10 @@ LEDGER_SCHEMA = T.StructType(
 _IDENTITY_COLS = ["path", "size_bytes", "mtime_ms"]
 
 
-def _hadoop_fs(spark: SparkSession, path: str):
-    """(FileSystem, Path) for `path` via the JVM Hadoop FS API — works for
-    local paths and object-store URIs alike."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, hpath
-
-
 def read_ledger(spark: SparkSession, ledger_path: str) -> DataFrame:
     """The processed-files ledger (empty DataFrame if none exists yet)."""
-    fs, hpath = _hadoop_fs(spark, ledger_path)
-    if fs.exists(hpath):
+    fs, Path = filesystem(spark, ledger_path)
+    if fs.exists(Path(ledger_path)):
         return spark.read.schema(LEDGER_SCHEMA).parquet(ledger_path)
     return spark.createDataFrame([], LEDGER_SCHEMA)
 
@@ -68,9 +63,9 @@ def list_source_files(
     """Current source listing as (path, size_bytes, mtime_ms) via the
     Hadoop FS API (one list call; on a real lake this is the object-store
     LIST — or its manifest/inventory at very large file counts)."""
-    fs, hdir = _hadoop_fs(spark, src_dir)
+    fs, Path = filesystem(spark, src_dir)
     rows = []
-    for status in fs.listStatus(hdir):
+    for status in fs.listStatus(Path(src_dir)):
         p = status.getPath()
         if status.isFile() and p.getName().endswith(suffix):
             rows.append(

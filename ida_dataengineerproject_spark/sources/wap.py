@@ -5,11 +5,13 @@ check passes — the Iceberg/Netflix WAP pattern on plain parquet.
 The audit reads what was actually written (not the input plan), so it
 also covers write-path corruption, and it folds every check into ONE
 aggregate pass over the staged data (the xq1 single-scan property —
-audit cost is one scan regardless of suite size).  Publishing is the
-checked delete+rename directory swap merge_cow.py established: Hadoop
-``FileSystem.rename``/``delete`` report failure by RETURNING FALSE, so
-every return is asserted; a failed audit deletes staging and leaves the
-previously published data untouched and live.
+audit cost is one scan regardless of suite size).  Staging and
+publishing go through the whole-directory rename-aside swap of
+sources/commit.py (``rename_aside``), the same swap merge_cow.py runs
+per bucket: its recovery sweep first restores a publish that crashed
+between its two renames, so the audit and any refusal start from the
+previously published data; a failed audit deletes staging and leaves
+that data untouched and live.
 
 100 TB: the alternative — audit after publish — serves bad data to every
 reader between publish and rollback; auditing the staged files costs one
@@ -25,6 +27,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .commit import rename_aside
 
 
 class AuditError(RuntimeError):
@@ -54,61 +58,22 @@ def write_audit_publish(
     path: str,
     audits: list[tuple[str, Column]],
 ) -> dict[str, int]:
-    """Stage ``df`` at ``<path>__staging``, evaluate every audit
-    (``(name, aggregate expression counting violations)`` — see
-    :func:`row_violations` / :func:`duplicate_keys`) in one aggregate
-    pass over the staged files, then swap staging into ``path``.  On any
-    violation the staging directory is deleted and :class:`AuditError`
-    raises — the published path is never touched.  Returns the per-audit
-    violation counts (all zero on success)."""
-    from .ingest_ledger import _hadoop_fs
-
-    staging = path.rstrip("/") + "__staging"
-    df.write.mode("overwrite").parquet(staging)
-
-    staged = spark.read.parquet(staging)
-    row = staged.agg(
-        *[expr.cast("long").alias(name) for name, expr in audits]
-    ).collect()[0]
-    violations = {name: int(row[name]) for name, _ in audits}
-
-    fs, _ = _hadoop_fs(spark, path)
-    Path = spark._jvm.org.apache.hadoop.fs.Path
-    if any(violations.values()):
-        fs.delete(Path(staging), True)
-        raise AuditError(violations)
-
-    # publish by rename-aside, not delete-then-rename: the live table is
-    # moved to __prev (metadata op), staging renamed in, then __prev
-    # dropped — a failed swap ROLLS BACK to the previous version, so
-    # readers never see an empty path; the unprotected window is the
-    # instant between the two renames (the best plain-FS can do).
-    target = Path(path)
-    prev = Path(path.rstrip("/") + "__prev")
-    try:
-        if fs.exists(prev) and not fs.delete(prev, True):  # stale remnant
-            raise IOError(f"WAP publish: could not clear stale {prev}")
-        had_live = fs.exists(target)
-        if had_live and not fs.rename(target, prev):
-            raise IOError(f"WAP publish: could not move live {target} aside")
-        if not fs.rename(Path(staging), target):
-            if had_live and not fs.rename(prev, target):
-                raise IOError(
-                    f"WAP publish: swap failed AND rollback failed; previous "
-                    f"version is at {prev}, staged data at {staging}"
-                )
-            raise IOError(
-                f"WAP publish: rename {staging} -> {target} failed; previous "
-                f"version restored, staged data left under {staging}"
-            )
-        if had_live and not fs.delete(prev, True):
-            raise IOError(
-                f"WAP publish: published OK but could not drop {prev}"
-            )
-    finally:
-        # in a finally, not just on success: a failed or rolled-back swap
-        # also renamed the live path, so any session that cached its file
-        # listing must be invalidated either way (ADVICE r5 — the xio1
-        # stale-recache class of bug)
-        spark.catalog.refreshByPath(path)
+    """Recover a crashed earlier publish, stage ``df`` at
+    ``<path>__staging``, evaluate every audit (``(name, aggregate
+    expression counting violations)`` — see :func:`row_violations` /
+    :func:`duplicate_keys`) in one aggregate pass over the staged files,
+    then swap staging into ``path``.  On any violation the staging
+    directory is deleted and :class:`AuditError` raises — the published
+    path is never touched.  Returns the per-audit violation counts (all
+    zero on success)."""
+    with rename_aside(spark, path) as staging:
+        df.write.mode("overwrite").parquet(staging)
+        row = (
+            spark.read.parquet(staging)
+            .agg(*[expr.cast("long").alias(name) for name, expr in audits])
+            .collect()[0]
+        )
+        violations = {name: int(row[name]) for name, _ in audits}
+        if any(violations.values()):
+            raise AuditError(violations)  # staging discarded, path untouched
     return violations

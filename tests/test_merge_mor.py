@@ -218,7 +218,7 @@ def test_upsert_commit_jobs_carry_caller_job_group(spark, mor_table):
 def test_concurrent_commit_claim_blocks_second_writer(spark, mor_table):
     """Two writers that both computed version n+1: the second create of
     the commit lock fails BEFORE any data is written."""
-    from ida_dataengineerproject_spark.operators.merge_cow import (
+    from ida_dataengineerproject_spark.sources.commit import (
         ConcurrentWriteError,
         _claim_commit,
     )
@@ -228,5 +228,7 @@ def test_concurrent_commit_claim_blocks_second_writer(spark, mor_table):
                                "k long, name string, val long, t boolean")
     with pytest.raises(ConcurrentWriteError):
         upsert_mor(spark, mor_table, ch, tombstone_col="t")  # writer B
+    # the loser never frees a claim it did not take: A's lock stands
+    assert os.path.exists(os.path.join(mor_table, "_log", "v1.lock"))
     # writer A's claimed version is untouched: no data/v1 dir appeared
     assert not os.path.exists(os.path.join(mor_table, "data", "v1"))
