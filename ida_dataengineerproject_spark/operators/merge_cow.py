@@ -1,35 +1,31 @@
-"""Copy-on-write MERGE over bucket-partitioned parquet — Delta/Iceberg
-MERGE INTO semantics without the table-format jars (unavailable in this
-environment; the commit protocol here is per-partition-directory swap
-instead of a transaction log).
+"""Copy-on-write MERGE over bucket-partitioned parquet with a JSON commit
+log — Delta/Iceberg MERGE INTO semantics, time travel, vacuum, change
+data feed and shallow clone without the table-format jars (unavailable
+in this environment).
 
-Layout: the target table is written partitioned by a deterministic key
-bucket (``__mbucket = key mod n_buckets``, one directory per bucket).  A
-MERGE with a keyed changeset then touches ONLY the buckets the change
-keys map to:
+Layout: every row lives in a deterministic key bucket (``__mbucket = key
+mod n_buckets``).  Commit n writes NEW directories ``data/v{n}/__mbucket=b``
+for the buckets it rewrites, and its log entry ``_log/v{n}.json`` maps
+every bucket to the commit that owns its current data — exactly a table
+format's snapshot manifest, minimally.  A MERGE with a keyed changeset:
 
 1. impacted bucket ids = distinct buckets of the change keys — bounded
    by ``n_buckets`` (a write-time constant), so collecting them is
    bounded metadata, never data;
-2. the surviving rows of impacted buckets are read via partition pruning
-   (non-impacted directories are never listed or opened), changed keys
-   anti-joined out, upserts unioned in;
-3. the merged buckets are staged and committed by the per-bucket
-   rename-aside swap of sources/commit.py (``rename_aside``, with its
-   crash-recovery sweep) — untouched buckets keep their exact files
-   (byte-identical, same mtimes), and a bucket whose rows were all
-   deleted simply loses its directory (the case dynamic partition
-   overwrite cannot express).
+2. the surviving rows of impacted buckets are read from the directories
+   the log names for them (no other bucket is listed or opened), changed
+   keys anti-joined out, upserts unioned in;
+3. the merged buckets are written under ``data/v{n}`` and the commit is
+   the publish of the log entry (``sources.commit.versioned_commit``:
+   claim ``_log/v{n}.lock``, write, rename the entry in, release).
+   Untouched buckets carry over in the log and keep their exact files;
+   a bucket whose rows were all deleted simply leaves the log.
 
-At 100 TB the rewrite cost is O(impacted buckets), not O(table) — the
-same asymptotics as Delta's COW MERGE; choosing n_buckets trades rewrite
-amplification (big buckets) against small-file pressure (many buckets),
-and sources/compaction.py's target-size writer applies to the staged
-output unchanged.
-
-The versioned tables below (and operators/merge_mor.py) commit through
-``sources.commit.versioned_commit``: claim ``_log/v{n}.lock``, write new
-directories, write ``_log/v{n}.json``, release the claim.
+No data file is ever modified or moved, so older versions stay readable
+and byte-stable until vacuumed.  At 100 TB the rewrite cost is
+O(impacted buckets), not O(table) — the same asymptotics as Delta's COW
+MERGE; choosing n_buckets trades rewrite amplification (big buckets)
+against small-file pressure (many buckets).
 
 Reference scope: the reference upserts dimensions row-wise via
 INSERT ... ON CONFLICT (/root/reference/etl/etl_ida.py, op38); this is
@@ -37,8 +33,6 @@ the same MERGE semantics lifted to immutable columnar storage.
 """
 
 from __future__ import annotations
-
-import json
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -50,7 +44,8 @@ from ..sources.commit import (  # noqa: F401  (ConcurrentWriteError: re-export)
     ConcurrentWriteError,
     filesystem,
     log_dir,
-    rename_aside,
+    log_versions,
+    read_log,
     versioned_commit,
     written_buckets,
 )
@@ -62,103 +57,12 @@ def bucket_of(key: Column, n_buckets: int) -> Column:
     return F.pmod(key.cast("long"), F.lit(n_buckets)).cast("int")
 
 
-def write_bucketed(
-    df: DataFrame, key: str, n_buckets: int, path: str
-) -> None:
-    """Materialize `df` as a bucket-partitioned target table."""
-    df.withColumn(BUCKET_COL, bucket_of(F.col(key), n_buckets)).write.mode(
-        "overwrite"
-    ).partitionBy(BUCKET_COL).parquet(path)
-
-
-def merge_cow(
-    spark: SparkSession,
-    path: str,
-    changes: DataFrame,
-    key: str,
-    n_buckets: int,
-    tombstone_col: str | None = None,
-) -> dict:
-    """Apply a keyed changeset to the bucketed table at `path`:
-    rows matching a change key are replaced (or deleted when
-    `tombstone_col` is true); unmatched change rows are inserted.
-    Change keys must be unique (one decision per key per merge).
-
-    Returns {"n_buckets": ..., "impacted_buckets": [...]} — bounded
-    commit metadata, mirroring a table format's commit record."""
-    # materialize the changeset once — three consumers (impacted
-    # collect, anti-join key set, merged write) otherwise re-run its
-    # lineage (r13; see merge_versioned)
-    ch = materialize(
-        changes.withColumn(BUCKET_COL, bucket_of(F.col(key), n_buckets))
-    )
-    impacted = sorted(
-        r[0] for r in ch.select(BUCKET_COL).distinct().collect()
-    )
-    if not impacted:
-        return {"n_buckets": n_buckets, "impacted_buckets": []}
-
-    # the swap recovers a crashed earlier commit BEFORE the target is
-    # listed, so the survivors are read from the restored buckets
-    with rename_aside(spark, path, impacted) as staging:
-        target = spark.read.parquet(path).filter(
-            F.col(BUCKET_COL).isin(impacted)
-        )
-        survivors = target.join(
-            ch.select(key).distinct(), on=key, how="left_anti"
-        )
-        merged = survivors.unionByName(
-            _upserts(ch, tombstone_col).select(*survivors.columns)
-        ).withColumn(BUCKET_COL, F.col(BUCKET_COL).cast("int"))
-        merged.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(
-            staging
-        )
-    return {"n_buckets": n_buckets, "impacted_buckets": impacted}
-
-
 def _upserts(ch: DataFrame, tombstone_col: str | None) -> DataFrame:
     """The change rows that survive as data: all of them, or the
     non-tombstoned ones with the tombstone column dropped."""
     if not tombstone_col:
         return ch
     return ch.filter(~F.col(tombstone_col)).drop(tombstone_col)
-
-
-# ---------------------------------------------------------------------------
-# Versioned commits + time travel
-#
-# The per-directory swap above mutates in place (one live version).  The
-# versioned variant below never deletes data: each commit writes NEW
-# directories only for impacted buckets and records a JSON commit log
-# mapping bucket -> the commit that owns its current data — exactly a
-# table format's snapshot manifest, minimally.  Reading version v
-# resolves at most n_buckets directories from the log (bounded commit
-# metadata), so time travel costs one small JSON read; storage grows by
-# O(impacted buckets) per commit and old versions stay byte-stable.
-# ---------------------------------------------------------------------------
-
-
-def _read_log(spark: SparkSession, path: str, version: int | None = None) -> dict:
-    fs, Path = filesystem(spark, path)
-    if not fs.exists(Path(log_dir(path))):
-        raise FileNotFoundError(f"no commits under {path} (no _log dir)")
-    if version is None:
-        version = -1
-        for st in fs.listStatus(Path(log_dir(path))):
-            name = st.getPath().getName()
-            if name.startswith("v") and name.endswith(".json"):
-                version = max(version, int(name[1:-5]))
-        if version < 0:
-            raise FileNotFoundError(f"no commits under {path}")
-    p = Path(f"{log_dir(path)}/v{version}.json")
-    if not fs.exists(p):
-        raise FileNotFoundError(f"version {version} does not exist")
-    stream = fs.open(p)
-    try:
-        raw = bytes(stream.readAllBytes()).decode()
-    finally:
-        stream.close()
-    return json.loads(raw)
 
 
 def create_versioned(
@@ -169,7 +73,9 @@ def create_versioned(
     log = {"version": 0, "key": key, "n_buckets": n_buckets, "buckets": {}}
     with versioned_commit(spark, path, log):
         data = path.rstrip("/") + "/data/v0"
-        write_bucketed(df, key, n_buckets, data)
+        df.withColumn(BUCKET_COL, bucket_of(F.col(key), n_buckets)).write.mode(
+            "overwrite"
+        ).partitionBy(BUCKET_COL).parquet(data)
         written = sorted(written_buckets(spark, data))
         log["buckets"] = {str(b): 0 for b in written}
     return 0
@@ -206,7 +112,7 @@ def read_version(
 ) -> DataFrame:
     """Time travel: the table as of `version` (latest when None).
     Resolves at most n_buckets directories from the commit log."""
-    log = _read_log(spark, path, version)
+    log = read_log(spark, path, version)
     dirs = _bucket_dirs(path, log)
     if not dirs:
         raise FileNotFoundError(f"version {log['version']} has no data")
@@ -222,7 +128,7 @@ def merge_versioned(
     """MERGE `changes` into the latest version, committing version n+1.
     Only impacted buckets get new directories; every other bucket entry
     carries over, so old versions remain readable and byte-stable."""
-    log = _read_log(spark, path)
+    log = read_log(spark, path)
     key, n_buckets = log["key"], log["n_buckets"]
     # shallow clones stay clones: base/base_watermark carry over
     new_log = dict(
@@ -236,9 +142,7 @@ def merge_versioned(
         # consumed by the impacted-bucket collect, the anti-join key set
         # AND the merged write, and its lineage may be arbitrarily
         # expensive (e.g. a filter over read_version of this very table)
-        # — without this every consumer re-ran it (r13).  Materializing
-        # pre-commit also pins the change rows before any directory of
-        # this table moves.
+        # — without this every consumer re-ran it (r13).
         ch = materialize(
             changes.withColumn(BUCKET_COL, bucket_of(F.col(key), n_buckets))
         )
@@ -296,16 +200,13 @@ def vacuum_versioned(spark: SparkSession, path: str, retain_from: int) -> dict:
     Returns {"deleted_dirs", "retained_dirs", "deleted_logs",
     "retain_from", "latest"}."""
     fs, Path = filesystem(spark, path)
-    latest = _read_log(spark, path)["version"]
     # a shallow clone's history starts at its watermark, not 0 — its
     # earliest log IS its creation entry, and retaining below it would
     # try to read logs that never existed here
-    earliest = min(
-        int(st.getPath().getName()[1:-5])
-        for st in fs.listStatus(Path(log_dir(path)))
-        if st.getPath().getName().startswith("v")
-        and st.getPath().getName().endswith(".json")
-    )
+    versions = log_versions(spark, path)
+    if not versions:
+        raise FileNotFoundError(f"no commits under {path}")
+    earliest, latest = versions[0], versions[-1]
     if not earliest <= retain_from <= latest:
         raise ValueError(
             f"retain_from={retain_from} outside committed range "
@@ -319,7 +220,7 @@ def vacuum_versioned(spark: SparkSession, path: str, retain_from: int) -> dict:
 
     keep: set[tuple[int, int]] = set()
     for v in range(retain_from, latest + 1):
-        log = _read_log(spark, path, v)
+        log = read_log(spark, path, v)
         keep.update(
             (int(commit), int(b)) for b, commit in log["buckets"].items()
         )
@@ -347,17 +248,15 @@ def vacuum_versioned(spark: SparkSession, path: str, retain_from: int) -> dict:
         if not live_left and not fs.delete(commit_st.getPath(), True):
             raise IOError(f"vacuum: could not delete {commit_st.getPath()}")
 
-    deleted_logs = 0
-    for v in range(retain_from):
+    expired = [v for v in versions if v < retain_from]
+    for v in expired:
         p = Path(f"{log_dir(path)}/v{v}.json")
-        if fs.exists(p):
-            if not fs.delete(p, False):
-                raise IOError(f"vacuum: could not delete {p}")
-            deleted_logs += 1
+        if not fs.delete(p, False):
+            raise IOError(f"vacuum: could not delete {p}")
     return {
         "deleted_dirs": deleted,
         "retained_dirs": retained,
-        "deleted_logs": deleted_logs,
+        "deleted_logs": len(expired),
         "retain_from": retain_from,
         "latest": latest,
     }
@@ -371,8 +270,8 @@ def _cdf_inputs(
     owner in both versions points at the same immutable directory, so it
     cannot contain a change and is never read (the pruning that makes
     CDF O(changed data), not O(table))."""
-    log_a = _read_log(spark, path, v_from)
-    log_b = _read_log(spark, path, v_to)
+    log_a = read_log(spark, path, v_from)
+    log_b = read_log(spark, path, v_to)
     ba, bb = log_a["buckets"], log_b["buckets"]
     diff = sorted(
         int(b) for b in set(ba) | set(bb) if ba.get(b) != bb.get(b)
@@ -451,7 +350,7 @@ def shallow_clone(spark: SparkSession, src_path: str, dst_path: str) -> int:
     breaks the clone (the clone's own vacuum only ever lists its own
     data tree, so it cannot damage the source).  Returns the clone's
     starting version."""
-    log = _read_log(spark, src_path)
+    log = read_log(spark, src_path)
     version = log["version"]
     base = log.get("base", src_path.rstrip("/"))
     clone_log = {

@@ -21,12 +21,12 @@ trade — the Delta deletion-vector / Iceberg merge-on-read position:
   amplification bounded.
 
 Commit/versioning model matches merge_cow's versioned tables, through
-the same ``sources.commit.versioned_commit`` (claim, write, log,
-release — the claim is released when a commit fails): a JSON log maps
-each bucket to the list of commits holding its data and deletion
-vectors; every commit writes NEW directories only (data/v{c}/…,
-dv/v{c}/…), so concurrent readers of the previous log never see a
-half-applied commit.  Written buckets come from
+the same ``sources.commit.versioned_commit`` (claim, write, publish the
+log entry with one rename, release — a failed commit publishes nothing
+and releases its claim): a JSON log maps each bucket to the list of
+commits holding its data and deletion vectors; every commit writes NEW
+directories only (data/v{c}/…, dv/v{c}/…), so concurrent readers of the
+previous log never see a half-applied commit.  Written buckets come from
 ``sources.commit.written_buckets`` (a listing, no Spark job).
 
 Row-level semantics: every stored row carries ``__commit`` (the commit
@@ -40,7 +40,7 @@ same way.
 100 TB: choose MOR for delete/update-heavy tables where write latency
 matters (GDPR erasure, CDC upserts) — each commit is O(changeset); the
 read-side join is against the per-key tombstone aggregate, which stays
-small as long as compaction runs.  Choose COW (merge_cow) for read-heavy
+small as long as compaction runs.  Choose COW (merge_versioned) for read-heavy
 tables.  The reference's row-wise INSERT .. ON CONFLICT upsert
 (/root/reference/etl/etl_ida.py, op38) maps to either; this pair gives
 the storage-level choice Spark itself does not provide without a
@@ -55,8 +55,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..session import materialize, run_concurrently
-from ..sources.commit import BUCKET_COL, versioned_commit, written_buckets
-from .merge_cow import _read_log, _upserts, bucket_of
+from ..sources.commit import (
+    BUCKET_COL,
+    read_log,
+    versioned_commit,
+    written_buckets,
+)
+from .merge_cow import _upserts, bucket_of
 
 COMMIT_COL = "__commit"
 
@@ -107,7 +112,7 @@ def upsert_mor(
     append file set holding the non-tombstoned replacement rows.  Change
     keys must be unique (one decision per key per commit).  No existing
     file is touched."""
-    log = _read_log(spark, path)
+    log = read_log(spark, path)
     key, n_buckets = log["key"], log["n_buckets"]
     c = log["version"] + 1
     buckets = {b: dict(e) for b, e in log["buckets"].items()}
@@ -164,7 +169,7 @@ def read_mor(
     broadcast candidate AQE takes when small) joined against the data
     scan; a row survives iff ``__commit >= `` its key's newest tombstone.
     Helper columns are dropped — callers see the logical schema."""
-    log = _read_log(spark, path)
+    log = read_log(spark, path)
     key = log["key"]
     data_dirs = _leaf_dirs(path, log, "data", buckets)
     if not data_dirs:
@@ -213,7 +218,7 @@ def compact_mor(
     rows are ALL tombstoned simply leaves the log.  Superseded
     directories stay on disk for old readers (reclaim is a vacuum
     concern, same liveness rule as merge_cow.vacuum_versioned)."""
-    log = _read_log(spark, path)
+    log = read_log(spark, path)
     key, n_buckets = log["key"], log["n_buckets"]
     c = log["version"] + 1
 

@@ -5,8 +5,10 @@ Two paths, same contract:
   against the full corpus; one pass, no shuffle of the corpus.  The
   correctness baseline and the right plan whenever |queries| is small.
 - ``cosine_topk_lsh``: approximate scale path — random-hyperplane signed
-  projections bucket the corpus; queries only score candidates sharing
-  their bucket (multi-probe over Hamming-1 neighbors to recover recall).
+  projections bucket the corpus in L independent tables; queries only
+  score candidates sharing their exact ``(table, bucket)`` in at least
+  one table — recall comes from L alone, no neighbor bucket is probed
+  (multi-probe over the lowest-margin bits is ROADMAP direction 2).
   At 100 TB the bucket join replaces the corpus-wide scan per query.
 
 The hyperplane matrix is generated from a fixed seed (public numpy RNG) on

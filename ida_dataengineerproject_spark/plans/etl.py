@@ -225,7 +225,8 @@ def write_star(star: dict[str, DataFrame], base_dir: str) -> None:
     Concurrency caveats (ADVICE r12): the FIRST failure is raised only
     after every in-flight write finishes — a failed fact write can
     leave sibling tables already (re)written; callers treating the star
-    dir as transactional should stage+rename (sources/wap.py).  And
+    dir as transactional should commit through a log entry
+    (sources/commit.py ``versioned_commit``, as sources/wap.py does).  And
     because SQLConf is session-scoped, a concurrent ``scoped_conf``
     mutation on this session from another thread (e.g. graph.py's AQE
     scope) would leak into these writes — don't run write_star

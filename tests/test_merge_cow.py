@@ -1,7 +1,7 @@
 """Copy-on-write MERGE (operators/merge_cow.py): file-level COW
-guarantees the oracle parity of xs6 can't see — untouched buckets keep
-byte-identical files, emptied buckets lose their directory, reapplying a
-changeset is idempotent."""
+guarantees the oracle parity of xs6 can't see — a merge writes only its
+impacted buckets and leaves every existing file as it was, an emptied
+bucket leaves the log, reapplying a changeset is idempotent."""
 
 from __future__ import annotations
 
@@ -22,42 +22,43 @@ def _files(path: str) -> dict[str, tuple[int, float]]:
 
 def _mktarget(spark, path: str, n: int = 1000, n_buckets: int = 8):
     from ida_dataengineerproject_spark.operators.merge_cow import (
-        write_bucketed,
+        create_versioned,
     )
 
     df = spark.range(n).select(
         F.col("id").alias("k"),
         (F.col("id") * 10).cast("double").alias("v"),
     )
-    write_bucketed(df, "k", n_buckets, path)
+    create_versioned(spark, path, df, "k", n_buckets)
     return df
 
 
 def test_untouched_buckets_keep_identical_files(spark, tmp_path):
-    from ida_dataengineerproject_spark.operators.merge_cow import merge_cow
+    from ida_dataengineerproject_spark.operators.merge_cow import (
+        merge_versioned,
+        read_version,
+    )
 
     path = str(tmp_path / "t")
     _mktarget(spark, path)
-    before = _files(path)
+    v0 = os.path.join(path, "data", "v0")
+    before = _files(v0)
 
     # change keys all in bucket 3 (k % 8 == 3)
     ch = spark.createDataFrame(
         [(3, -1.0, False), (11, -2.0, False), (1003, 5.0, False)],
         "k long, v double, dead boolean",
     )
-    stats = merge_cow(spark, path, ch, "k", 8, tombstone_col="dead")
-    assert stats["impacted_buckets"] == [3]
+    assert merge_versioned(spark, path, ch, tombstone_col="dead") == 1
 
-    after = _files(path)
-    touched = {p for p in set(before) | set(after) if "__mbucket=3" in p}
-    untouched_before = {p: v for p, v in before.items() if p not in touched}
-    untouched_after = {p: v for p, v in after.items() if p not in touched}
-    assert untouched_before == untouched_after  # names, sizes, mtimes
-    assert any("__mbucket=3" in p for p in after)
+    v1 = os.path.join(path, "data", "v1")
+    written = [d for d in os.listdir(v1) if os.path.isdir(os.path.join(v1, d))]
+    assert written == ["__mbucket=3"]  # only the impacted bucket
+    assert _files(v0) == before  # names, sizes, mtimes
 
     got = {
         r["k"]: r["v"]
-        for r in spark.read.parquet(path).filter(F.col("k") % 8 == 3).collect()
+        for r in read_version(spark, path).filter(F.col("k") % 8 == 3).collect()
     }
     assert got[3] == -1.0 and got[11] == -2.0 and got[1003] == 5.0
     assert got[19] == 190.0  # unchanged row in the impacted bucket survives
@@ -65,21 +66,32 @@ def test_untouched_buckets_keep_identical_files(spark, tmp_path):
 
 
 def test_emptied_bucket_directory_is_removed(spark, tmp_path):
-    from ida_dataengineerproject_spark.operators.merge_cow import merge_cow
+    from ida_dataengineerproject_spark.operators.merge_cow import (
+        _bucket_dirs,
+        merge_versioned,
+        read_version,
+    )
+    from ida_dataengineerproject_spark.sources.commit import read_log
 
     path = str(tmp_path / "t")
     _mktarget(spark, path, n=16, n_buckets=8)  # keys 0..15, 2 per bucket
     ch = spark.createDataFrame(
         [(5, 0.0, True), (13, 0.0, True)], "k long, v double, dead boolean"
     )
-    merge_cow(spark, path, ch, "k", 8, tombstone_col="dead")
-    assert not os.path.exists(os.path.join(path, "__mbucket=5"))
-    keys = {r["k"] for r in spark.read.parquet(path).collect()}
+    merge_versioned(spark, path, ch, tombstone_col="dead")
+    log = read_log(spark, path)
+    assert "5" not in log["buckets"]
+    assert not any("__mbucket=5" in d for d in _bucket_dirs(path, log))
+    assert not os.path.exists(os.path.join(path, "data", "v1", "__mbucket=5"))
+    keys = {r["k"] for r in read_version(spark, path).collect()}
     assert keys == set(range(16)) - {5, 13}
 
 
 def test_merge_is_idempotent(spark, tmp_path):
-    from ida_dataengineerproject_spark.operators.merge_cow import merge_cow
+    from ida_dataengineerproject_spark.operators.merge_cow import (
+        merge_versioned,
+        read_version,
+    )
 
     path = str(tmp_path / "t")
     _mktarget(spark, path)
@@ -87,13 +99,13 @@ def test_merge_is_idempotent(spark, tmp_path):
         [(7, -7.0, False), (2000, 1.0, False), (15, 0.0, True)],
         "k long, v double, dead boolean",
     )
-    merge_cow(spark, path, ch, "k", 8, tombstone_col="dead")
+    merge_versioned(spark, path, ch, tombstone_col="dead")
     state1 = sorted(
-        (r["k"], r["v"]) for r in spark.read.parquet(path).collect()
+        (r["k"], r["v"]) for r in read_version(spark, path).collect()
     )
-    merge_cow(spark, path, ch, "k", 8, tombstone_col="dead")
+    merge_versioned(spark, path, ch, tombstone_col="dead")
     state2 = sorted(
-        (r["k"], r["v"]) for r in spark.read.parquet(path).collect()
+        (r["k"], r["v"]) for r in read_version(spark, path).collect()
     )
     assert state1 == state2
     d = dict(state1)
@@ -455,68 +467,3 @@ def test_vacuum_on_clone_rejects_retain_below_watermark(spark, tmp_path):
     # valid floor works and never touches the base
     stats = vacuum_versioned(spark, dst, retain_from=2)
     assert stats["deleted_logs"] == 1  # the clone's own v1 creation entry
-
-
-def test_crash_between_renames_recovers_on_next_merge(spark, tmp_path):
-    """ADVICE r5: the in-place commit is now rename-aside — simulate a
-    crash between the two renames (live bucket moved to __prev, staged
-    not yet renamed in) and verify the next merge restores the bucket
-    before committing."""
-    import shutil
-
-    from ida_dataengineerproject_spark.operators.merge_cow import (
-        BUCKET_COL,
-        merge_cow,
-    )
-
-    path = str(tmp_path / "cow_crash")
-    _mktarget(spark, path, n=100, n_buckets=4)
-    before = spark.read.parquet(path).count()
-
-    # simulate the crash window: bucket 2's live dir sits under __prev,
-    # missing from the live table
-    prev_root = path + "__prev"
-    os.makedirs(prev_root)
-    shutil.move(
-        os.path.join(path, f"{BUCKET_COL}=2"),
-        os.path.join(prev_root, f"{BUCKET_COL}=2"),
-    )
-    spark.catalog.refreshByPath(path)
-    assert spark.read.parquet(path).count() < before
-
-    # next merge touches a different bucket; recovery must restore b=2
-    ch = spark.createDataFrame([(1, 111.0)], "k long, v double")
-    merge_cow(spark, path, ch, "k", 4)
-    assert not os.path.exists(prev_root)
-    out = spark.read.parquet(path)
-    assert out.count() == before
-    assert out.filter("k = 1").collect()[0]["v"] == 111.0
-
-
-def test_superseded_prev_bucket_is_dropped_not_restored(spark, tmp_path):
-    """Crash AFTER staged→live rename: live bucket exists, __prev holds
-    the superseded copy — recovery must drop it, not clobber the new."""
-    import shutil
-
-    from ida_dataengineerproject_spark.operators.merge_cow import (
-        BUCKET_COL,
-        merge_cow,
-    )
-
-    path = str(tmp_path / "cow_crash2")
-    _mktarget(spark, path, n=100, n_buckets=4)
-    before = _files(path)
-
-    prev_root = path + "__prev"
-    os.makedirs(prev_root)
-    shutil.copytree(
-        os.path.join(path, f"{BUCKET_COL}=2"),
-        os.path.join(prev_root, f"{BUCKET_COL}=2"),
-    )
-    ch = spark.createDataFrame([(1, 111.0)], "k long, v double")
-    merge_cow(spark, path, ch, "k", 4)
-    assert not os.path.exists(prev_root)
-    after = _files(path)
-    # bucket 2 untouched by merge (1 mod 4 = bucket 1) and NOT clobbered
-    b2 = {k: v for k, v in before.items() if f"{BUCKET_COL}=2" in k}
-    assert {k: after[k] for k in b2} == b2

@@ -11,12 +11,12 @@ import os
 import pytest
 
 from ida_dataengineerproject_spark.operators.merge_mor import (
-    _read_log,
     compact_mor,
     create_mor,
     read_mor,
     upsert_mor,
 )
+from ida_dataengineerproject_spark.sources.commit import read_log
 
 N_BUCKETS = 4
 
@@ -121,7 +121,7 @@ def test_compaction_preserves_state_and_clears_vectors(spark, mor_table):
     res = compact_mor(spark, mor_table)
     assert res["compacted"]  # 3, 7, 11 all hit bucket 3 (mod 4)
     assert _state(spark, mor_table) == before
-    log = _read_log(spark, mor_table)
+    log = read_log(spark, mor_table)
     for b in res["compacted"]:
         entry = log["buckets"][str(b)]
         assert entry["dv"] == [] and entry["data"] == [res["version"]]
@@ -140,7 +140,7 @@ def test_fully_deleted_bucket_leaves_log(spark, tmp_path):
     )
     upsert_mor(spark, path, dele, tombstone_col="dead")
     compact_mor(spark, path)
-    log = _read_log(spark, path)
+    log = read_log(spark, path)
     assert "0" not in log["buckets"] and "1" in log["buckets"]
     assert {r["k"] for r in read_mor(spark, path).collect()} == {1}
 
@@ -161,12 +161,12 @@ def test_compact_dv_only_bucket_drops_entry_instead_of_crashing(
     # delete keys 3 and 0-mod keys that never existed: dv-only buckets
     ch = spark.createDataFrame([(3, None, True)], "k long, name string, t boolean")
     upsert_mor(spark, path, ch, tombstone_col="t")
-    log = _read_log(spark, path)
+    log = read_log(spark, path)
     assert log["buckets"]["3"] == {"data": [], "dv": [1]}
 
     res = compact_mor(spark, path, min_dv_rows=1)
     assert res["dropped_dv_only"] == [3]
-    log2 = _read_log(spark, path)
+    log2 = read_log(spark, path)
     assert "3" not in log2["buckets"]
     # state unchanged
     assert {

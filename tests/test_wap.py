@@ -1,6 +1,7 @@
 """Write-Audit-Publish (sources/wap.py): the refusal path must leave the
-published path byte-stable, the success path must swap atomically, and
-the audit must read the staged FILES (not the input plan)."""
+published path byte-stable, the success path must publish through the
+commit log, and the audit must read the written FILES (not the input
+plan)."""
 
 from __future__ import annotations
 
@@ -34,6 +35,7 @@ def _audits():
 
 
 def test_good_publish_lands_and_reads_back(spark, tmp_path):
+    from ida_dataengineerproject_spark.operators.merge_cow import read_version
     from ida_dataengineerproject_spark.sources.wap import write_audit_publish
 
     path = str(tmp_path / "pub")
@@ -42,11 +44,14 @@ def test_good_publish_lands_and_reads_back(spark, tmp_path):
     )
     counts = write_audit_publish(spark, df, path, _audits())
     assert counts == {"dup_k": 0, "null_k": 0, "neg_v": 0}
-    assert spark.read.parquet(path).count() == 100
-    assert not os.path.exists(path + "__staging")
+    assert read_version(spark, path).count() == 100
+    # the claim is released and the entry published under its own name
+    log = os.listdir(os.path.join(path, "_log"))
+    assert [n for n in log if not n.startswith(".")] == ["v0.json"]
 
 
 def test_failed_audit_keeps_previous_publish_byte_stable(spark, tmp_path):
+    from ida_dataengineerproject_spark.operators.merge_cow import read_version
     from ida_dataengineerproject_spark.sources.wap import (
         AuditError,
         write_audit_publish,
@@ -64,11 +69,12 @@ def test_failed_audit_keeps_previous_publish_byte_stable(spark, tmp_path):
         write_audit_publish(spark, bad, path, _audits())
     assert ei.value.violations["dup_k"] == 3
     assert _files(path) == before  # published data untouched
-    assert not os.path.exists(path + "__staging")  # staging discarded
-    assert spark.read.parquet(path).count() == 50
+    assert not os.path.exists(os.path.join(path, "data", "v1"))  # discarded
+    assert read_version(spark, path).count() == 50
 
 
 def test_audit_counts_multiple_violation_kinds(spark, tmp_path):
+    from ida_dataengineerproject_spark.operators.merge_cow import read_version
     from ida_dataengineerproject_spark.sources.wap import (
         AuditError,
         write_audit_publish,
@@ -84,22 +90,30 @@ def test_audit_counts_multiple_violation_kinds(spark, tmp_path):
     # NULL key is the null audit's finding only — 3 non-null keys,
     # 2 distinct -> exactly ONE duplicate; no phantom dup from the NULL
     assert v == {"dup_k": 1, "null_k": 1, "neg_v": 1}
-    assert not os.path.exists(path)  # nothing ever published
+    with pytest.raises(FileNotFoundError):
+        read_version(spark, path)  # nothing ever published
 
 
-def test_stale_prev_from_crash_is_cleared_on_next_publish(spark, tmp_path):
-    """A crash after rename-aside leaves <path>__prev behind; the next
-    successful publish must clear it and land normally."""
-    import shutil
-
+def test_concurrent_publishers_exclude_each_other(spark, tmp_path):
+    """A publish takes the same _log/v{n}.lock claim as every other lake
+    writer: while another publisher holds v1, a second publish of v1
+    fails before writing anything, and v0 stays the readable version."""
+    from ida_dataengineerproject_spark.operators.merge_cow import read_version
+    from ida_dataengineerproject_spark.sources.commit import (
+        ConcurrentWriteError,
+    )
     from ida_dataengineerproject_spark.sources.wap import write_audit_publish
 
     path = str(tmp_path / "pub")
     df = spark.range(10).select(F.col("id").alias("k"), F.lit(1.0).alias("v"))
     write_audit_publish(spark, df, path, _audits())
-    shutil.copytree(path, path + "__prev")  # simulate crash remnant
+    open(os.path.join(path, "_log", "v1.lock"), "w").close()  # held by A
 
     df2 = spark.range(20).select(F.col("id").alias("k"), F.lit(2.0).alias("v"))
-    write_audit_publish(spark, df2, path, _audits())
-    assert not os.path.exists(path + "__prev")
-    assert spark.read.parquet(path).count() == 20
+    with pytest.raises(ConcurrentWriteError, match="v1.lock"):
+        write_audit_publish(spark, df2, path, _audits())
+    assert not os.path.exists(os.path.join(path, "data", "v1"))
+    assert os.path.exists(os.path.join(path, "_log", "v1.lock"))  # A's
+    assert sorted(r["k"] for r in read_version(spark, path).collect()) == list(
+        range(10)
+    )
