@@ -15,8 +15,6 @@ declarative DataFrame plan optimized by Catalyst:
                    calendar, text stats, vector math).
 - ``plans``      : end-to-end query pipelines (vw_taxa_variacao flagship,
                    TPC-H-style analytics, full ETL ingest).
-- ``streaming``  : Structured Streaming variants (tumbling windows, watermark,
-                   session windows).
 - ``multimodal`` : binary-column (image/audio) plumbing over mapInPandas.
 """
 

@@ -190,7 +190,10 @@ def vacuum_versioned(spark: SparkSession, path: str, retain_from: int) -> dict:
     commit (untouched buckets carry over), so liveness is per directory,
     never per commit.  Everything else under data/ is deleted, as are
     the ``_log/v*.json`` files below ``retain_from`` (time travel to an
-    expired version then raises, same as the never-existed case).
+    expired version then raises, same as the never-existed case) —
+    except the directories of commits above ``latest``: those belong to
+    a writer that holds its claim and has not published yet, or to a
+    crashed one, whose version's next claimant overwrites them.
 
     Cost is bounded metadata: (versions retained) log reads plus one
     directory listing per commit dir — no data files are opened.  100 TB:
@@ -234,6 +237,8 @@ def vacuum_versioned(spark: SparkSession, path: str, retain_from: int) -> dict:
         if not (commit_st.isDirectory() and name.startswith("v")):
             continue
         commit = int(name[1:])
+        if commit > latest:
+            continue
         live_left = False
         # _SUCCESS etc. are removed with the commit dir
         for b in written_buckets(spark, commit_st.getPath().toString()):

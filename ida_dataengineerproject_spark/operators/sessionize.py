@@ -4,8 +4,6 @@ Classic pattern: per-user LAG(ts) → new-session flag when the gap exceeds
 the threshold → running SUM of flags = session ordinal.  Pure window ops,
 fully distributed: the window partitions by user_id, so no global sort and
 skew only if one user dominates (AQE skew handling applies on the shuffle).
-
-Streaming twin: ``F.session_window`` in streaming/events.py.
 """
 
 from __future__ import annotations

@@ -277,84 +277,6 @@ def kmv_sketch(df: DataFrame, group_col: str, key_col: str, k: int = 256) -> Dat
     )
 
 
-def kmv_sketch_filtered(
-    df: DataFrame,
-    group_col: str,
-    key_col: str,
-    k: int = 256,
-    margin: int = 8,
-) -> DataFrame:
-    """The 100 TB form of :func:`kmv_sketch`: same output contract, but
-    the bottom-k never shuffles the key stream.
-
-    ``kmv_sketch``'s distinct-then-rank shuffles every per-partition
-    distinct (group, hash) pair — O(distinct keys), the same volume as
-    an exact build, so the sketch saves nothing on shuffle (measured at
-    sf0.1: 1.88 s vs 1.72 s exact for x22's shingle stream — the sketch
-    LOST).  The fix is the classic theta-sketch observation: only hashes
-    in the bottom ~k/n fraction of hash space can reach the sketch, and
-    that is a MAP-SIDE filter.
-
-    Pass 1: one map-side-combined ``approx_count_distinct`` per group
-    (HLL, rsd 2%) estimates each group's distinct count n̂_g — shuffle
-    payload is groups × one HLL register set.
-    Pass 2: keep (g, h) only where frac(h) ≤ f_g = min(1, margin·k/n̂_g)
-    — expected survivors margin·k per group, so the k-th smallest
-    distinct hash survives with overwhelming probability (Chernoff at
-    margin=8: P[survivors < k] < e^{-2k}); then the ordinary
-    distinct + WindowGroupLimit bottom-k runs on the ~margin·k-per-group
-    remnant.  Shuffle volume: O(groups × margin × k), independent of the
-    key stream size.
-
-    Completeness semantics survive the filter: a group small enough that
-    sk_n < k could be meaningful has margin·k/n̂_g ≥ margin > 1 ⇒ f_g = 1
-    (unfiltered, exact completeness); a filtered group (f_g < 1 ⇒
-    n̂_g > margin·k) fills all k slots whp, so ``kmv_overlap``'s
-    sk_n < k ⇒ complete rule reads identically on both builds
-    (pinned by tests/test_streaming_sketches.py)."""
-    h = F.xxhash64(F.col(key_col))
-    stream = df.select(F.col(group_col).alias("g"), h.alias("h"))
-    est = stream.groupBy("g").agg(
-        F.approx_count_distinct("h", rsd=0.02).alias("n_est")
-    )
-    lim = est.select(
-        "g",
-        F.least(
-            F.lit(1.0), F.lit(float(margin * k)) / F.col("n_est").cast("double")
-        ).alias("f"),
-    )
-    survivors = (
-        stream.join(F.broadcast(lim), "g")
-        .where(_kmv_frac(F.col("h")) <= F.col("f"))
-        .select("g", "h")
-        .distinct()
-    )
-    w = Window.partitionBy("g").orderBy("h")
-    return (
-        survivors.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .groupBy("g")
-        .agg(
-            F.sort_array(F.collect_list("h")).alias("sk"),
-            F.count("*").cast("int").alias("sk_n"),
-        )
-    )
-
-
-def kmv_sizes(sketches: DataFrame, k: int = 256) -> DataFrame:
-    """Per-group distinct-count estimates read off KMV sketches:
-    (g, est_n double).  Complete sketch (sk_n < k): exact.  Full sketch:
-    the standard KMV estimator (k−1)/u(h_(k)) (Beyer et al. 2007)."""
-    theta = F.element_at(F.col("sk"), F.col("sk_n"))
-    est = F.lit(float(k - 1)) / _kmv_frac(theta)
-    return sketches.select(
-        "g",
-        F.when(F.col("sk_n") < k, F.col("sk_n").cast("double"))
-        .otherwise(est)
-        .alias("est_n"),
-    )
-
-
 def _kmv_frac(col: Column) -> Column:
     """Map a signed-64 hash to its (0,1] uniform fraction: signed order
     == fraction order, so bottom-k by signed value is bottom-k by u."""

@@ -1,8 +1,7 @@
 """Event-stream batch analytics (SURVEY.md §2.11 x05-x09) on `events`.
 
 The reference has no streaming surface (SURVEY.md §2.10); these are the
-driver-mandated extensions.  Batch forms here (oracle-checkable); streaming
-twins with watermarks live in ``streaming/``.
+driver-mandated extensions, in batch form so each has a DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -62,9 +61,8 @@ def q_x05(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_x06(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling 1-hour window aggregation (batch form of the streaming
-    windowed agg; streaming twin in streaming/events.py uses F.window +
-    watermark).  F.window('1 hour') start == date_trunc('hour')."""
+    """Tumbling 1-hour window aggregation.  F.window('1 hour') start ==
+    date_trunc('hour')."""
     ev = table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -281,8 +279,7 @@ def q_x06b(spark: SparkSession, sf_dir: str) -> DataFrame:
     event lands in exactly window/slide = 2 windows.  F.window emits both
     assignments as generated rows (map-side, no extra shuffle beyond the
     aggregate); the oracle reproduces the assignment arithmetic with an
-    explicit 2-element unnest.  Streaming twin: same F.window + watermark
-    (streaming/events.py)."""
+    explicit 2-element unnest."""
     ev = table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")

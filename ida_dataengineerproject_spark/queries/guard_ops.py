@@ -227,8 +227,7 @@ def minute_counts(ev: DataFrame) -> DataFrame:
 
 def rate_baseline(ev: DataFrame) -> DataFrame:
     """1-row (med_rate, mad) robust baseline of per-minute event rates —
-    the batch half of the anomaly gate; streaming/events.py
-    rate_anomaly_stream applies it to a live stream."""
+    the baseline half of the anomaly gate."""
     cnt = minute_counts(ev)
     med = _median_of(cnt, "n_events", "med_rate")
     d = cnt.crossJoin(F.broadcast(med)).withColumn(

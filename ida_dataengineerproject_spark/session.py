@@ -194,12 +194,6 @@ def run_concurrently(spark: SparkSession, fns: list[Callable[[], object]]) -> li
 
 
 def get_spark(app_name: str = "ida-spark", shuffle_partitions: int | None = None) -> SparkSession:
-    # pre-JVM hook: the TWS driver worker inherits PYTHONPATH from the
-    # JVM env, so the vendored protobuf runtime must be exported before
-    # getOrCreate (no-op when a real protobuf is installed)
-    from .streaming.proto_shim import export_pythonpath
-
-    export_pythonpath()
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     parts = str(shuffle_partitions or cpus)
     builder = (

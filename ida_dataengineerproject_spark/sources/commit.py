@@ -36,6 +36,8 @@ import json
 import re
 from contextlib import contextmanager
 
+from py4j.java_gateway import is_instance_of
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import SparkSession
 
 BUCKET_COL = "__mbucket"
@@ -98,13 +100,20 @@ def _claim_commit(spark: SparkSession, path: str, version: int):
     on this create; the loser fails HERE, before it can clobber the
     winner's ``data/v{version}`` files.  A writer that read the log
     before the winner published (and released) the same version fails
-    on the published entry instead.  Returns the (FileSystem, Path
-    constructor) pair."""
+    on the published entry instead.  Any other failure of the create
+    (an unwritable path, a table path that is a file) is no claim and
+    surfaces as it is.  Returns the (FileSystem, Path constructor) pair."""
     fs, Path = filesystem(spark, path)
     stem = f"{log_dir(path)}/v{version}"
     try:
         fs.create(Path(stem + ".lock"), False).close()
-    except Exception as exc:  # JVM FileAlreadyExists surfaces via py4j
+    except Py4JJavaError as exc:
+        if not is_instance_of(
+            spark.sparkContext._gateway,
+            exc.java_exception,
+            "org.apache.hadoop.fs.FileAlreadyExistsException",
+        ):
+            raise
         raise ConcurrentWriteError(
             f"commit v{version} of {path} already claimed ({stem}.lock); "
             f"retry, or remove a stale lock left by a crashed writer"

@@ -74,10 +74,10 @@ def fetch_to_memory(
 
     Retries: transient failures get ``max_retries`` attempts with
     exponential backoff (the reference's MAX_RETRIES contract,
-    etl_ida.py:80 — wired from EngineConfig.max_retries); the last
-    error propagates.  urllib handles ``http(s)://`` and ``file://``
-    alike, so fixtures exercise the real code path; the sandbox has no
-    network, which is an environment property, not a stub."""
+    etl_ida.py:80); the last error propagates.  urllib handles
+    ``http(s)://`` and ``file://`` alike, so fixtures exercise the real
+    code path; the sandbox has no network, which is an environment
+    property, not a stub."""
     scheme = urlsplit(url).scheme.lower()
     allowed = {"http", "https"} | ({"file"} if allow_file else set())
     if scheme not in allowed:

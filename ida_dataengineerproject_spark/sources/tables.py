@@ -25,7 +25,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     regenerations; all are normalized here — in ONE place — to Spark
     ``timestamp`` (microsecond, session-TZ, and the session TZ is pinned to
     UTC in session.harden) so every downstream consumer (sessionize, window
-    aggs, as-of join, streaming twins) sees one type:
+    aggs, as-of join) sees one type:
 
     * TIMESTAMP(NANOS) read as ``bigint`` (via ``nanosAsLong``): truncated
       to micros losslessly via integer division;

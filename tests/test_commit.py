@@ -14,6 +14,7 @@ from functools import partial
 
 import pyspark.sql.functions as F
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.errors import AnalysisException
 
 from ida_dataengineerproject_spark.operators.merge_cow import (
@@ -148,6 +149,35 @@ def test_an_unpublished_log_entry_is_not_a_version(spark, tmp_path):
     assert not os.path.exists(tmp)
     got = dict(_rows(read_version(spark, path)))
     assert got[1] == -1.0 and got[2] == -2.0 and len(got) == 8
+
+
+def test_a_failed_claim_create_is_not_a_concurrent_write(spark, tmp_path):
+    """Only an existing lock means the version is claimed: when the lock
+    cannot be created at all (here the table path is a plain file), the
+    filesystem's own error surfaces, naming no lock to remove."""
+    path = tmp_path / "t"
+    path.write_text("not a table")
+    with pytest.raises(Py4JJavaError) as info:
+        create_versioned(spark, str(path), _base(spark), "k", 4)
+    assert "v0.lock" not in str(info.value)
+
+
+def test_vacuum_keeps_the_directory_of_an_unpublished_claim(spark, tmp_path):
+    """A writer holds the claim on v2 and has written data/v2 but not
+    published it yet: vacuum must leave both alone."""
+    path = str(tmp_path / "t")
+    create_versioned(spark, path, _base(spark), "k", 4)
+    ch = spark.createDataFrame([(1, -1.0)], "k long, v double")
+    merge_versioned(spark, path, ch)
+    lock = os.path.join(path, "_log", "v2.lock")
+    open(lock, "w").close()
+    staged = os.path.join(path, "data", "v2", "__mbucket=0")
+    os.makedirs(staged)
+    open(os.path.join(staged, "part-0.parquet"), "w").close()
+
+    stats = vacuum_versioned(spark, path, retain_from=1)
+    assert stats["latest"] == 1
+    assert os.path.isdir(staged) and os.path.exists(lock)
 
 
 def test_the_log_publish_is_the_only_rename():

@@ -160,44 +160,6 @@ def test_ods_distributed_to_records(spark, tmp_path):
     assert n_smp == 5  # 6 cells minus the '-' one
 
 
-def test_ods_python_datasource_matches_mapinpandas(spark, tmp_path):
-    """Spark 4 Python DataSource (`format('ods')`) returns exactly the
-    rows the binaryFile+mapInPandas reader produces, with one partition
-    per input file."""
-    from ida_dataengineerproject_spark.sources.ods import (
-        read_ods_long,
-        write_minimal_ods,
-    )
-    from ida_dataengineerproject_spark.sources.ods_datasource import (
-        register_ods_datasource,
-    )
-
-    d = str(tmp_path / "ods_dir")
-    import os
-
-    os.makedirs(d)
-    sheets = {
-        "SMP": [
-            ["Relatório IDA", None, None],
-            ["GRUPO ECONOMICO", "VARIAVEL", "2017-01"],
-            ["CLARO S.A.", "Taxa de Respondidas", "1,5"],
-        ]
-    }
-    for name in ["a.ods", "b.ods"]:
-        write_minimal_ods(os.path.join(d, name), sheets)
-
-    register_ods_datasource(spark)
-    via_ds = spark.read.format("ods").load(d)
-    via_mip = read_ods_long(spark, d)
-
-    assert via_ds.schema == via_mip.schema
-    assert via_ds.rdd.getNumPartitions() == 2  # one per file
-    key = lambda r: tuple(str(x) for x in r)  # noqa: E731
-    assert sorted(map(key, via_ds.collect())) == sorted(
-        map(key, via_mip.collect())
-    )
-
-
 def test_fetch_ods_long_distributed(spark, tmp_path):
     """op03 distributed-fetch form: manifest of file:// URLs → executor-side
     urllib fetch fused with the ODS parse in one Arrow stage.  Decoy URLs

@@ -492,36 +492,6 @@ def test_asof_join_escaped_column_names(spark):
 
 @settings(max_examples=6, deadline=None)
 @given(
-    st.lists(
-        st.tuples(st.sampled_from(["g1", "g2"]), st.integers(0, 500)),
-        min_size=1,
-        max_size=300,
-    )
-)
-def test_kmv_filtered_equals_unfiltered_property(spark, rows):
-    """kmv_sketch_filtered must equal kmv_sketch on ANY stream — the
-    threshold filter only drops hashes that cannot reach the bottom-k
-    (duplicates, skewed groups, tiny groups all drawn by hypothesis)."""
-    from ida_dataengineerproject_spark.operators.sketch import (
-        kmv_sketch,
-        kmv_sketch_filtered,
-    )
-
-    df = spark.createDataFrame(rows, "g string, key long")
-    k = 16
-    base = {
-        r.g: (tuple(r.sk), r.sk_n)
-        for r in kmv_sketch(df, "g", "key", k=k).collect()
-    }
-    filt = {
-        r.g: (tuple(r.sk), r.sk_n)
-        for r in kmv_sketch_filtered(df, "g", "key", k=k).collect()
-    }
-    assert filt == base
-
-
-@settings(max_examples=6, deadline=None)
-@given(
     st.lists(st.integers(0, 40), min_size=1, max_size=120),
     st.lists(st.integers(0, 40), min_size=1, max_size=120),
 )
@@ -705,9 +675,8 @@ def test_bloom_membership_no_false_negatives(spark, members, probes):
 )
 def test_kmv_overlap_complete_sketches_exact(spark, sa, sb):
     """When both KMV sketches are COMPLETE (distinct count < k), the
-    'estimate' must be EXACT set intersection — the completeness arm
-    kmv_sketch_filtered preserves (see its docstring) — on any pair of
-    small sets."""
+    'estimate' must be EXACT set intersection — the sk_n < k arm of
+    kmv_overlap — on any pair of small sets."""
     from ida_dataengineerproject_spark.operators.sketch import (
         kmv_overlap,
         kmv_sketch,

@@ -1,36 +1,10 @@
-"""Tests: applyInPandasWithState running counters + SCD2 merge."""
+"""Tests: SCD2 merge (operators/scd2.py)."""
 
 from __future__ import annotations
 
 from datetime import datetime
 
 from pyspark.sql import functions as F
-
-from .conftest import SF_SMOKE
-
-
-def test_stateful_running_counters(spark):
-    from ida_dataengineerproject_spark.sources.tables import table
-    from ida_dataengineerproject_spark.streaming.events import (
-        read_events_stream,
-        run_to_memory,
-    )
-    from ida_dataengineerproject_spark.streaming.stateful import (
-        running_user_counters,
-    )
-
-    stream = read_events_stream(spark, SF_SMOKE)
-    out = run_to_memory(
-        spark, running_user_counters(stream), "t_counters", mode="update"
-    )
-    batch = (
-        table(spark, SF_SMOKE, "events")
-        .groupBy("user_id")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("v"))
-    )
-    got = {r.user_id: (r.n_events, round(r.total_value, 6)) for r in out.collect()}
-    want = {r.user_id: (r.n, round(r.v, 6)) for r in batch.collect()}
-    assert got == want  # single micro-batch → counters equal batch agg
 
 
 def _dim(spark):
@@ -87,201 +61,3 @@ def test_scd2_idempotent(spark):
     once = scd2_merge(_dim(spark), updates, ["grupo_codigo"], ["grupo_nome"], ts)
     twice = scd2_merge(once, updates, ["grupo_codigo"], ["grupo_nome"], ts)
     assert twice.count() == once.count()
-
-
-def test_transform_with_state_counters(spark):
-    """Spark 4 StatefulProcessor path (transformWithStateInPandas +
-    RocksDB state store) must produce the same per-user totals as the
-    batch aggregate — and as the applyInPandasWithState twin.
-
-    The TWS state protocol needs google.protobuf; this container ships
-    none, so the operator activates the vendored minimal runtime
-    (vendor/google/protobuf) and ships it to the Python workers via
-    addPyFile — the test runs the REAL protocol end-to-end over it."""
-    from ida_dataengineerproject_spark.sources.tables import table
-    from ida_dataengineerproject_spark.streaming.events import (
-        read_events_stream,
-        run_to_memory,
-    )
-    from ida_dataengineerproject_spark.streaming.stateful import (
-        running_user_counters_tws,
-    )
-
-    stream = read_events_stream(spark, SF_SMOKE)
-    out = run_to_memory(
-        spark, running_user_counters_tws(stream), "t_tws", mode="update"
-    )
-    batch = (
-        table(spark, SF_SMOKE, "events")
-        .groupBy("user_id")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("v"))
-    )
-    got = {r.user_id: (r.n_events, round(r.total_value, 6)) for r in out.collect()}
-    want = {r.user_id: (r.n, round(r.v, 6)) for r in batch.collect()}
-    assert got == want
-
-
-def test_streaming_cdc_matches_batch_apply(spark):
-    """The streaming CDC latest-state operator must converge to exactly
-    the batch x13 result on the same log (single availableNow pass):
-    same survivors, same last values, same counts, tombstoned users
-    absent after the read-side filter."""
-    from ida_dataengineerproject_spark.queries.quality_ops import (
-        cdc_apply_latest_state,
-    )
-    from ida_dataengineerproject_spark.streaming.events import (
-        read_events_stream,
-        run_to_memory,
-    )
-    from ida_dataengineerproject_spark.streaming.stateful import (
-        cdc_latest_state_stream,
-    )
-
-    stream = read_events_stream(spark, SF_SMOKE)
-    out = run_to_memory(
-        spark, cdc_latest_state_stream(stream), "t_cdc", mode="update"
-    )
-    got = {
-        r.user_id: (r.last_type, r.last_value, r.n_events)
-        for r in out.filter(F.col("last_type") != "error").collect()
-    }
-    want = {
-        r.user_id: (r.last_type, r.last_value, r.n_events)
-        for r in cdc_apply_latest_state(spark, SF_SMOKE).collect()
-    }
-    assert got == want
-
-
-def test_streaming_funnel_matches_batch(spark, tmp_path):
-    """Streaming exact-ordered-funnel state == the batch xq40 per-user
-    (t1, t2, t3) triple, with the stream chopped into 4 time-ordered
-    files processed one per micro-batch (the in-order delivery contract
-    the operator documents)."""
-    from pyspark.sql import functions as F
-
-    from ida_dataengineerproject_spark.sources.tables import table
-    from ida_dataengineerproject_spark.streaming.stateful import (
-        FUNNEL_OUTPUT_SCHEMA,
-        funnel_stage_stream,
-    )
-
-    ev = table(spark, SF_SMOKE, "events").select("user_id", "event_type", "ts")
-    # 4 ts-ordered files: quartile boundaries on the timestamp
-    bounds = [r.ts for r in ev.select("ts").orderBy("ts").collect()]
-    cuts = [bounds[len(bounds) * i // 4] for i in (1, 2, 3)]
-    src = str(tmp_path / "src")
-    parts = [
-        ev.filter(F.col("ts") < cuts[0]),
-        ev.filter((F.col("ts") >= cuts[0]) & (F.col("ts") < cuts[1])),
-        ev.filter((F.col("ts") >= cuts[1]) & (F.col("ts") < cuts[2])),
-        ev.filter(F.col("ts") >= cuts[2]),
-    ]
-    import os, time
-    os.makedirs(src, exist_ok=True)
-    for i, p in enumerate(parts):
-        p.coalesce(1).write.mode("overwrite").parquet(f"{src}/f{i}")
-        time.sleep(1.1)  # distinct mtimes → file-source processes in order
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/f*")
-    )
-    out = funnel_stage_stream(stream)
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("t_funnel")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    emitted = spark.table("t_funnel")
-    # monotone updates → min-ignoring-nulls per column == final state
-    got = {
-        r.user_id: (r.t1, r.t2, r.t3)
-        for r in emitted.groupBy("user_id")
-        .agg(
-            F.min("t1_us").alias("t1"),
-            F.min("t2_us").alias("t2"),
-            F.min("t3_us").alias("t3"),
-        )
-        .collect()
-    }
-    # batch twin: xq40's per-user chained filtered window-mins
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id")
-    d = ev.withColumn(
-        "t1", F.min(F.when(F.col("event_type") == "view", F.col("ts"))).over(w)
-    )
-    d = d.withColumn(
-        "t2",
-        F.min(
-            F.when(
-                (F.col("event_type") == "click") & (F.col("ts") >= F.col("t1")),
-                F.col("ts"),
-            )
-        ).over(w),
-    )
-    d = d.withColumn(
-        "t3",
-        F.min(
-            F.when(
-                (F.col("event_type") == "purchase")
-                & (F.col("ts") >= F.col("t2")),
-                F.col("ts"),
-            )
-        ).over(w),
-    )
-    pu = d.groupBy("user_id").agg(
-        F.max("t1").alias("t1"), F.max("t2").alias("t2"), F.max("t3").alias("t3")
-    )
-    to_us = lambda c: F.unix_micros(F.col(c).cast("timestamp"))  # noqa: E731
-    want = {
-        r.user_id: (r.t1, r.t2, r.t3)
-        for r in pu.select(
-            "user_id",
-            to_us("t1").alias("t1"),
-            to_us("t2").alias("t2"),
-            to_us("t3").alias("t3"),
-        ).collect()
-    }
-    assert got == want
-
-
-def test_funnel_update_same_timestamp_chain_converts():
-    """Equal-timestamp view→click→purchase must convert (the >= tie
-    semantics of batch xq40) regardless of the ROW ORDER the micro-batch
-    delivers them in — the stage tiebreak in the batch-local sort is
-    what guarantees it (a ts-only unstable sort could process the
-    purchase first and drop it)."""
-    import pandas as pd
-
-    from ida_dataengineerproject_spark.streaming.stateful import (
-        _funnel_update,
-    )
-
-    class FakeState:
-        hasTimedOut = False
-        exists = False
-        get = None
-
-        def update(self, v):
-            self.exists = True
-            self.get = v
-
-    ts = pd.Timestamp("2024-01-01 00:00:00")
-    # worst-case delivery order: purchase, click, view — all same instant
-    batch = pd.DataFrame(
-        {
-            "user_id": [7, 7, 7],
-            "event_type": ["purchase", "click", "view"],
-            "ts": [ts, ts, ts],
-        }
-    )
-    st = FakeState()
-    out = pd.concat(_funnel_update((7,), iter([batch]), st))
-    assert int(out["stage"].iloc[0]) == 3
-    t1, t2, t3 = st.get
-    assert t1 == t2 == t3 == ts.value // 1000

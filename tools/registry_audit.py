@@ -9,7 +9,8 @@ Fingerprint per query (static — no SparkSession, no JVM):
 - dataset:   tables named in the oracle SQL (or read via ``table(...)``
              calls in the Spark source when there is no oracle);
 - operators: package operator/function imports the query body calls
-             (``operators.*``, ``functions.*``, ``streaming.*`` symbols);
+             (``operators.*``, ``functions.*``, ``plans.*``, ``multimodal.*``
+             symbols);
 - exprs:     the set of ``F.<fn>`` Spark expression functions used;
 - grain:     output column aliases — ``.alias("...")`` in Spark source
              (the registry convention aliases every computed column) plus
@@ -19,7 +20,7 @@ Fingerprint per query (static — no SparkSession, no JVM):
 Similarity = weighted Jaccard over (dataset, operators, exprs, grain).
 Pairs above --threshold (default 0.75) WITH identical dataset are flagged.
 Known-intentional families (same dataset + same operator by design:
-exact/LSH/IVF/PQ ANN arms, sketch exact/approx twins, streaming twins)
+exact/LSH/IVF/PQ ANN arms, sketch exact/approx twins)
 are listed in ALLOWED_FAMILIES; a flagged pair inside one family is
 reported as "expected-family" instead of "suspect".
 
@@ -47,8 +48,8 @@ TABLES = (
 
 # query-name prefixes that form intentional variant families: same data,
 # same semantics, different physical strategy (the registry's contract
-# arms), a streaming/batch twin, or a shared readout contract — pairwise
-# similarity inside these is by design
+# arms), or a shared readout contract — pairwise similarity inside these
+# is by design
 ALLOWED_FAMILIES = [
     ("x01", "exact-dedup vs normalized-text-dedup arms"),
     ("x03", "cosine top-k arms: exact / LSH / IVF / PQ / semantic-dedup"),
@@ -193,7 +194,7 @@ def fingerprint(name: str, fn, oracle: str | None) -> dict:
     ops = sorted(
         set(
             re.findall(
-                r"from \.\.(?:operators|functions|streaming|plans|multimodal)"
+                r"from \.\.(?:operators|functions|plans|multimodal)"
                 r"\.\w+ import ([\w, ]+)",
                 body,
             )
