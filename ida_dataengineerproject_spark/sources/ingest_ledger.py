@@ -14,7 +14,7 @@ Crash consistency: the ledger append happens AFTER the output write, so a
 crash between the two re-processes the last batch (at-least-once at the
 file level) — pair with the hash-dedup sink (operators/dedup) or an
 idempotent overwrite-by-partition write for end-to-end exactly-once, the
-same contract foreachBatch sinks use (tests/test_foreach_batch.py).
+same contract a foreachBatch sink keeps.
 
 The ledger itself is a parquet table of file identities
 (path, size_bytes, mtime_ms).  Listing and existence checks go through
