@@ -19,7 +19,7 @@ from __future__ import annotations
 import re
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 _MONTH_COL = re.compile(r"^(20[0-3][0-9])-(0[1-9]|1[0-2])")
@@ -49,6 +49,11 @@ def forward_fill(
     return df.withColumn(col, F.last(col, ignorenulls=True).over(w))
 
 
+def month_start(col: str) -> Column:
+    """'YYYY-MM' → first-of-month date (op22, etl/etl_ida.py:350-359)."""
+    return F.to_date(F.concat(F.substring(col, 1, 7), F.lit("-01")))
+
+
 def unpivot_months(
     df: DataFrame,
     id_cols: Sequence[str],
@@ -62,10 +67,7 @@ def unpivot_months(
     """
     mcols = list(month_cols) if month_cols is not None else month_columns(df)
     out = df.unpivot(list(id_cols), mcols, var_name, value_name)
-    # normalize 'YYYY-MM' → first-of-month date (op22, etl/etl_ida.py:350-359)
-    return out.withColumn(
-        var_name, F.to_date(F.concat(F.substring(var_name, 1, 7), F.lit("-01")))
-    )
+    return out.withColumn(var_name, month_start(var_name))
 
 
 def pivot_groups(

@@ -2,14 +2,21 @@
 (/root/reference/etl/etl_ida.py:732-834) as one lazy DataFrame plan.
 
 Reference stages → Spark stages:
-- ODSExtractor.extract (op04/05/09/10/15, etl_ida.py:215-274):  here the
-  input is already a wide DataFrame with an explicit ``linha_origem`` row
-  index (the file-order the pandas ffill silently depends on — SURVEY.md
-  §7.4.1) — conversion from ODS happens driver-side, out of the engine.
+- ODSExtractor.extract (op04/05/09/10/15, etl_ida.py:215-274): two input
+  shapes, each with an explicit ``linha_origem`` row index (the file order
+  the pandas ffill silently depends on — SURVEY.md §7.4.1).
+  - ODS files (``sources/ods``): parsed per sheet into ``LONG_SCHEMA``
+    rows; op15 runs there, in pandas, per sheet
+    (``converters.normalize_wide``), where the sheet is known.
+    ``transform_long`` takes those rows.
+  - Wide DataFrames (CSV/parquet sheets) carry no sheet boundary finer
+    than the file: ``transform_wide`` runs op15 as a Spark window per
+    ``ARQUIVO_ORIGEM``, then unpivots (op16) once.
 - DataTransformer.transform (op11/12/16/18-22/25, etl_ida.py:277-429):
-  ffill → blank-row filter → recode/clean per sheet row → unpivot →
-  invalid-cell filter → locale parse → hash.  All built-in expressions;
-  one Window and one Expand node, no shuffle.
+  both entry points share one tail — blank-row filter + recode/clean
+  (``_labelled``), then invalid-cell filter → locale parse → hash
+  (``_records``).  All built-in expressions; the wide form adds one
+  Window and one Expand node, no shuffle.
 - ensure dims (op36/38, etl_ida.py:556-620): distinct natural keys +
   anti-join upsert; surrogate keys are xxhash64 of the natural key
   (deterministic & distributed — identity sequences are not).
@@ -17,14 +24,15 @@ Reference stages → Spark stages:
   dim-key resolution, partitioned fact write.  The reference resolves
   keys with inner joins against the dims; here every dim is the
   distinct natural keys of the same records and every surrogate key is
-  a hash of its natural key, so the fact computes its keys inline and
-  drops the rows an inner join could never match (a NULL natural key —
-  the silent drop of etl_ida.py:550-551).  The fact plan derives the
-  record stream once.
+  a hash of its natural key, so the fact computes its keys — and its
+  partition column ``ano`` = ``year(ano_mes)`` — inline and drops the
+  rows an inner join could never match (a NULL natural key — the
+  silent drop of etl_ida.py:550-551).  The fact plan derives the record
+  stream once, and ``write_star`` writes it as built: it reads no dim.
 
 Scale notes: the only shuffles are the dim distincts (tiny) and the fact
-dedup (hash-partitioned).  The ffill window partitions by source file.
-Fact writes partition by (ano) so time-range queries prune files.
+dedup (hash-partitioned).  The wide ffill window partitions by source
+file.  Fact writes partition by (ano) so time-range queries prune files.
 """
 
 from __future__ import annotations
@@ -45,34 +53,28 @@ from ..operators.cleaning import (
     drop_invalid_values,
     recode,
 )
-from ..operators.reshape import forward_fill, month_columns, unpivot_months
+from ..operators.reshape import forward_fill, month_columns, month_start, unpivot_months
 from ..operators.upsert import dedup_against
 from ..session import materialize, run_concurrently
 
 
-def transform_wide(wide: DataFrame) -> DataFrame:
-    """Wide sheet → normalized fact records (the reference's DataRecord
-    stream, etl_ida.py:103-122).  Expects columns GRUPO_ECONOMICO, VARIAVEL,
-    SERVICO, ARQUIVO_ORIGEM, linha_origem + YYYY-MM month columns."""
-    df = forward_fill(
-        wide, "GRUPO_ECONOMICO", order_col="linha_origem",
-        partition_cols=["ARQUIVO_ORIGEM"],
-    )  # op15: merged-cell group names repeat down the sheet
+def _labelled(df: DataFrame, *values) -> DataFrame:
+    """Blank-row filter (op11), then the recoded/cleaned labels (op18-20)
+    beside the ``values`` columns."""
     df = drop_blank_rows(df, "GRUPO_ECONOMICO", "VARIAVEL")  # op11
-    # recode/clean once per sheet row, before the unpivot multiplies it
-    # into one row per month cell
-    df = df.select(
+    return df.select(
         recode("GRUPO_ECONOMICO", GROUP_MAPPING).alias("grupo_economico"),  # op19
         clean_text("SERVICO").alias("servico"),  # op18
         recode("VARIAVEL", VARIABLE_MAPPING).alias("variavel"),  # op20
         F.col("ARQUIVO_ORIGEM").alias("arquivo_origem"),
         F.col("linha_origem").cast("int"),
-        *month_columns(df),
+        *values,
     )
-    long = unpivot_months(
-        df,
-        id_cols=["grupo_economico", "servico", "variavel", "arquivo_origem", "linha_origem"],
-    )  # op16 + op22
+
+
+def _records(long: DataFrame) -> DataFrame:
+    """One labelled cell per row (``ano_mes`` date, ``valor_raw``) → the
+    reference's DataRecord stream (etl_ida.py:103-122)."""
     long = drop_invalid_values(long, "valor_raw")  # op12
     rec = long.select(
         "ano_mes",
@@ -92,6 +94,32 @@ def transform_wide(wide: DataFrame) -> DataFrame:
             "variavel",
             F.col("valor").cast("string"),
         ),
+    )
+
+
+def transform_wide(wide: DataFrame) -> DataFrame:
+    """Wide sheet → normalized fact records.  Expects columns
+    GRUPO_ECONOMICO, VARIAVEL, SERVICO, ARQUIVO_ORIGEM, linha_origem +
+    YYYY-MM month columns."""
+    df = forward_fill(
+        wide, "GRUPO_ECONOMICO", order_col="linha_origem",
+        partition_cols=["ARQUIVO_ORIGEM"],
+    )  # op15: merged-cell group names repeat down the sheet
+    # recode/clean once per sheet row, before the unpivot multiplies it
+    # into one row per month cell
+    df = _labelled(df, *month_columns(df))
+    long = unpivot_months(
+        df,
+        id_cols=["grupo_economico", "servico", "variavel", "arquivo_origem", "linha_origem"],
+    )  # op16 + op22
+    return _records(long)
+
+
+def transform_long(long: DataFrame) -> DataFrame:
+    """``sources/ods.LONG_SCHEMA`` rows → normalized fact records.  The
+    rows arrive forward-filled (op15) and unpivoted (op16) per sheet."""
+    return _records(
+        _labelled(long, month_start("ano_mes").alias("ano_mes"), "valor_raw")  # op22
     )
 
 
@@ -156,7 +184,9 @@ def load_fact(
     the existing fact for idempotent re-runs.  The surrogate keys are
     the hashes ``build_dims`` gives the same natural keys, so no dim
     join is needed.  A row with a NULL natural key is dropped, as the
-    reference's inner joins drop it (etl_ida.py:550-551)."""
+    reference's inner joins drop it (etl_ida.py:550-551).  The last
+    column, ``ano``, is the partition column ``write_star`` writes by, so
+    the built fact has the columns of the fact read back from disk."""
     deduped = dedup_against(records, existing_fact, ["hash_registro"])
     return (
         deduped.filter(
@@ -176,6 +206,7 @@ def load_fact(
             "linha_origem",
             F.current_timestamp().alias("data_processamento"),
             "hash_registro",
+            F.year("ano_mes").alias("ano"),
         )
     )
 
@@ -209,12 +240,11 @@ def ingest(
 
 
 def write_star(star: dict[str, DataFrame], base_dir: str) -> None:
-    """Persist the star schema: dims plain, fact partitioned by year via the
-    tempo dim (partition pruning for time-range queries — the Spark
+    """Persist the star schema: dims plain, fact partitioned by its ``ano``
+    column (partition pruning for time-range queries — the Spark
     equivalent of the reference's fact indexes, schema_star.sql:96-101).
 
-    The five table writes are independent jobs (the fact write reuses
-    the LAZY tempo dim frame, never the dim files), so they run from a
+    The five table writes are independent jobs, so they run from a
     small thread pool (``session.run_concurrently``; guide §2.6 —
     overlap independent jobs): wall is the slowest write, not the sum of
     five job round-trips.  On a cluster the later jobs back-fill
@@ -235,12 +265,7 @@ def write_star(star: dict[str, DataFrame], base_dir: str) -> None:
 
     def write_one(name: str, df: DataFrame) -> None:
         if name == "fact_ida":
-            with_ano = df.join(
-                F.broadcast(star["dim_tempo"].select("tempo_key", "ano")), "tempo_key"
-            )
-            with_ano.write.mode("overwrite").partitionBy("ano").parquet(
-                f"{base_dir}/{name}"
-            )
+            df.write.mode("overwrite").partitionBy("ano").parquet(f"{base_dir}/{name}")
         else:
             # dims are small by construction (distinct natural keys):
             # one output file each instead of shuffle.partitions files

@@ -225,19 +225,6 @@ def minute_counts(ev: DataFrame) -> DataFrame:
     )
 
 
-def rate_baseline(ev: DataFrame) -> DataFrame:
-    """1-row (med_rate, mad) robust baseline of per-minute event rates —
-    the baseline half of the anomaly gate."""
-    cnt = minute_counts(ev)
-    med = _median_of(cnt, "n_events", "med_rate")
-    d = cnt.crossJoin(F.broadcast(med)).withColumn(
-        "abs_dev", F.abs(F.col("n_events").cast("double") - F.col("med_rate"))
-    )
-    return d.crossJoin(F.broadcast(_median_of(d, "abs_dev", "mad"))).select(
-        "med_rate", "mad"
-    ).limit(1)
-
-
 @register(
     "x15_event_rate_anomaly",
     f"""

@@ -1,7 +1,7 @@
 """ODS-at-runtime under the oracle gate: real .ods files (zip+XML,
 written driver-side from `nation` as the stand-in for the reference's
 downloaded spreadsheets) → DISTRIBUTED binaryFile scan → stdlib parse in
-mapInPandas → header inference → wide → the full transform chain →
+mapInPandas → header inference → per-sheet ffill → the long transform chain →
 month-over-month readout.  Companion to `pipeline_ingest_ida` (which
 covers star persistence + idempotency); this entry pins the runtime ODS
 parsing path the reference does with pandas+odf on one machine
@@ -18,9 +18,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.aggs import avg_exact
-from ..plans.etl import transform_wide
+from ..plans.etl import transform_long
 from ..registry import register
-from ..sources.ods import long_to_wide, read_ods_long, write_minimal_ods
+from ..sources.ods import read_ods_long, write_minimal_ods
 from ..sources.tables import table
 
 _SHEET_OF = {"SMP": "Móvel_Pessoal", "STFC": "Fixo"}
@@ -103,7 +103,7 @@ def q_pipeline_ods(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     long = read_ods_long(spark, str(base) + "/*.ods")
-    rec = transform_wide(long_to_wide(long))
+    rec = transform_long(long)
     monthly = (
         rec.select(
             "servico", F.date_format("ano_mes", "yyyy-MM").alias("mes"), "valor"
@@ -202,7 +202,7 @@ def q_pipeline_binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
         manifest_df(spark, resources), services=("SMP", "STFC"), years=(2017,)
     )
     long = fetch_ods_long(man, allow_file=True)  # fixture files we wrote
-    rec = transform_wide(long_to_wide(long))
+    rec = transform_long(long)
     out = (
         rec.select(
             "servico", F.date_format("ano_mes", "yyyy-MM").alias("mes"), "valor"

@@ -1,10 +1,10 @@
 """SparkSession construction + per-session conf hardening.
 
 The reference delegates execution to PostgreSQL 17 (docker-compose.yml:2-19);
-our executor is Spark with AQE.  Scale posture: these confs are tuned for
-local[32] testing but every choice (AQE, skew-join handling, partition
-coalescing) is the same one you'd want on a 1000-executor cluster — only
-``shuffle.partitions`` changes with cluster size.
+our executor is Spark with AQE.  Scale posture: every choice (AQE,
+skew-join handling, partition coalescing) is the same one you'd want on a
+1000-executor cluster — only ``shuffle.partitions`` changes with cluster
+size.  ``local_cores`` is the one reader of the local core count.
 """
 
 from __future__ import annotations
@@ -193,8 +193,14 @@ def run_concurrently(spark: SparkSession, fns: list[Callable[[], object]]) -> li
     return [f.result() for f in futures]
 
 
+def local_cores() -> int:
+    """Cores of the local master: ``SPARK_GRAFT_CPUS`` if set, else the
+    cores this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
 def get_spark(app_name: str = "ida-spark", shuffle_partitions: int | None = None) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = local_cores()
     parts = str(shuffle_partitions or cpus)
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")

@@ -31,6 +31,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_cores
 from .tables import table
 
 
@@ -52,7 +53,7 @@ _CLEANUP_REGISTERED: set[str] = set()
 
 def default_buckets() -> int:
     """Local default: one bucket per core (scan task per bucket)."""
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    return local_cores()
 
 
 def ensure_bucketed(

@@ -40,7 +40,9 @@ def normalize_wide(
 ) -> pd.DataFrame:
     """op09/op10 (etl_ida.py:238-246): first two columns → GRUPO_ECONOMICO,
     VARIAVEL; attach SERVICO / ARQUIVO_ORIGEM literals and an explicit
-    linha_origem row index (the ffill ordering key — SURVEY.md §7.4.1)."""
+    linha_origem row index (the sheet order — SURVEY.md §7.4.1).  op15
+    (etl_ida.py:249) runs here, once per sheet: merged-cell group names
+    are forward-filled down this sheet only, never into another one."""
     out = sheet.copy()
     cols = list(out.columns)
     rename = {cols[0]: "GRUPO_ECONOMICO", cols[1]: "VARIAVEL"}
@@ -51,6 +53,7 @@ def normalize_wide(
     out.columns = [rename.get(c, c) for c in cols]
     month_cols = [c for c in out.columns if _MONTH_PAT.fullmatch(str(c))]
     out = out[["GRUPO_ECONOMICO", "VARIAVEL"] + month_cols]
+    out["GRUPO_ECONOMICO"] = out["GRUPO_ECONOMICO"].ffill()  # op15
     out[month_cols] = out[month_cols].astype("string")
     out["SERVICO"] = servico
     out["ARQUIVO_ORIGEM"] = arquivo_origem

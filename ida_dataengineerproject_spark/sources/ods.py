@@ -11,15 +11,15 @@ container does not ship).
 Plan shape: ``spark.read.format("binaryFile")`` lists the files as rows
 (path, content-bytes); one Arrow-batched ``mapInPandas`` parses each file
 — per-FILE parallelism, the natural unit since a zip member cannot be
-split — and emits normalized LONG rows with a fixed schema (wide sheets
-have per-file month columns, so the long form is the only stable
-distributed contract).  ``long_to_wide`` then pivots back to the wide
-layout ``plans/etl.transform_wide`` expects; the month list is collected
-driver-side (control plane: dozens of values).
+split — and emits normalized LONG rows with a fixed schema.  The long
+rows are the contract: wide sheets have per-file month columns, so no
+fixed wide schema exists, and nothing pivots them back to wide.  Each
+sheet is forward-filled (op15) and melted (op16) in pandas before it
+leaves the parse, so ``plans/etl.transform_long`` reads them as they
+are: no shuffle, no driver-side collect, no job at plan-build time.
 
 Scale notes: binaryFile loads each file fully into one row — fine for
-spreadsheet-sized inputs (the reference's files are ~10⁵ cells); the
-pivot shuffles on (file, row) keys, evenly spread by construction.
+spreadsheet-sized inputs (the reference's files are ~10⁵ cells).
 """
 
 from __future__ import annotations
@@ -33,7 +33,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import materialize
 from .converters import SERVICE_SHEETS, _MONTH_PAT, detect_header_row, normalize_wide
 
 _NS = {
@@ -149,8 +148,8 @@ def write_minimal_ods(path: str, sheets: dict[str, list[list]]) -> None:
 
 def _file_to_long(path: str, data: bytes) -> pd.DataFrame:
     """One ODS file → normalized long rows: per service sheet, header-row
-    inference (op05) + wide normalization (op09/10, reusing the exact
-    converter logic) + melt to the fixed LONG_SCHEMA."""
+    inference (op05) + wide normalization and forward-fill (op09/10/15,
+    reusing the exact converter logic) + melt to the fixed LONG_SCHEMA."""
     arquivo = path.rsplit("/", 1)[-1]
     sheets = parse_ods_bytes(data)
     frames = []
@@ -248,30 +247,3 @@ def fetch_ods_long(
     urls = manifest.select("url").repartition(F.col("url"))
     return urls.mapInPandas(gen, LONG_SCHEMA)
 
-
-def long_to_wide(long: DataFrame) -> DataFrame:
-    """Long rows → the wide layout ``plans/etl.transform_wide`` expects.
-    Month columns are dynamic per dataset, so the distinct month list is
-    collected (control plane, dozens of values) and pivoted explicitly —
-    deterministic column order, one shuffle on the row identity keys.
-
-    The input is materialized ONCE first (r13): this function was
-    already eager (the months collect), but that collect and the pivot
-    each re-ran the upstream lineage — for ``read_ods_long`` a second
-    full parse of every file, for ``fetch_ods_long`` a second FETCH of
-    every resource over the network (guide §6: never pay I/O twice).
-    The long frame is O(sheet cells), so the materialized copy is bounded.
-    Measured sf0.1 (pipeline_ingest_ods phases): months collect
-    0.23 → 0.08 s, pivot+transform 0.51 → 0.35 s."""
-    long = materialize(long)
-    months = sorted(
-        r.ano_mes for r in long.select("ano_mes").distinct().collect()
-    )
-    return (
-        long.groupBy(
-            "GRUPO_ECONOMICO", "VARIAVEL", "SERVICO",
-            "ARQUIVO_ORIGEM", "linha_origem",
-        )
-        .pivot("ano_mes", months)
-        .agg(F.first("valor_raw"))
-    )

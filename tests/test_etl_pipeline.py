@@ -215,6 +215,9 @@ def test_write_star_partitioned(spark, wide, tmp_path):
     fact = spark.read.parquet(str(tmp_path / "fact_ida"))
     assert fact.count() == star["fact_ida"].count()
     assert "ano" in fact.columns  # partition column survived
+    # the built fact already has the columns, order and types of the fact
+    # read back, the partition column last
+    assert star["fact_ida"].dtypes == fact.dtypes
 
 
 def test_ingest_rerun_is_idempotent(spark, wide, tmp_path):

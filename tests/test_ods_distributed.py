@@ -1,5 +1,6 @@
 """Distributed ODS reading: stdlib zip+XML parser under binaryFile +
-mapInPandas, through header inference and the full transform chain."""
+mapInPandas, through header inference, the per-sheet forward-fill and the
+full transform chain."""
 
 from __future__ import annotations
 
@@ -126,13 +127,23 @@ def test_ods_interior_repeated_empty_rows_expand():
     assert [r[0] if r else None for r in grid] == ["top", None, None, "bottom"]
 
 
+def _merged_grid(group: str):
+    """One group name over three rows (a merged cell), no preamble."""
+    return [
+        ["GRUPO ECONOMICO", "VARIAVEL", "2019-01"],
+        [group, "Taxa de Respondidas em 5 dias Úteis", "1,0"],
+        [None, "Índice de Reclamações", "2,0"],
+        [None, "Quantidade de Reclamações", "3,0"],
+    ]
+
+
 def test_ods_distributed_to_records(spark, tmp_path):
-    """Two real ODS files → binaryFile scan → long → wide →
-    transform_wide: values parsed, '-' dropped, group names forward-
-    filled, header row inferred past the preamble."""
-    from ida_dataengineerproject_spark.plans.etl import transform_wide
+    """Three real ODS files → binaryFile scan → long → transform_long:
+    values parsed, '-' dropped, group names forward-filled within their
+    own sheet only (the third file holds two service sheets), header row
+    inferred past the preamble.  Building the records runs no job."""
+    from ida_dataengineerproject_spark.plans.etl import transform_long
     from ida_dataengineerproject_spark.sources.ods import (
-        long_to_wide,
         read_ods_long,
         write_minimal_ods,
     )
@@ -141,14 +152,22 @@ def test_ods_distributed_to_records(spark, tmp_path):
         str(tmp_path / "smp_2019.ods"), {"Móvel_Pessoal": _grid("SMP")}
     )
     write_minimal_ods(str(tmp_path / "stfc_2019.ods"), {"Fixo": _grid("STFC")})
+    write_minimal_ods(
+        str(tmp_path / "both_2019.ods"),
+        {"Móvel_Pessoal": _merged_grid("CLARO S.A."), "Fixo": _merged_grid("OI S.A.")},
+    )
 
+    jsc = spark.sparkContext._jsc.sc()
+    before = jsc.dagScheduler().nextJobId()
     long = read_ods_long(spark, str(tmp_path) + "/*.ods")
-    assert long.count() == 2 * 3 * 2  # 2 files x 3 data rows x 2 months
+    rec = transform_long(long)
+    assert jsc.dagScheduler().nextJobId() == before
 
-    rec = transform_wide(long_to_wide(long))
+    # 2 files x 3 data rows x 2 months + 2 sheets x 3 rows x 1 month
+    assert long.count() == 2 * 3 * 2 + 2 * 3
     rows = {
         (r.servico, r.grupo_economico, str(r.ano_mes), float(r.valor))
-        for r in rec.collect()
+        for r in rec.filter(F.col("arquivo_origem") != "both_2019.ods").collect()
     }
     # ffill: blank row belongs to ACME; '-' cell dropped
     assert ("SMP", "ACME", "2019-01-01", 10.5) in rows
@@ -156,8 +175,19 @@ def test_ods_distributed_to_records(spark, tmp_path):
     assert ("SMP", "ACME", "2019-01-01", 7.25) in rows
     assert ("STFC", "OUTRA", "2019-02-01", 4.5) in rows
     assert not any(v == "-" for *_, v in rows)
-    n_smp = rec.filter(F.col("servico") == "SMP").count()
+    n_smp = rec.filter(
+        (F.col("servico") == "SMP") & (F.col("arquivo_origem") == "smp_2019.ods")
+    ).count()
     assert n_smp == 5  # 6 cells minus the '-' one
+
+    both = sorted(
+        (r.servico, r.linha_origem, r.grupo_economico)
+        for r in rec.filter(F.col("arquivo_origem") == "both_2019.ods").collect()
+    )
+    assert both == [
+        ("SMP", 1, "CLARO"), ("SMP", 2, "CLARO"), ("SMP", 3, "CLARO"),
+        ("STFC", 1, "OI"), ("STFC", 2, "OI"), ("STFC", 3, "OI"),
+    ]
 
 
 def test_fetch_ods_long_distributed(spark, tmp_path):

@@ -19,10 +19,6 @@ PKG = "ida_dataengineerproject_spark"
 
 # kept although no entry point imports them; one reason each
 ALLOWED = {
-    f"{PKG}.config": "reference ETLConfig env contract (etl_ida.py:74-89); "
-    "feeds sources/jdbc.py's url and batch size, kept with its tests",
-    f"{PKG}.sources.ingest_ledger": "exactly-once incremental file ingest "
-    "over the lake's filesystem handle, kept with its tests",
     f"{PKG}.plans.bootstrap": "reference op07/op08: catalog bootstrap and "
     "health probe (init_db.py:59-108, etl_ida.py:630-651)",
     f"{PKG}.sources.jdbc": "reference op06: the reference's sink is "

@@ -1,5 +1,6 @@
 """session.materialize: the engine's one materialization point and its
-single storage policy."""
+single storage policy; session.local_cores: the one reader of the core
+count."""
 
 from __future__ import annotations
 
@@ -42,3 +43,26 @@ def test_no_checkpoint_or_storage_level_outside_session():
         if pattern.search(line)
     ]
     assert not hits, "\n".join(hits)
+
+
+def test_core_count_has_one_reader_defaulting_to_usable_cores(monkeypatch):
+    """Unset, ``SPARK_GRAFT_CPUS`` means the cores this process may run
+    on — not a fixed 32 — for the session master and the bucket count
+    alike; set, it wins."""
+    import os
+
+    from ida_dataengineerproject_spark.session import local_cores
+    from ida_dataengineerproject_spark.sources.bucketed import default_buckets
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    usable = len(os.sched_getaffinity(0))
+    assert local_cores() == default_buckets() == usable
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert local_cores() == default_buckets() == 3
+    pkg = REPO / "ida_dataengineerproject_spark"
+    readers = [
+        path.relative_to(pkg).as_posix()
+        for path in sorted(pkg.rglob("*.py"))
+        if "SPARK_GRAFT_CPUS" in path.read_text(encoding="utf-8")
+    ]
+    assert readers == ["session.py"]

@@ -255,133 +255,6 @@ def test_orc_roundtrip_and_pushdown(spark, tmp_path):
     assert "ReadSchema: struct<o_orderkey:bigint,o_custkey:bigint>" in plan
 
 
-def test_incremental_ingest_ledger(spark, tmp_path):
-    """Ledger-driven ingest: first run processes everything, a rerun with
-    no new files processes nothing, adding files processes ONLY them, and
-    the accumulated sink equals one full read (exactly-once per file)."""
-    from pyspark.sql import functions as F
-
-    from ida_dataengineerproject_spark.sources.ingest_ledger import (
-        ingest_new_files,
-        read_ledger,
-    )
-
-    src = tmp_path / "src"
-    src.mkdir()
-    sink = str(tmp_path / "sink")
-    ledger = str(tmp_path / "ledger")
-
-    def write_src_file(name, lo, hi):
-        spark.range(lo, hi).toDF("id").coalesce(1).write.parquet(
-            str(src / name)
-        )
-        # flatten: move the part file up as <name>.parquet
-        import glob
-        import shutil
-
-        part = glob.glob(str(src / name / "part-*.parquet"))[0]
-        shutil.move(part, str(src / f"{name}.parquet"))
-        shutil.rmtree(str(src / name))
-
-    def process(df):
-        df.write.mode("append").parquet(sink)
-
-    write_src_file("a", 0, 100)
-    write_src_file("b", 100, 250)
-
-    s1 = ingest_new_files(spark, str(src), ledger, process)
-    assert s1 == {"files_new": 2, "files_seen_total": 2}
-
-    s2 = ingest_new_files(spark, str(src), ledger, process)
-    assert s2 == {"files_new": 0, "files_seen_total": 2}  # idempotent rerun
-
-    write_src_file("c", 250, 300)
-    s3 = ingest_new_files(spark, str(src), ledger, process)
-    assert s3 == {"files_new": 1, "files_seen_total": 3}
-
-    out = spark.read.parquet(sink)
-    assert out.count() == 300  # each row ingested exactly once
-    assert out.agg(F.sum("id")).collect()[0][0] == 299 * 300 // 2
-    assert read_ledger(spark, ledger).count() == 3
-
-
-def test_ingest_ledger_detects_rewritten_file(spark, tmp_path):
-    """A source file rewritten in place (same name, different size) must
-    count as new — silently skipping changed files is data loss."""
-    from ida_dataengineerproject_spark.sources.ingest_ledger import (
-        ingest_new_files,
-    )
-
-    src = tmp_path / "src2"
-    src.mkdir()
-    sink = str(tmp_path / "sink2")
-
-    def write_file(lo, hi):
-        import glob
-        import shutil
-
-        tmp = str(src / "_stage")
-        spark.range(lo, hi).toDF("id").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        part = glob.glob(tmp + "/part-*.parquet")[0]
-        shutil.move(part, str(src / "data.parquet"))
-        shutil.rmtree(tmp)
-
-    def process(df):
-        df.write.mode("append").parquet(sink)
-
-    write_file(0, 10)
-    s1 = ingest_new_files(spark, str(src), str(tmp_path / "ledger2"), process)
-    assert s1["files_new"] == 1
-    write_file(0, 500)  # rewritten in place, different size
-    s2 = ingest_new_files(spark, str(src), str(tmp_path / "ledger2"), process)
-    assert s2["files_new"] == 1  # re-ingested, not silently skipped
-
-
-def test_ingest_ledger_detects_same_size_rewrite(spark, tmp_path):
-    """A file rewritten in place with the SAME byte size (regenerated
-    same-shape data) must also count as new: the identity includes the
-    modification time, not just (path, size)."""
-    import os
-    import time
-
-    from ida_dataengineerproject_spark.sources.ingest_ledger import (
-        ingest_new_files,
-    )
-
-    src = tmp_path / "src3"
-    src.mkdir()
-    sink = str(tmp_path / "sink3")
-    f = src / "data.parquet"
-
-    def process(df):
-        df.write.mode("append").parquet(sink)
-
-    import glob
-    import shutil
-
-    tmp = str(src / "_stage")
-    spark.range(0, 7).toDF("id").coalesce(1).write.mode("overwrite").parquet(tmp)
-    part = glob.glob(tmp + "/part-*.parquet")[0]
-    shutil.copy(part, str(f))
-    shutil.rmtree(tmp)
-    size1 = os.path.getsize(f)
-
-    s1 = ingest_new_files(spark, str(src), str(tmp_path / "ledger3"), process)
-    assert s1["files_new"] == 1
-
-    # same-byte rewrite with a bumped mtime (the in-place regeneration)
-    payload = f.read_bytes()
-    time.sleep(0.01)
-    f.write_bytes(payload)
-    os.utime(f, ns=(time.time_ns(), time.time_ns()))
-    assert os.path.getsize(f) == size1  # same size — the old blind spot
-
-    s2 = ingest_new_files(spark, str(src), str(tmp_path / "ledger3"), process)
-    assert s2["files_new"] == 1  # re-ingested via mtime in the identity
-
-
 def test_io_roundtrip_queries_are_session_idempotent(spark):
     """Running xio1/xio2 twice in ONE session must give identical results:
     the first run leaves a path cache (split_quarantine), and the second
