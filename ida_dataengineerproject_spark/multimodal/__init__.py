@@ -1,6 +1,5 @@
 from .binary_ops import (  # noqa: F401
     attach_fake_payload,
     extract_byte_features,
-    decode_image_stub,
     frame_sample_stub,
 )

@@ -9,10 +9,9 @@ stays columnar.
 The decode step is REAL for BMP (round 2): ``_bmp_encode``/``_bmp_decode``
 implement the 24-bit uncompressed BMP container with stdlib ``struct``
 only, and ``decode_bmp`` runs that parser distributed — no codec library
-required.  Formats that genuinely need PIL/opencv (JPEG/PNG/audio) keep
-the guarded ``decode_image_stub`` fake path: the Spark-side plumbing —
-schema, partitioning, UDF signature, batch shape — is identical and
-tested either way.
+required.  WAV audio gets the same treatment (``decode_wav``).  A format
+that needs a codec library (JPEG/PNG) would slot in at the same
+mapInPandas boundary with the same schema, partitioning and batch shape.
 
 Scale notes: binary payloads dominate partition size — set
 ``spark.sql.files.maxPartitionBytes`` down (or repartition by size) so a
@@ -158,42 +157,6 @@ def decode_bmp(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                     "height": decoded.map(lambda t: t[1]).astype("int32"),
                     "n_channels": decoded.map(lambda t: t[2]).astype("int32"),
                     "mean_pixel": decoded.map(lambda t: t[3]),
-                }
-            )
-
-    return df.select(id_col, "payload").mapInPandas(op, DECODE_SCHEMA)
-
-
-def decode_image_stub(
-    df: DataFrame, id_col: str = "doc_id", real_decode: bool = False
-) -> DataFrame:
-    """'Decode' the binary payload into image metadata + a pixel statistic.
-
-    real_decode=True is the production path — it requires an image library
-    (PIL/opencv) that this container does not ship, so it raises
-    NotImplementedError.  The default produces a deterministic fake decode
-    (dimensions/statistics derived from the bytes) with the production
-    schema, partitioning and batch shape.
-    """
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if real_decode:
-                raise NotImplementedError(
-                    "real image decode needs PIL/opencv — not in this "
-                    "container; plumbing is exercised via the fake decode"
-                )
-            payload = pdf["payload"]
-            n = payload.map(len)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "width": (n % 640).astype("int32"),
-                    "height": (n % 480).astype("int32"),
-                    "n_channels": pd.Series([3] * len(pdf), dtype="int32"),
-                    "mean_pixel": payload.map(
-                        lambda b: float(sum(b)) / len(b) if len(b) else 0.0
-                    ),
                 }
             )
 

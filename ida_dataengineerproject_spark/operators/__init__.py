@@ -6,4 +6,4 @@ from .cleaning import (  # noqa: F401
     GROUP_MAPPING,
     VARIABLE_MAPPING,
 )
-from .upsert import insert_if_absent, dedup_against  # noqa: F401
+from .upsert import dedup_against  # noqa: F401

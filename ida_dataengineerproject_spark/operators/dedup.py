@@ -491,12 +491,7 @@ def ppjoin_pairs(
     )
     sa = sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
     sb = sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
-    # |A∩B| once (let-bound), |A∪B| by the integer identity
-    jac = let1(
-        F.size(F.array_intersect("sh_a", "sh_b")),
-        lambda i: i.cast("double")
-        / (F.size("sh_a") + F.size("sh_b") - i).cast("double"),
-    )
+    jac = jaccard(F.col("sh_a"), F.col("sh_b"))
     return (
         cands.join(sa, "id_a")
         .join(sb, "id_b")

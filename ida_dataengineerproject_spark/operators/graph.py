@@ -146,13 +146,14 @@ def count_triangles(
       the degree pass exists to keep — so the fusion is gated to the
       regime where it wins.
 
-    Intersect-join strategy (both regimes) uses the exact post-build
+    Intersect-join strategy: the small regime uses the exact post-build
     numbers (n_nodes, Σdeg ⇒ m): ``adj_bytes = m·16 + n·64`` under the
     limit broadcasts the v-side adjacency (the Σ outdeg² array
     duplication never crosses a shuffle — measured sf0.1 0.4 s vs 3.4 s
     for the sort-merge form); above it, a plain shuffle equi-join
     (Cohen's Σ outdeg² shuffle bound — the 100 TB path; nothing
-    data-sized is broadcast).
+    data-sized is broadcast).  The huge regime always takes the shuffle
+    join: its ``adj_bytes`` exceeds ``m_raw·16``, which chose it.
 
     An Arrow ``mapInPandas`` batch-intersection (row-offset keys +
     ``np.intersect1d``) was measured SLOWER than codegen array_intersect
@@ -203,6 +204,7 @@ def count_triangles(
         n_nodes_m = int(_gate["n"])
         n_edges_m = int(_gate["sd"] or 0) // 2
         adj_bytes = n_edges_m * 16 + n_nodes_m * 64
+        broadcast_adj = adj_bytes <= broadcast_limit_bytes
 
         degf = full.select(F.col("n").alias("v"), F.col("deg").alias("deg_v"))
         if n_nodes_m * 64 <= broadcast_limit_bytes:
@@ -241,23 +243,14 @@ def count_triangles(
             F.when(lower_first, F.col("p1")).otherwise(F.col("p2")).alias("u"),
             F.when(lower_first, F.col("p2")).otherwise(F.col("p1")).alias("v"),
         )
-        # exact gate numbers from one tiny job over the checkpointed
-        # degree table: every und row contributes 2 to Σdeg, so
-        # |und| = Σdeg/2 (multigraph count — an upper bound on simple m)
-        _gate = deg.agg(F.count("*").alias("n"), F.sum("deg").alias("sd")).first()
-        n_nodes_m = int(_gate["n"])
-        n_edges_m = int(_gate["sd"] or 0) // 2
-        adj_bytes = n_edges_m * 16 + n_nodes_m * 64
-        gather = F.collect_list if edges_unique else F.collect_set
-        # an adjacency too big to broadcast is the largest object in the
-        # job: build it with the sort-based aggregate.  The frame is
+        # every und row adds 2 to Σdeg, so adj_bytes = 16·m_raw +
+        # 64·n_nodes, already over the limit that chose this regime: the
+        # adjacency is never broadcast, and as the largest object in the
+        # job it is built with the sort-based aggregate.  The frame is
         # made inside the scope — a DataFrame memoizes its physical
         # plan, so the conf must be live when the plan is first made
-        sort_agg = (
-            {}
-            if adj_bytes <= broadcast_limit_bytes
-            else {"spark.sql.execution.useObjectHashAggregateExec": "false"}
-        )
+        gather = F.collect_list if edges_unique else F.collect_set
+        sort_agg = {"spark.sql.execution.useObjectHashAggregateExec": "false"}
         with scoped_conf(spark, sort_agg):
             adj = materialize(
                 oriented.groupBy("u")
@@ -266,6 +259,7 @@ def count_triangles(
             )
         n_nodes = deg.agg(F.count("*").alias("n_nodes"))
         adj_u = F.col("u")
+        broadcast_adj = False
 
     # recover each oriented edge (u→v) WITH u's adjacency attached by
     # exploding the adjacency itself — one join saved vs joining the
@@ -274,7 +268,7 @@ def count_triangles(
         F.col("nbrs").alias("nbrs_u"), F.explode("nbrs").alias("v")
     )
     a_v = adj.select(adj_u.alias("v"), F.col("nbrs").alias("nbrs_v"))
-    if int(adj_bytes) <= broadcast_limit_bytes:
+    if broadcast_adj:
         a_v = F.broadcast(a_v)
     counted = (
         per_edge.join(a_v, "v")  # inner: v without out-edges closes nothing

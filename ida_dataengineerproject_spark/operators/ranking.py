@@ -50,7 +50,6 @@ from operator import and_, or_
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..session import materialize
 
 _N_BUCKETS = 32  # equal-width bins of the bucketed rank
 _LITERAL_GROUPS = 64  # band rows inlined as when-chains, else joined
@@ -367,9 +366,10 @@ def _sketch_band(
       took the join form, made exact_median_percentiles slower
       (1.395 → 1.564 s at sf0.1, 6 → 8 jobs).  No group keys means one
       band row, so plain literals.
-    - more: the band frame is materialized and attached by a null-safe
-      LEFT broadcast join — when-chain width is a per-row compare
-      count, fine at 64 and wrong at 10^6 groups.
+    - more: the collected band rows become a local frame, attached by a
+      null-safe LEFT broadcast join — when-chain width is a per-row
+      compare count, fine at 64 and wrong at 10^6 groups.  Building the
+      frame from the rows already on the driver re-runs no scan.
     Pass 2 (one scan): SPLIT aggregates (r9) — below-band counts ride a
     codegen HashAggregate over all rows; the ``collect_list`` aggregate
     (TypedImperative, so an interpreted ObjectHashAggregate) sees only
@@ -419,9 +419,8 @@ def _sketch_band(
         else:
             snap = {c: F.lit(band_rows[0][c]) for c in snap_cols}
     else:
-        keyed = materialize(bands).select(
-            *[F.col(k).alias(f"__b_{k}") for k in g], *snap_cols
-        )
+        keyed = df.sparkSession.createDataFrame(band_rows, bands.schema)
+        keyed = keyed.select(*[F.col(k).alias(f"__b_{k}") for k in g], *snap_cols)
         live = src.join(
             F.broadcast(keyed), _key_match(g, [F.col(f"__b_{k}") for k in g]),
             "left",

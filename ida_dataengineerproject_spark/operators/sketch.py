@@ -13,9 +13,9 @@ key) mod w — map-side, then ONE aggregate over (row_idx, bucket): the
 shuffle payload is the sketch size, not the data size.  Query: join keys
 against the sketch on (row_idx, bucket), take min over the d counters.
 
-The sketch is itself a DataFrame, so it unions (mergeable: CMS of a
-union = elementwise sum) and persists like any table — the property that
-makes it work across partitions/days/streams.
+The sketch is itself a DataFrame, so it persists like any table, and
+CMS(A ∪ B) is the elementwise counter sum of CMS(A) and CMS(B) — the
+property that makes it work across partitions/days/streams.
 """
 
 from __future__ import annotations
@@ -74,16 +74,6 @@ def cms_estimate(
         probes.join(F.broadcast(sketch), ["row_idx", "bucket"], "left")
         .groupBy(key)
         .agg(F.min(F.coalesce(F.col("cnt"), F.lit(0))).alias("est_count"))
-    )
-
-
-def cms_merge(a: DataFrame, b: DataFrame) -> DataFrame:
-    """CMS(A ∪ B) = elementwise counter sum — the mergeability that lets
-    per-partition/per-day sketches roll up without touching raw data."""
-    return (
-        a.unionAll(b)
-        .groupBy("row_idx", "bucket")
-        .agg(F.sum("cnt").alias("cnt"))
     )
 
 

@@ -12,17 +12,13 @@ map-side combining — salting matters when the partial step can't absorb
 the skew (high-cardinality compound keys, memory-bounded partials,
 sort-based fallback).  The operator exists so pipelines can opt in
 per-aggregation.
-
-`key_skew_profile` / `suggest_salt_buckets` are the measurement half:
-choosing *whether* to salt and with how many buckets is a data question,
-answered with one aggregation pass before picking the physical strategy.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -56,65 +52,3 @@ def salted_sum(
         partial.groupBy(*keys)
         .agg(F.sum("__part").cast("double").alias(out_col))
     )
-
-
-def key_skew_profile(df: DataFrame, key: str, top_k: int = 10) -> DataFrame:
-    """Top-k heaviest keys with global skew statistics.
-
-    Output: (key value, n_rows, share of all rows, skew_ratio = heaviest
-    key / mean rows-per-key, rank).  One shuffle builds the per-key count
-    table (map-side partial aggregation); the global stats row and the
-    top-k are control-plane sized.  The skew_ratio directly estimates the
-    straggler factor an unsalted shuffle on this key would suffer."""
-    counts = df.groupBy(F.col(key).alias("key_value")).agg(
-        F.count("*").alias("n_rows")
-    )
-    stats = counts.agg(
-        F.sum("n_rows").alias("total_rows"),
-        F.count("*").alias("n_keys"),
-        F.max("n_rows").alias("max_rows"),
-    )
-    # top-k via sort+limit → TakeOrderedAndProject (a size-k heap per
-    # partition merged once on the driver, NO global sort of the key
-    # table); the rank window then runs over k rows only
-    w = Window.orderBy(F.col("n_rows").desc(), F.col("key_value"))
-    top = (
-        counts.orderBy(F.col("n_rows").desc(), F.col("key_value"))
-        .limit(top_k)
-        .withColumn("rank", F.row_number().over(w))
-    )
-    return top.join(F.broadcast(stats)).select(
-        "key_value",
-        "n_rows",
-        F.round(F.col("n_rows") / F.col("total_rows"), 6).alias("share"),
-        F.round(
-            F.col("max_rows") / (F.col("total_rows") / F.col("n_keys")), 3
-        ).alias("skew_ratio"),
-        "rank",
-    )
-
-
-def suggest_salt_buckets(
-    df: DataFrame, key: str, target_ratio: float = 2.0
-) -> int:
-    """Recommended salt-bucket count: enough buckets that the heaviest
-    key's per-bucket load drops under ``target_ratio``× the mean key load.
-    Bounded driver-side readout (3 numbers)."""
-    import math
-
-    row = (
-        df.groupBy(key)
-        .agg(F.count("*").alias("n"))
-        .agg(
-            F.max("n").alias("max_n"),
-            F.sum("n").alias("total"),
-            F.count("*").alias("keys"),
-        )
-        .collect()[0]
-    )
-    if not row.keys:  # empty input: nothing to salt
-        return 1
-    ratio = row.max_n / (row.total / row.keys)
-    if ratio <= target_ratio:
-        return 1
-    return math.ceil(ratio / target_ratio)

@@ -24,17 +24,11 @@ def dedup_against(
     new: DataFrame, existing: DataFrame | None, keys: Sequence[str]
 ) -> DataFrame:
     """Drop intra-batch duplicates on ``keys``, then rows already present in
-    ``existing`` (idempotent re-run semantics, etl/etl_ida.py:534)."""
+    ``existing`` (idempotent re-run semantics, etl/etl_ida.py:534).
+    Duplicate keys on the right of a left-anti join do not change its
+    output, so ``existing`` is not deduplicated first: that would only
+    add an aggregate over every existing key."""
     out = new.dropDuplicates(list(keys))
     if existing is not None:
-        out = out.join(existing.select(*keys).distinct(), list(keys), "left_anti")
+        out = out.join(existing.select(*keys), list(keys), "left_anti")
     return out
-
-
-def insert_if_absent(
-    existing: DataFrame, new: DataFrame, keys: Sequence[str]
-) -> DataFrame:
-    """Existing ∪ (new rows whose natural key is absent) — the reference's
-    dimension upsert (etl/etl_ida.py:573-620) as anti-join + union."""
-    missing = dedup_against(new, existing, keys)
-    return existing.unionByName(missing, allowMissingColumns=False)

@@ -13,9 +13,9 @@ ambiguity the reference hit with ODS dynamic typing,
 both writers emit shortest-round-trip representations.
 
 Scale notes: text scans are splittable uncompressed (one task per
-split); the quarantine audit is folded into the
-single aggregate pass (no cache, no double read); production lands text at the ingest
-boundary and converts to parquet immediately (write_parquet_normalized).
+split); the quarantine audit is folded into the single aggregate pass
+(no cache, no double read); production lands text at the ingest
+boundary and converts to parquet immediately.
 """
 
 from __future__ import annotations
@@ -68,9 +68,9 @@ def _summarize(parsed: DataFrame) -> DataFrame:
     group under their event_type, quarantined rows under a synthetic
     '__quarantined__' type (PERMISSIVE may partially parse a corrupt
     row's fields, so every value aggregate is guarded on the corrupt
-    marker).  Single scan, no cache — the earlier split_quarantine
-    version double-read the input and pinned a never-unpersisted cache
-    of the whole table for the session lifetime."""
+    marker).  Single scan, no cache: splitting clean from quarantined
+    rows into two frames would read the input twice, or pin a cache of
+    the whole table."""
     from ..sources.text_formats import CORRUPT_COL
 
     quarantined = F.col(CORRUPT_COL).isNotNull()

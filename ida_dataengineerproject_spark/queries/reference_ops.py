@@ -373,9 +373,7 @@ def q_op38(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = table(spark, sf_dir, "customer")
     o = table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 300000)
     existing = o.select(F.col("o_custkey").alias("c_custkey"))
-    return dedup_against(c, None, ["c_custkey"]).join(
-        existing, "c_custkey", "left_anti"
-    ).select("c_custkey", "c_name")
+    return dedup_against(c, existing, ["c_custkey"]).select("c_custkey", "c_name")
 
 
 # -------------------------------------------------------------------- op39/op40

@@ -104,12 +104,12 @@ def q_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Heavy-hitter profile of events.user_id — same plan shape as
-    operators.skew.key_skew_profile (per-key counts with map-side combine,
-    top-10 via TakeOrderedAndProject, single stats row broadcast back),
-    with share/skew expressed in exact integer ppm / x1000 (`div`) so the
-    oracle compare is bit-exact with no float rounding.  The float-form
-    operator itself is exercised in tests/test_scale_ops.py."""
+    """Heavy-hitter profile of events.user_id: per-key counts with
+    map-side combine, top-10 via TakeOrderedAndProject, single stats row
+    broadcast back, with share/skew expressed in exact integer ppm / x1000
+    (`div`) so the oracle compare is bit-exact with no float rounding.
+    skew_ratio = heaviest key / mean rows-per-key estimates the straggler
+    factor an unsalted shuffle on this key would suffer."""
     from pyspark.sql import Window
 
     ev = table(spark, sf_dir, "events")

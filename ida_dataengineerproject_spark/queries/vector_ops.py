@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.vectors import as_double_array, cosine
 from ..operators.similarity import (
     cosine_topk_bruteforce,
     cosine_topk_ivf,
@@ -21,6 +22,25 @@ from ..sources.tables import table
 
 _N_QUERIES = 5
 _K = 10
+
+
+def _exact_neardup_pairs(emb: DataFrame) -> DataFrame:
+    """(id_a, id_b, cosine) for every pair of ``emb`` rows with
+    id_a < id_b and cosine >= 0.4: the all-pairs ground truth that the
+    bounded exact queries and the LSH recall contract share.  Cosines
+    are rounded to 9 digits before the threshold compare, as the
+    oracles round theirs."""
+    a = emb.select(F.col("vec_id").alias("id_a"), as_double_array("embedding").alias("va"))
+    b = emb.select(F.col("vec_id").alias("id_b"), as_double_array("embedding").alias("vb"))
+    return (
+        a.join(b, F.col("id_a") < F.col("id_b"))
+        .select(
+            "id_a",
+            "id_b",
+            F.round(cosine(F.col("va"), F.col("vb")), 9).alias("cosine"),
+        )
+        .filter(F.col("cosine") >= 0.4)
+    )
 
 
 @register(
@@ -165,19 +185,7 @@ def q_x03c(spark: SparkSession, sf_dir: str) -> DataFrame:
     over vec_id<200 — ground truth for embedding dedup; the LSH bucketing
     above is the scale path."""
     emb = table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 200)
-    from ..functions.vectors import as_double_array, cosine as cos
-
-    a = emb.select(F.col("vec_id").alias("id_a"), as_double_array("embedding").alias("va"))
-    b = emb.select(F.col("vec_id").alias("id_b"), as_double_array("embedding").alias("vb"))
-    return (
-        a.join(b, F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            F.round(cos(F.col("va"), F.col("vb")), 9).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= 0.4)
-    )
+    return _exact_neardup_pairs(emb)
 
 
 def embedding_neardup_lsh_query(
@@ -193,21 +201,13 @@ def embedding_neardup_lsh_query(
     and assert recall >= 0.8 (collision probability at the 0.4 threshold
     is ≈0.94 with 16 tables × 4 planes; higher-cosine pairs approach 1).
     Precision needs no contract — candidates are scored exactly."""
-    from ..functions.vectors import as_double_array, cosine as cos
     from ..operators.similarity import embedding_neardup_pairs_lsh
 
     emb = table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 200)
     approx = embedding_neardup_pairs_lsh(emb, threshold=0.4)
     if not verify:
         return approx
-    a = emb.select(F.col("vec_id").alias("id_a"), as_double_array("embedding").alias("va"))
-    b = emb.select(F.col("vec_id").alias("id_b"), as_double_array("embedding").alias("vb"))
-    exact = (
-        a.join(b, F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine", F.round(cos(F.col("va"), F.col("vb")), 9))
-        .filter(F.col("cosine") >= 0.4)
-        .select("id_a", "id_b")
-    )
+    exact = _exact_neardup_pairs(emb).select("id_a", "id_b")
     n_exact = exact.count()
     n_found = exact.join(
         approx.select("id_a", "id_b"), ["id_a", "id_b"]
@@ -273,18 +273,8 @@ def semantic_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``semantic_dedup_keep_lsh`` below is the full-corpus scale path.
     Cosines are rounded to 9 digits on both engines before the threshold
     compare, so keep-membership is bit-identical."""
-    from ..functions.vectors import as_double_array, cosine as cos
-
     emb = table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 200)
-    a = emb.select(F.col("vec_id").alias("id_a"), as_double_array("embedding").alias("va"))
-    b = emb.select(F.col("vec_id").alias("id_b"), as_double_array("embedding").alias("vb"))
-    pairs = (
-        a.join(b, F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine", F.round(cos(F.col("va"), F.col("vb")), 9))
-        .filter(F.col("cosine") >= 0.4)
-        .select("id_a", "id_b")
-    )
-    losers = _neardup_losers(pairs)
+    losers = _neardup_losers(_exact_neardup_pairs(emb).select("id_a", "id_b"))
     return (
         emb.join(losers, emb.vec_id == losers.loser_id, "left_anti")
         .select("vec_id")
@@ -449,8 +439,6 @@ def q_centroid_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapse to (assigned, a, b) through one groupBy(vec_id) over a
     bounded 8-element sorted array — no corpus-wide window; the closing
     per-cluster aggregate has 8 groups and map-side combines."""
-    from ..functions.vectors import as_double_array, cosine
-
     emb = table(spark, sf_dir, "embeddings")
     cent = emb.filter(F.col("vec_id") < _SIL_K).select(
         F.col("vec_id").alias("cid"), as_double_array("embedding").alias("cv")

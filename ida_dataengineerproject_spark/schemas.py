@@ -1,17 +1,12 @@
-"""Canonical schemas (SURVEY.md §1.3).
+"""Driver testdata table names (TESTDATA.md / FIXTURES.md §3).
 
-Star-schema shapes follow the reference DDL (/root/reference/schema_star.sql:
-19-27, 35-41, 49-55, 61-71, 82-95); testdata shapes follow TESTDATA.md /
-FIXTURES.md §3.  Surrogate keys are deterministic hashes of natural keys
-(xxhash64) instead of the reference's IDENTITY columns — identity sequences
-don't distribute; a stable hash does (SURVEY.md §1.2).
+The star schema is not declared here: ``plans/etl.py`` builds its tables
+(surrogate keys are deterministic xxhash64 hashes of the natural keys
+instead of the reference's IDENTITY columns — identity sequences don't
+distribute; a stable hash does, SURVEY.md §1.2), and xq41
+(``queries/quality_ops.py``) audits the written star against the
+reference DDL (schema_star.sql) at run time.
 """
-
-from __future__ import annotations
-
-from pyspark.sql import types as T
-
-# ---- driver testdata tables (read-only parquet) ---------------------------
 
 TESTDATA_TABLES = [
     "region",
@@ -25,81 +20,3 @@ TESTDATA_TABLES = [
     "documents",
     "embeddings",
 ]
-
-# ---- reference star schema, Spark-typed (schema_star.sql) -----------------
-
-DIM_TEMPO = T.StructType(
-    [
-        T.StructField("tempo_key", T.LongType(), False),
-        T.StructField("ano_mes", T.DateType(), False),
-        T.StructField("ano", T.IntegerType(), False),
-        T.StructField("mes", T.IntegerType(), False),
-        T.StructField("mes_nome", T.StringType(), False),
-        T.StructField("trimestre", T.IntegerType(), False),
-        T.StructField("semestre", T.IntegerType(), False),
-    ]
-)
-
-DIM_GRUPO = T.StructType(
-    [
-        T.StructField("grupo_key", T.LongType(), False),
-        T.StructField("grupo_codigo", T.StringType(), False),
-        T.StructField("grupo_nome", T.StringType(), True),
-        T.StructField("grupo_normalizado", T.StringType(), True),
-        T.StructField("ativo", T.BooleanType(), False),
-    ]
-)
-
-DIM_SERVICO = T.StructType(
-    [
-        T.StructField("servico_key", T.LongType(), False),
-        T.StructField("servico_codigo", T.StringType(), False),
-        T.StructField("servico_nome", T.StringType(), True),
-        T.StructField("servico_descricao", T.StringType(), True),
-        T.StructField("ativo", T.BooleanType(), False),
-    ]
-)
-
-DIM_VARIAVEL = T.StructType(
-    [
-        T.StructField("variavel_key", T.LongType(), False),
-        T.StructField("variavel_codigo", T.StringType(), False),
-        T.StructField("variavel_nome", T.StringType(), True),
-        T.StructField("variavel_descricao", T.StringType(), True),
-        T.StructField("unidade_medida", T.StringType(), True),
-        T.StructField("peso_ida", T.IntegerType(), True),
-        T.StructField("meta_anatel", T.DecimalType(10, 3), True),
-        T.StructField("is_principal", T.BooleanType(), False),
-        T.StructField("ativo", T.BooleanType(), False),
-    ]
-)
-
-FACT_IDA = T.StructType(
-    [
-        T.StructField("fato_key", T.LongType(), False),
-        T.StructField("tempo_key", T.LongType(), False),
-        T.StructField("grupo_key", T.LongType(), False),
-        T.StructField("servico_key", T.LongType(), False),
-        T.StructField("variavel_key", T.LongType(), False),
-        T.StructField("valor", T.DecimalType(15, 6), True),
-        T.StructField("arquivo_origem", T.StringType(), True),
-        T.StructField("linha_origem", T.IntegerType(), True),
-        T.StructField("data_processamento", T.TimestampType(), True),
-        T.StructField("hash_registro", T.StringType(), False),
-    ]
-)
-
-# Normalized record emitted by the transform layer (the reference's
-# DataRecord dataclass, etl/etl_ida.py:103-122).
-FACT_RECORD = T.StructType(
-    [
-        T.StructField("ano_mes", T.DateType(), False),
-        T.StructField("grupo_economico", T.StringType(), False),
-        T.StructField("servico", T.StringType(), False),
-        T.StructField("variavel", T.StringType(), False),
-        T.StructField("valor", T.DoubleType(), True),
-        T.StructField("arquivo_origem", T.StringType(), True),
-        T.StructField("linha_origem", T.IntegerType(), True),
-        T.StructField("hash_registro", T.StringType(), False),
-    ]
-)

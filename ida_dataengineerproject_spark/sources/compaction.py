@@ -11,14 +11,14 @@ target-size files:
   statistics, no data scan and no count job);
 - the shuffle is round-robin `repartition(n)` (even file sizes, the whole
   point of compaction); `maxRecordsPerFile` caps any residual overage;
-- reading-then-writing a directory is one job: scan → exchange → write.
+- a compacting write is one job: scan → exchange → write.
 """
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 # Above this the "estimate" is not a measurement: plans without file
@@ -80,22 +80,3 @@ def write_compacted(
         writer = writer.option("maxRecordsPerFile", max_records_per_file)
     writer.parquet(path)
     return n
-
-
-def compact_directory(
-    spark: SparkSession,
-    src: str,
-    dst: str,
-    target_file_mb: int = 128,
-) -> dict[str, int]:
-    """Rewrite a parquet directory with target-size files; returns
-    before/after file counts (bounded driver-side listing)."""
-    df = spark.read.parquet(src)
-    files_before = len(df.inputFiles())
-    n = write_compacted(df, dst, target_file_mb=target_file_mb)
-    files_after = len(spark.read.parquet(dst).inputFiles())
-    return {
-        "files_before": files_before,
-        "files_after": files_after,
-        "partitions_used": n,
-    }

@@ -14,7 +14,6 @@ from __future__ import annotations
 import re
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
 
 _MONTH_PAT = re.compile(r"(20[0-3][0-9])-(0[1-9]|1[0-2])")
 
@@ -59,8 +58,3 @@ def normalize_wide(
     out["ARQUIVO_ORIGEM"] = arquivo_origem
     out["linha_origem"] = range(1, len(out) + 1)
     return out
-
-
-def wide_to_spark(spark: SparkSession, wide: pd.DataFrame) -> DataFrame:
-    """Driver-side pandas → distributed DataFrame (Arrow path)."""
-    return spark.createDataFrame(wide)

@@ -13,13 +13,18 @@ Design rules for scale:
   audit rows, never job failures.
 - CSV/JSON are splittable only when uncompressed (or bzip2); gzipped
   files serialize to one task each — convert to parquet at the ingest
-  boundary (write_parquet_normalized) and query columnar from then on.
+  boundary and query columnar from then on.
+- Split clean from quarantined rows inside the consuming plan (a filter
+  or a conditional aggregate on the corrupt marker, as
+  ``queries/io_ops.py`` does): one scan, no cache.  Spark refuses a plan
+  that reads ONLY the corrupt-record column of a raw text scan
+  (QUERY_ONLY_CORRUPT_RECORD_COLUMN), so the split must read a data
+  column too.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 CORRUPT_COL = "_corrupt_record"
@@ -68,21 +73,6 @@ def read_jsonl(
     )
 
 
-def split_quarantine(df: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(clean_rows, quarantined_rows) — the audit-trail split the
-    reference keeps as stats['erros'] (etl/etl_ida.py:809-812).
-
-    The parsed frame is cached: Spark refuses plans that read ONLY the
-    internal corrupt-record column from a raw text scan
-    (QUERY_ONLY_CORRUPT_RECORD_COLUMN), and the split reads the input
-    twice anyway — cache once, serve both sides, unpersist after the
-    ingest materializes."""
-    df = df.cache()
-    clean = df.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
-    bad = df.filter(F.col(CORRUPT_COL).isNotNull())
-    return clean, bad
-
-
 def write_csv(df: DataFrame, path: str, header: bool = True) -> None:
     """CSV sink (interchange/export only — never the analytic store)."""
     df.write.mode("overwrite").option("header", header).csv(path)
@@ -90,29 +80,3 @@ def write_csv(df: DataFrame, path: str, header: bool = True) -> None:
 
 def write_jsonl(df: DataFrame, path: str) -> None:
     df.write.mode("overwrite").json(path)
-
-
-def write_parquet_normalized(
-    df: DataFrame, path: str, partition_by: list[str] | None = None
-) -> None:
-    """The ingest-boundary conversion: text format → columnar store.
-    Everything downstream (pushdown, pruning, statistics) depends on
-    landing here before analytics run."""
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC scan (Spark-native reader; columnar like parquet with its own
-    stripe-level statistics — predicate pushdown and column pruning work
-    the same way, and the format is splittable).  ORC matters for format
-    breadth because Hive-era lakes hold petabytes of it; reading in place
-    beats converting 100 TB first."""
-    return spark.read.orc(path)
-
-
-def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """ORC sink (zlib default codec; stripe statistics written per file)."""
-    df.write.mode(mode).orc(path)

@@ -208,7 +208,6 @@ def test_cms_bounds(spark):
         WIDTH,
         cms_build,
         cms_estimate,
-        cms_merge,
     )
     from ida_dataengineerproject_spark.sources.tables import table
 
@@ -226,15 +225,6 @@ def test_cms_bounds(spark):
     for uid, true_n in exact.items():
         assert est[uid] >= true_n, (uid, est[uid], true_n)
         assert est[uid] <= true_n + eps_n, (uid, est[uid], true_n, eps_n)
-
-    # mergeability: sketch(A) + sketch(B) == sketch(A union B) counters
-    a = ev.filter(F.col("event_id") % 2 == 0)
-    b = ev.filter(F.col("event_id") % 2 == 1)
-    merged = cms_merge(cms_build(a, "user_id"), cms_build(b, "user_id"))
-    whole = cms_build(ev, "user_id")
-    m = {(r.row_idx, r.bucket): r.cnt for r in merged.collect()}
-    w = {(r.row_idx, r.bucket): r.cnt for r in whole.collect()}
-    assert m == w
 
 
 def test_embedding_neardup_lsh_scale_path(spark, duck):

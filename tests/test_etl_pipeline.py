@@ -158,20 +158,29 @@ def test_fact_rows_join_exactly_one_row_of_each_dim(spark, wide_null_servico):
 
 
 def _node_counts(df) -> dict[str, int]:
-    """Window/Expand/BroadcastExchange nodes in the final adaptive plan."""
+    """Window/Expand/BroadcastExchange nodes and aggregates of any kind
+    (hash, object-hash, sort) in the final adaptive plan."""
     df.collect()  # finalize the adaptive plan
     txt = df._jdf.queryExecution().executedPlan().toString()
     final = txt.split("== Initial Plan ==")[0]
     found = re.findall(
-        r"(?m)^[\s:|+-]*(?:\*\(\d+\) )?(Window|Expand|BroadcastExchange)\b", final
+        r"(?m)^[\s:|+-]*(?:\*\(\d+\) )?"
+        r"(Window|Expand|BroadcastExchange|(?:Hash|ObjectHash|Sort)Aggregate)\b",
+        final,
     )
-    return {k: found.count(k) for k in ("Window", "Expand", "BroadcastExchange")}
+    found = ["Aggregate" if k.endswith("Aggregate") else k for k in found]
+    return {
+        k: found.count(k)
+        for k in ("Window", "Expand", "BroadcastExchange", "Aggregate")
+    }
 
 
 def test_fact_plan_derives_records_once(spark, wide, tmp_path):
     """The fact plan derives the record stream once (one ffill Window,
     one unpivot Expand) and joins no dim, with and without an existing
-    fact.  Size-based broadcasts are off inside the check: the anti join
+    fact; the anti join against the existing fact adds no aggregate
+    (duplicate keys on its right side cannot change its output).
+    Size-based broadcasts are off inside the check: the anti join
     against a small existing fact may broadcast, so only a hinted join
     would still show a BroadcastExchange."""
     from ida_dataengineerproject_spark.plans.etl import ingest, write_star
@@ -181,8 +190,9 @@ def test_fact_plan_derives_records_once(spark, wide, tmp_path):
     existing = spark.read.parquet(str(tmp_path / "fact_ida"))
     once = {"Window": 1, "Expand": 1, "BroadcastExchange": 0}
     with scoped_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
-        assert _node_counts(ingest(spark, wide)["fact_ida"]) == once
-        assert _node_counts(ingest(spark, wide, existing_fact=existing)["fact_ida"]) == once
+        plain = _node_counts(ingest(spark, wide)["fact_ida"])
+        assert {k: plain[k] for k in once} == once
+        assert _node_counts(ingest(spark, wide, existing_fact=existing)["fact_ida"]) == plain
 
 
 def test_write_star_jobs_carry_caller_job_group(spark, wide, tmp_path):

@@ -34,27 +34,6 @@ def test_byte_features_match_text(spark, docs_with_payload):
     assert bad == 0  # ASCII corpus: bytes == chars
 
 
-def test_decode_stub_schema_and_fake(spark, docs_with_payload):
-    from ida_dataengineerproject_spark.multimodal.binary_ops import (
-        decode_image_stub,
-    )
-
-    out = decode_image_stub(docs_with_payload)
-    assert out.columns == ["doc_id", "width", "height", "n_channels", "mean_pixel"]
-    row = out.orderBy("doc_id").first()
-    assert row.n_channels == 3 and row.mean_pixel > 0
-
-
-def test_decode_real_path_raises(spark, docs_with_payload):
-    from ida_dataengineerproject_spark.multimodal.binary_ops import (
-        decode_image_stub,
-    )
-
-    out = decode_image_stub(docs_with_payload, real_decode=True)
-    with pytest.raises(Exception, match="NotImplementedError|PIL"):
-        out.collect()
-
-
 def test_bmp_encode_decode_roundtrip():
     from ida_dataengineerproject_spark.multimodal.binary_ops import (
         _bmp_decode,

@@ -15,7 +15,6 @@ def star_dir(spark, tmp_path_factory):
     from ida_dataengineerproject_spark.plans.etl import ingest, write_star
     from ida_dataengineerproject_spark.sources.converters import (
         normalize_wide,
-        wide_to_spark,
     )
 
     # two years of data → two fact partitions
@@ -27,7 +26,7 @@ def star_dir(spark, tmp_path_factory):
             "2018-01": ["3", "4"],
         }
     )
-    wide = wide_to_spark(spark, normalize_wide(sheet, "SMP", "f.ods"))
+    wide = spark.createDataFrame(normalize_wide(sheet, "SMP", "f.ods"))
     base = str(tmp_path_factory.mktemp("star"))
     write_star(ingest(spark, wide), base)
     return base

@@ -99,3 +99,73 @@ def test_allow_list_is_not_stale():
     reached = _reached(known)
     stale = sorted(m for m in ALLOWED if m not in known or m in reached)
     assert not stale, "stale allow-list entries: " + ", ".join(stale)
+
+
+# kept although nothing reached reads them; one reason each
+ALLOWED_DEFS = {
+    f"{PKG}.sources.manifest.fetch_catalog": "reference op01: the resource "
+    "catalog download (etl_ida.py:653-657); only tests run it, offline",
+}
+
+
+def _definitions(path: Path) -> list[str]:
+    """Top-level undecorated ``def``/``class`` names and module-level
+    assigned names of one file; dunder names are Python's own."""
+    names = []
+    for node in ast.parse(path.read_text(), str(path)).body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                             ast.ClassDef)):
+            if not node.decorator_list:
+                names.append(node.name)
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [
+                node.target]
+            for target in targets:
+                names += [n.id for n in ast.walk(target)
+                          if isinstance(n, ast.Name)]
+    return [n for n in names if not (n.startswith("__") and n.endswith("__"))]
+
+
+def _loaded(path: Path) -> set[str]:
+    """Every name one file reads: a ``Name`` in load context, an
+    attribute, or an import alias; a package ``__init__``'s re-exports
+    read nothing."""
+    reexport = path.name == "__init__.py"
+    found = set()
+    for node in ast.walk(ast.parse(path.read_text(), str(path))):
+        if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+            found.add(node.id)
+        elif isinstance(node, ast.Attribute):
+            found.add(node.attr)
+        elif isinstance(node, ast.ImportFrom) and not reexport:
+            found |= {alias.name for alias in node.names}
+    return found
+
+
+def _unread_definitions(known: dict[str, Path]) -> set[str]:
+    """``module.name`` of every definition in a reached module whose name
+    no file of the package or the entry points loads.  A matching name
+    anywhere counts, so the check may miss a dead definition but never
+    flags a used one."""
+    loaded = set().union(*(_loaded(p) for p in [*known.values(), *_roots()]))
+    return {
+        f"{mod}.{name}"
+        for mod in _reached(known)
+        for name in _definitions(known[mod])
+        if name not in loaded
+    }
+
+
+def test_every_reached_definition_is_read_or_allowed():
+    unread = _unread_definitions(_package_modules())
+    stray = sorted(unread - ALLOWED_DEFS.keys())
+    assert not stray, (
+        "package definitions nothing outside tests reads (call them, "
+        "delete them, or allow-list them with a reason): " + ", ".join(stray)
+    )
+
+
+def test_definition_allow_list_is_not_stale():
+    """A definition allow-list entry must still be unread."""
+    stale = sorted(ALLOWED_DEFS.keys() - _unread_definitions(_package_modules()))
+    assert not stale, "stale definition allow-list entries: " + ", ".join(stale)
